@@ -107,14 +107,138 @@ def brute_force_topk(
     )
 
 
-#: Driver-side budget for the collected query matrix in
-#: ``brute_force_topk_arrow`` (rows * dim float64 cells; 8M = 64 MB).
-#: The kernel's contract is a |Q|-BOUNDED query set — corpus-as-queries
-#: callers (graph builds) must go through ``knn_graph_arrow``'s blocked
-#: path or the banded-LSH build (``knn_graph_lsh`` / s10b), never raise
-#: this blindly.  The loud guard is the linalg overflow-guard convention:
-#: an unbounded queries.collect() is a silent driver OOM at 100 TB.
+#: Driver-side budget for the query matrix every map-side top-k kernel
+#: collects (rows * dim float64 cells; 8M = 64 MB).  The kernels'
+#: contract is a |Q|-BOUNDED query set — corpus-as-queries callers
+#: (graph builds) must go through ``knn_graph``'s blocked path or the
+#: banded-LSH build (``knn_graph_lsh`` / s10b), never raise this
+#: blindly.  The loud guard is the linalg overflow-guard convention: an
+#: unbounded queries.collect() is a silent driver OOM at 100 TB.
 _MAX_QUERY_CELLS = 8_000_000
+
+
+def _map_side_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    make_scorer,
+    score_col: str,
+    round_dp: int | None,
+    query_id: str,
+    corpus_id: str,
+    query_vec: str,
+    corpus_vec: str,
+    max_query_cells: int | None = None,
+) -> DataFrame:
+    """The one physical plan of every Arrow search kernel: local top-k
+    per corpus batch, then a global merge (REPOSE's distributed top-k).
+    The query matrix (small by construction) is collected once and
+    closed over by a ``mapInPandas`` kernel that scores each corpus
+    Arrow batch against ALL queries and emits only each query's
+    within-batch top-k; the final window then ranks |batches| * |Q| * k
+    candidate rows instead of |Q| * N scored pairs — the one exchange is
+    the window's hash partitioning on ``query_id``.
+
+    ``make_scorer(q_mat)`` receives the (|Q|, dim) float64 query matrix
+    and returns ``score(c_mat)``, which maps a (batch, dim) float64
+    corpus matrix to a (|Q|, batch) float64 score matrix, NaN where the
+    pair is not a candidate.  Two ranking contracts, both with ties to
+    the lowest corpus id:
+
+    - ``round_dp`` set: a similarity, ranked DESCENDING on the value
+      rounded to ``round_dp`` (s1's contract, so 1-ulp summation-order
+      noise cannot flip ranks), output as a rounded double;
+    - ``round_dp=None``: an exact integer distance (exact in float64
+      below 2^53), ranked ASCENDING, output as a long.
+
+    The query collect is BUDGETED: the driver never materializes more
+    than ``max_query_cells`` (default ``_MAX_QUERY_CELLS``) float64
+    cells (+1 probe row).  A query set over budget raises loudly with
+    the remediation instead of OOMing the driver.  Null query and corpus
+    vectors can never score and are dropped up front."""
+    if max_query_cells is None:
+        max_query_cells = _MAX_QUERY_CELLS
+    similarity = round_dp is not None
+    out_schema = (
+        f"{query_id} {dict(queries.dtypes)[query_id]}, "
+        f"{corpus_id} {dict(corpus.dtypes)[corpus_id]}, "
+        f"{score_col} {'double' if similarity else 'long'}"
+    )
+    # Bounded collect: peek the dimension (limit-1 job), cap the row
+    # fetch at budget//dim + 1 so the over-budget case collects ONE row
+    # past the cap — never the whole query set — before raising.  Every
+    # collected row carries ~dim cells, so a silently limit-clipped
+    # query set always trips the budget.
+    valid = queries.select(query_id, query_vec).where(F.col(query_vec).isNotNull())
+    dim_row = valid.select(F.size(query_vec).alias("__d")).first()
+    dim = int(dim_row["__d"]) if dim_row is not None else 0
+    row_cap = max_query_cells // max(dim, 1) + 1
+    q_rows = valid.limit(row_cap + 1).collect()
+    if sum(len(r[1]) for r in q_rows) > max_query_cells:
+        raise ValueError(
+            f"query matrix exceeds the driver-side budget ({max_query_cells} "
+            f"float64 cells; dim={dim}, >{row_cap} rows). Map-side top-k "
+            f"kernels collect the query side and are only for |Q|-bounded "
+            f"query sets. For corpus-as-queries graph builds use knn_graph "
+            f"(blocked query side) or knn_graph_lsh (banded self-join, no "
+            f"collect)."
+        )
+    if not q_rows:
+        return corpus.sparkSession.createDataFrame([], out_schema + ", rnk long")
+    q_ids = np.array([r[0] for r in q_rows])
+    score = make_scorer(
+        np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
+    )
+
+    def kernel(batches) -> "pd.DataFrame":
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            c_ids = pdf[corpus_id].to_numpy()
+            s = score(
+                np.array([np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]])
+            )
+            # Candidate selection MUST honor the final ranking contract:
+            # selecting on unrounded sims can drop the smaller-id member
+            # of a rounded tie that the window would rank.  np.round is
+            # half-even vs Spark's HALF_UP — they differ only on exact
+            # .5-ulp boundaries, measure-zero for 64-dim double cosines.
+            key = -np.round(s, round_dp) if similarity else s
+            key = np.where(np.isnan(key), np.inf, key)
+            id_rank = np.argsort(np.argsort(c_ids))  # ordinal id rank (any id type)
+            id_keys = np.broadcast_to(id_rank, key.shape)
+            top = np.lexsort((id_keys, key), axis=1)[:, :k]
+            qi = np.repeat(np.arange(len(q_ids)), top.shape[1])
+            ci = top.ravel()
+            vals = s[qi, ci]
+            ok = ~np.isnan(vals)
+            yield pd.DataFrame(
+                {
+                    query_id: q_ids[qi[ok]],
+                    corpus_id: c_ids[ci[ok]],
+                    score_col: vals[ok] if similarity else vals[ok].astype(np.int64),
+                }
+            )
+
+    # NOT spread (round-12 A/B, guide §4.1): the kernel's per-row cost is
+    # a vectorized matmul slice — tiny — so splitting the 1-2 partition
+    # local scan into 32 Python tasks pays 32x the worker/Arrow per-task
+    # overhead for negligible CPU gain (s30 interleaved A/B: 3.46s
+    # no-spread vs 4.19s spread best-of-4; every round no-spread won).
+    # On real multi-split tables the input is already wide.
+    src = corpus.select(corpus_id, corpus_vec).where(F.col(corpus_vec).isNotNull())
+    cand = src.mapInPandas(kernel, out_schema)
+    if similarity:
+        cand = cand.select(
+            query_id, corpus_id, F.round(score_col, round_dp).alias(score_col)
+        )
+        by_score = F.desc(score_col)
+    else:
+        by_score = F.col(score_col).asc()
+    w = Window.partitionBy(query_id).orderBy(by_score, F.col(corpus_id).asc())
+    return cand.withColumn("rnk", F.row_number().over(w).cast("long")).where(
+        F.col("rnk") <= k
+    )
 
 
 def brute_force_topk_arrow(
@@ -128,114 +252,27 @@ def brute_force_topk_arrow(
     round_dp: int = 4,
     max_query_cells: int = _MAX_QUERY_CELLS,
 ) -> DataFrame:
-    """Exact cosine top-k via an Arrow kernel with MAP-SIDE top-k.
+    """Exact cosine top-k via the Arrow map-side top-k kernel
+    (``_map_side_topk``): one float64 matmul scores each corpus batch
+    against ALL queries.  Same result as ``brute_force_topk`` (pytest
+    pins equality); at 100 TB the shuffle shrinks by ~N/(batches*k),
+    the difference between a terabyte-scale and a megabyte-scale
+    exchange.  ``max_query_cells`` overrides the driver-side query
+    budget for a query set that is genuinely this large."""
 
-    Same result as ``brute_force_topk`` (pytest pins equality); different
-    physical plan: the query matrix (small by construction) is collected
-    once and closed over by a ``mapInPandas`` kernel that scores each
-    corpus Arrow batch against ALL queries in one matmul and emits only
-    each query's within-batch top-k. The final window then ranks
-    |batches| * |Q| * k candidate rows instead of |Q| * N scored pairs —
-    at 100 TB the shuffle shrinks by ~N/(batches*k), which is the
-    difference between a terabyte-scale and a megabyte-scale exchange.
-    Scoring is float64 numpy; ranks are taken on the ROUNDED similarity
-    (same contract as s1) so 1-ulp summation-order noise cannot flip them.
+    def make_scorer(q_mat: np.ndarray):
+        q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
 
-    The query-matrix collect is BUDGETED: the driver never materializes
-    more than ``max_query_cells`` float64 cells (+1 probe row).  A query
-    set over budget raises loudly with the remediation instead of OOMing
-    the driver — the failure mode VERDICT r8 flagged for corpus-as-queries
-    graph builds at 100 TB.
-    """
-    import pandas as pd
-
-    id_type = dict(queries.dtypes)[query_id]
-    cid_type = dict(corpus.dtypes)[corpus_id]
-    # Bounded collect: peek the dimension (limit-1 job), cap the row
-    # fetch at budget//dim + 1 so the over-budget case collects ONE row
-    # past the cap — never the whole query set — before raising.
-    dim_row = (
-        queries.select(F.size(query_vec).alias("__d"))
-        .where(F.col(query_vec).isNotNull())
-        .first()
-    )
-    dim = int(dim_row["__d"]) if dim_row is not None else 0
-    row_cap = max_query_cells // max(dim, 1) + 1
-    # Null query vectors can never score (cos_sim null is filtered), so
-    # dropping them pre-collect is bit-equal AND makes the truncation
-    # check sound: every collected row carries ~dim cells, so a silently
-    # limit-clipped query set always trips the budget.
-    q_rows = (
-        queries.select(query_id, query_vec)
-        .where(F.col(query_vec).isNotNull())
-        .limit(row_cap + 1)
-        .collect()
-    )
-    if sum(len(r[1]) for r in q_rows if r[1] is not None) > max_query_cells:
-        raise ValueError(
-            f"brute_force_topk_arrow: query matrix exceeds the driver-side "
-            f"budget ({max_query_cells} float64 cells; dim={dim}, >{row_cap} "
-            f"rows). This kernel collects the query side and is only for "
-            f"|Q|-bounded query sets. For corpus-as-queries graph builds use "
-            f"knn_graph_arrow (blocked query side) or knn_graph_lsh (banded "
-            f"self-join, no collect); raise max_query_cells only if the "
-            f"query set is genuinely this large and the driver can hold it."
-        )
-    if not q_rows:
-        schema = f"{query_id} {id_type}, {corpus_id} {cid_type}, cos_sim double, rnk long"
-        return corpus.sparkSession.createDataFrame([], schema)
-    q_ids = [r[0] for r in q_rows]
-    q_mat = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-
-    out_schema = f"{query_id} {id_type}, {corpus_id} {cid_type}, cos_sim double"
-
-    def kernel(batches) -> "pd.DataFrame":
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf[corpus_id].to_numpy()
-            c_mat = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]]
-            )
-            c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-            denom = np.outer(c_norm, q_norm)
+        def score(c_mat: np.ndarray) -> np.ndarray:
+            denom = np.outer(np.sqrt((c_mat * c_mat).sum(axis=1)), q_norm)
             with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom > 0, (c_mat @ q_mat.T) / denom, np.nan)
-            # Candidate selection MUST honor the final ranking contract
-            # (rounded sim desc, corpus id asc): selecting on unrounded
-            # sims can drop the smaller-id member of a rounded tie that
-            # the window would rank. np.round is half-even vs Spark's
-            # HALF_UP — they differ only on exact .5-ulp boundaries,
-            # measure-zero for 64-dim double cosines.
-            sims_r = np.round(np.nan_to_num(sims, nan=-2.0), round_dp)
-            kk = min(k, len(c_ids))
-            id_rank = np.argsort(np.argsort(c_ids))  # ordinal id rank (any id type)
-            id_keys = np.broadcast_to(id_rank, (len(q_ids), len(c_ids)))
-            order = np.lexsort((id_keys, -sims_r.T), axis=1)  # sim desc, id asc
-            rows = []
-            for qi in range(len(q_ids)):
-                for ci in order[qi, :kk]:
-                    s = sims[ci, qi]
-                    if not np.isnan(s):
-                        rows.append((q_ids[qi], c_ids[ci], float(s)))
-            yield pd.DataFrame(rows, columns=[query_id, corpus_id, "cos_sim"])
+                return np.where(denom > 0, (c_mat @ q_mat.T) / denom, np.nan).T
 
-    # NOT spread (round-12 A/B, guide §4.1): the kernel's per-row cost is
-    # a vectorized matmul slice — tiny — so splitting the 1-2 partition
-    # local scan into 32 Python tasks pays 32x the worker/Arrow per-task
-    # overhead for negligible CPU gain (s30 interleaved A/B: 3.46s
-    # no-spread vs 4.19s spread best-of-4; every round no-spread won).
-    # On real multi-split tables the input is already wide.
-    src = corpus.select(corpus_id, corpus_vec).where(F.col(corpus_vec).isNotNull())
-    cand = src.mapInPandas(kernel, out_schema)
-    scored = cand.select(
-        query_id, corpus_id, F.round("cos_sim", round_dp).alias("cos_sim")
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col(corpus_id).asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
+        return score
+
+    return _map_side_topk(
+        queries, corpus, k, make_scorer, "cos_sim", round_dp,
+        query_id, corpus_id, query_vec, corpus_vec, max_query_cells,
     )
 
 
@@ -738,6 +775,61 @@ def _quantized_cell_structs(
     )
 
 
+def _quantize(mat: np.ndarray, quantize: int) -> np.ndarray:
+    """numpy ``quantized_vec``: floor(x*10^q + 0.5) as exact int64."""
+    return np.floor(mat * float(10**quantize) + 0.5).astype(np.int64)
+
+
+def _modular_centroids(
+    corpus: DataFrame, nlist: int, quantize: int, vec_col: str, id_col: str
+) -> np.ndarray:
+    """The ``modular_representatives`` table collected (control plane:
+    nlist x dim) and quantized; row i is the i-th lowest cell id."""
+    rows = modular_representatives(
+        corpus, nlist=nlist, vec_col=vec_col, id_col=id_col
+    ).collect()
+    return _quantize(
+        np.array(
+            [
+                np.asarray(r["centroid"], dtype=np.float64)
+                for r in sorted(rows, key=lambda r: r["cell"])
+            ]
+        ),
+        quantize,
+    )
+
+
+def _sq_dists(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Exact int64 squared L2 distances (rows of x) x (rows of cents);
+    ``argmin(axis=1)`` takes the first occurrence = the lowest cell,
+    bit-identical to the SQL (d2q, cell) tie-break."""
+    return (
+        (x * x).sum(axis=1, keepdims=True)
+        + (cents * cents).sum(axis=1)
+        - 2 * (x @ cents.T)
+    )
+
+
+def _probe_mask(qq: np.ndarray, cents: np.ndarray, nprobe: int) -> np.ndarray:
+    """(|Q|, cells) mask of each query's ``nprobe`` nearest cells, ties
+    to the lowest cell (stable argsort over (d2, cell))."""
+    idx = np.argsort(_sq_dists(qq, cents), axis=1, kind="stable")[:, :nprobe]
+    mask = np.zeros((len(qq), len(cents)), dtype=bool)
+    np.put_along_axis(mask, idx, True, axis=1)
+    return mask
+
+
+def _pq_dists(xs: np.ndarray, cb: np.ndarray, cb_sq: np.ndarray) -> np.ndarray:
+    """(..., m, dsub) int64 slices x (m, ksub, dsub) codebook ->
+    (..., m, ksub) exact squared distances to every codeword.  Integer
+    headroom: < 2^44 per slice distance, < 2^47 per m-term ADC sum."""
+    return (
+        (xs * xs).sum(axis=-1)[..., None]
+        + cb_sq
+        - 2 * np.einsum("...jd,jcd->...jc", xs, cb)
+    )
+
+
 def ivf_deterministic_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -753,214 +845,46 @@ def ivf_deterministic_topk(
     candidate_filter: Column | None = None,
 ) -> DataFrame:
     """END-TO-END deterministic IVF search — the complete s2b/s2c search
-    path with every stage engine-exact, hence a FULL DuckDB oracle (the
-    upgrade past VERDICT r6 #8's component oracles: not just candidate
-    generation, the whole ANN query is value-checked).
-
-    ``candidate_filter`` (a predicate over corpus columns) enables
-    FILTERED vector search with INDEX IDENTITY preserved: centroids and
-    per-vector cell assignments are those of the full corpus (each
-    row's assignment depends only on its own vector and the literal
-    centroids, so pre-filtering rows cannot shift anyone's cell), and
-    the predicate only restricts which assigned rows are scored — the
-    post-filter semantics production systems want, as opposed to
-    rebuilding a per-filter index.
+    path with every stage engine-exact, hence a FULL DuckDB oracle (not
+    just candidate generation, the whole ANN query is value-checked).
 
     Coarse quantizer = the modular-representative centroid table (the
-    trained-KMeans variants swap the table, reuse the geometry);
-    assignment/probing = integer-exact argmin folded INLINE in the scan
-    projection (zero shuffles, zero joins before scoring — the literal
-    centroid array is the broadcast, same as FAISS shipping the coarse
-    quantizer to every searcher); ranking = exact cosine within probed
-    cells only, s1's rounded-rank + id tie-break contract.
-
-    Scale shape: corpus scanned once, each vector scored against only
-    the (broadcast, |Q| x nprobe) probe rows whose cell matches —
-    ~nprobe/nlist of the all-pairs work, and the one real exchange is
-    the per-query top-k window over scored candidates (WindowGroupLimit
-    bounds it map-side).  In the materialized layout the cell column is
-    the partition key and this same probe prunes partitions (s2c)."""
-    spark = corpus.sparkSession
-    cent_rows = modular_representatives(
-        corpus, nlist=nlist, vec_col=corpus_vec, id_col=corpus_id
-    ).collect()  # control-plane: nlist x dim, the coarse-quantizer model
-
-    cells = _quantized_cell_structs(
-        _as_double(F.col(corpus_vec)), cent_rows, quantize
-    )
-    # filter AFTER cent_rows (full-corpus index identity); a row's
-    # assignment depends only on its own vector, so dropping other
-    # rows cannot shift anyone's cell
-    base = (
-        corpus.where(candidate_filter)
-        if candidate_filter is not None
-        else corpus
-    )
-    c = base.select(
-        F.col(corpus_id),
-        _as_double(F.col(corpus_vec)).alias("__v"),
-        F.array_min(cells)["cell"].alias("cell"),
-    ).withColumn("__n", l2_norm(F.col("__v")))
-    # Persist the assigned projection: without the barrier, Catalyst
-    # collapses it INTO the scoring join and re-evaluates the argmin +
-    # norm per joined PAIR instead of per corpus row (measured 3x the
-    # whole query).  At scale this projection is what an IVF index
-    # materializes anyway (s2c's cell-partitioned layout).
-    from martech_pipelines_spark import caching
-
-    c = caching.register(c.persist())
-
-    qcells = _quantized_cell_structs(
-        _as_double(F.col(query_vec)), cent_rows, quantize
-    )
-    qrows = queries.select(
-        F.col(query_id).alias("__qid"),
-        _as_double(F.col(query_vec)).alias("__qv"),
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(qcells), 1, nprobe), lambda s: s["cell"]
-            )
-        ).alias("cell"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-
-    denom = F.col("__qn") * F.col("__n")
-    scored = F.broadcast(qrows).join(c, "cell").select(
-        F.col("__qid").alias(query_id),
-        F.col(corpus_id),
-        F.round(
-            F.when(denom > 0, dot(F.col("__qv"), F.col("__v")) / denom),
-            round_dp,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc("cos_sim"), F.col(corpus_id).asc()
-    )
-    return (
-        scored.where(F.col("cos_sim").isNotNull())
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-    )
-
-
-def ivf_deterministic_topk_arrow(
-    queries: DataFrame,
-    corpus: DataFrame,
-    nlist: int = 16,
-    nprobe: int = 4,
-    k: int = 5,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec: str = "embedding",
-    corpus_vec: str = "embedding",
-    quantize: int = 6,
-    round_dp: int = 4,
-) -> DataFrame:
-    """s2g's SCALE twin (the s1/s1b pattern applied to IVF): identical
-    result to ``ivf_deterministic_topk`` — SHARES its oracle — through
-    the Arrow map-side-top-k kernel.  Cell assignment runs as an int64
-    numpy argmin per corpus batch (bit-identical to the SQL kernels:
-    integer distances, first-occurrence argmin = lowest cell), the
+    trained-KMeans variants swap the table, reuse the geometry).  In the
+    map-side top-k kernel (``_map_side_topk``) each corpus batch gets
+    its cells by an int64 numpy argmin (integer distances, lowest-cell
+    ties — bit-identical to ``quantized_cell_assignments``), the
     per-query probe masks non-probed cells before one scoring matmul,
-    and each batch emits only its top-k per query — the exchange is
-    batches * |Q| * k rows and the per-pair cost is a matmul lane, not
-    an interpreted HOF fold (~50x at sf1).  The one collect is the
-    query matrix, small by construction (same contract as s1b)."""
-    import pandas as pd
+    and ranking is exact cosine under s1's rounded-rank + id tie-break
+    contract.  The per-pair cost is a matmul lane, ~nprobe/nlist of the
+    pairs are candidates, and the one exchange is batches*|Q|*k rows.
 
-    id_type = dict(queries.dtypes)[query_id]
-    cid_type = dict(corpus.dtypes)[corpus_id]
-    cent_rows = modular_representatives(
-        corpus, nlist=nlist, vec_col=corpus_vec, id_col=corpus_id
-    ).collect()
-    scale = float(10**quantize)
-    C = np.array(
-        [
-            np.floor(
-                np.asarray(r["centroid"], dtype=np.float64) * scale + 0.5
-            ).astype(np.int64)
-            for r in sorted(cent_rows, key=lambda r: r["cell"])
-        ]
-    )
-    cells_of = sorted(int(r["cell"]) for r in cent_rows)
+    ``candidate_filter`` (a predicate over corpus columns) enables
+    FILTERED vector search with INDEX IDENTITY preserved: centroids come
+    from the full corpus and each row's cell depends only on its own
+    vector and the centroids, so dropping rows before the kernel cannot
+    shift anyone's cell — the post-filter semantics production systems
+    want, as opposed to rebuilding a per-filter index."""
+    cents = _modular_centroids(corpus, nlist, quantize, corpus_vec, corpus_id)
 
-    def assign(mat_q: np.ndarray) -> np.ndarray:
-        """int64 argmin cells for quantized row matrix (rows x d)."""
-        d2 = (
-            (mat_q * mat_q).sum(axis=1, keepdims=True)
-            + (C * C).sum(axis=1)
-            - 2 * (mat_q @ C.T)
-        )
-        return d2.argmin(axis=1)  # first occurrence = lowest cell id
+    def make_scorer(q_mat: np.ndarray):
+        q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
+        probe = _probe_mask(_quantize(q_mat, quantize), cents, nprobe)
 
-    q_rows = queries.select(query_id, query_vec).collect()
-    if not q_rows:
-        schema = f"{query_id} {id_type}, {corpus_id} {cid_type}, cos_sim double, rnk long"
-        return corpus.sparkSession.createDataFrame([], schema)
-    q_ids = [r[0] for r in q_rows]
-    q_mat = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    qq = np.floor(q_mat * scale + 0.5).astype(np.int64)
-    qd2 = (
-        (qq * qq).sum(axis=1, keepdims=True)
-        + (C * C).sum(axis=1)
-        - 2 * (qq @ C.T)
-    )
-    # nprobe nearest cells per query, ties to lowest cell (stable argsort
-    # over (d2, cell) — cell IS the column index)
-    probe_idx = np.argsort(qd2, axis=1, kind="stable")[:, :nprobe]
-    probe_mask = np.zeros((len(q_ids), len(cells_of)), dtype=bool)
-    for qi in range(len(q_ids)):
-        probe_mask[qi, probe_idx[qi]] = True
-
-    out_schema = f"{query_id} {id_type}, {corpus_id} {cid_type}, cos_sim double"
-
-    def kernel(batches) -> "pd.DataFrame":
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf[corpus_id].to_numpy()
-            c_mat = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]]
-            )
-            cq = np.floor(c_mat * scale + 0.5).astype(np.int64)
-            c_cell = assign(cq)  # (batch,)
-            keep = probe_mask[:, c_cell]  # (Q, batch)
-            c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-            denom = np.outer(q_norm, c_norm)
+        def score(c_mat: np.ndarray) -> np.ndarray:
+            cells = _sq_dists(_quantize(c_mat, quantize), cents).argmin(axis=1)
+            denom = np.outer(q_norm, np.sqrt((c_mat * c_mat).sum(axis=1)))
             with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(
-                    keep & (denom > 0), (q_mat @ c_mat.T) / denom, np.nan
+                return np.where(
+                    probe[:, cells] & (denom > 0), (q_mat @ c_mat.T) / denom, np.nan
                 )
-            sims_r = np.round(np.nan_to_num(sims, nan=-2.0), round_dp)
-            kk = min(k, len(c_ids))
-            id_rank = np.argsort(np.argsort(c_ids))
-            id_keys = np.broadcast_to(id_rank, (len(q_ids), len(c_ids)))
-            order = np.lexsort((id_keys, -sims_r), axis=1)
-            rows = []
-            for qi in range(len(q_ids)):
-                for ci in order[qi, :kk]:
-                    s = sims[qi, ci]
-                    if not np.isnan(s):
-                        rows.append((q_ids[qi], c_ids[ci], float(s)))
-            yield pd.DataFrame(rows, columns=[query_id, corpus_id, "cos_sim"])
 
-    # NOT spread (round-12 A/B, guide §4.1): the kernel's per-row cost is
-    # a vectorized matmul slice — tiny — so splitting the 1-2 partition
-    # local scan into 32 Python tasks pays 32x the worker/Arrow per-task
-    # overhead for negligible CPU gain (s30 interleaved A/B: 3.46s
-    # no-spread vs 4.19s spread best-of-4; every round no-spread won).
-    # On real multi-split tables the input is already wide.
-    src = corpus.select(corpus_id, corpus_vec).where(F.col(corpus_vec).isNotNull())
-    cand = src.mapInPandas(kernel, out_schema)
-    scored = cand.select(
-        query_id, corpus_id, F.round("cos_sim", round_dp).alias("cos_sim")
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc("cos_sim"), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
+        return score
+
+    if candidate_filter is not None:
+        corpus = corpus.where(candidate_filter)  # after the centroids
+    return _map_side_topk(
+        queries, corpus, k, make_scorer, "cos_sim", round_dp,
+        query_id, corpus_id, query_vec, corpus_vec,
     )
 
 
@@ -1014,8 +938,8 @@ def quantized_pq_slice_scores(
     broadcasts (m x ksub rows), output (id, subspace, code, d2q).  The
     shared scoring stage of PQ: argmin over it per (id, subspace) is
     code ASSIGNMENT (``quantized_pq_codes``); computed for a query set
-    it is the per-query ADC lookup table
-    (``pq_adc_deterministic_topk``)."""
+    it is the per-query ADC lookup table that
+    ``pq_adc_deterministic_topk`` builds in numpy."""
     assert dim % m == 0
     dsub = dim // m
     cb = codebook.select(
@@ -1106,148 +1030,42 @@ def pq_adc_deterministic_topk(
     even when two vectors share all m codes, which IS the tie case PQ
     creates by construction).
 
-    Scale shape — the classic PQ serving layout: the codebook and the
-    |Q| x m x ksub query LUT both broadcast; the corpus contributes
-    only its code rows (m small ints per vector — the 100-TB win: the
-    scan is codes, not vectors), scored by a broadcast-hash join on
-    (subspace, code) and collapsed map-side by the partial sum before
-    one keyed exchange on (query_id, vec_id).  The trained-Lloyd
+    The production PQ serving loop in the map-side top-k kernel
+    (``_map_side_topk``): each corpus batch is encoded with one int64
+    einsum (first-occurrence argmin = lowest code, bit-identical to
+    ``quantized_pq_codes``), then ADC for ALL queries is m table
+    GATHERS (``LUT[:, j, codes[:, j]]``).  The two collects are the
+    codebook (m x ksub x dim/m) and the query matrix, both bounded.  A
+    JVM-side pivot of the same idea (map ``element_at`` fold) was tried
+    and REJECTED: Spark map lookups are linear scans.  The trained-Lloyd
     variant (``pq_topk``) swaps the codebook and keeps the recall
     gates; this query value-checks the ADC machinery itself."""
-    cb = modular_pq_codebook(
-        corpus, m=m, ksub=ksub, dim=dim, vec_col=corpus_vec, id_col=corpus_id
-    )
-    codes = quantized_pq_codes(
-        corpus, cb, m=m, dim=dim, quantize=quantize,
-        vec_col=corpus_vec, id_col=corpus_id,
-    ).select(corpus_id, "subspace", "code")
-    lut = quantized_pq_slice_scores(
-        queries, cb, m=m, dim=dim, quantize=quantize,
-        vec_col=query_vec, id_col=query_id,
-    ).withColumnRenamed("d2q", "__qd2")
-    adc = (
-        codes.join(F.broadcast(lut), ["subspace", "code"])
-        .groupBy(query_id, corpus_id)
-        .agg(F.sum("__qd2").alias("adc_d2q"))
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("adc_d2q").asc(), F.col(corpus_id).asc()
-    )
-    return adc.withColumn("rnk", F.row_number().over(w).cast("long")).where(
-        F.col("rnk") <= k
-    )
-
-
-def pq_adc_deterministic_topk_arrow(
-    queries: DataFrame,
-    corpus: DataFrame,
-    m: int = 8,
-    ksub: int = 16,
-    dim: int = 64,
-    k: int = 5,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec: str = "embedding",
-    corpus_vec: str = "embedding",
-    quantize: int = 6,
-) -> DataFrame:
-    """s8c's SCALE twin (the s1/s1b and s2g/s2g2 pattern applied to PQ
-    serving): identical result to ``pq_adc_deterministic_topk`` —
-    SHARES its oracle — through an Arrow map-side-top-k kernel that is
-    the production PQ serving loop: encode each corpus batch with one
-    int64 einsum (first-occurrence argmin = lowest code, bit-identical
-    to the SQL kernel), then ADC for ALL queries as m table GATHERS
-    (``LUT[:, j, codes[:, j]]``) instead of |Q| x N x m joined rows,
-    emitting only each query's within-batch top-k.  The exchange is
-    batches x |Q| x k rows and the per-pair cost is a vectorized gather
-    — a JVM-side pivot of the same idea (map ``element_at`` fold) was
-    tried and REJECTED: Spark map lookups are linear scans, measured
-    slower than the broadcast hash join at every scale.  The two
-    collects are the codebook (m x ksub x dim/m) and the query matrix,
-    both bounded by construction.
-
-    Integer headroom: quantized terms < 2^40 per product, < 2^44 per
-    slice distance, < 2^47 per ADC sum — exact in int64 everywhere."""
-    import pandas as pd
-
     dsub = dim // m
-    scale = float(10**quantize)
-    id_type = dict(queries.dtypes)[query_id]
-    cid_type = dict(corpus.dtypes)[corpus_id]
-    cb_rows = modular_pq_codebook(
+    cb = np.zeros((m, ksub, dsub), dtype=np.int64)
+    for r in modular_pq_codebook(
         corpus, m=m, ksub=ksub, dim=dim, vec_col=corpus_vec, id_col=corpus_id
-    ).collect()
-    CB = np.zeros((m, ksub, dsub), dtype=np.int64)
-    for r in cb_rows:
-        CB[int(r["subspace"]), int(r["code"])] = np.floor(
-            np.asarray(r["codeword"], dtype=np.float64) * scale + 0.5
-        ).astype(np.int64)
-    cb_sq = (CB * CB).sum(axis=2)  # (m, ksub)
-
-    q_rows = queries.select(query_id, query_vec).collect()
-    if not q_rows:
-        schema = (
-            f"{query_id} {id_type}, {corpus_id} {cid_type}, "
-            "adc_d2q long, rnk long"
+    ).collect():
+        cb[int(r["subspace"]), int(r["code"])] = _quantize(
+            np.asarray(r["codeword"], dtype=np.float64), quantize
         )
-        return corpus.sparkSession.createDataFrame([], schema)
-    q_ids = [r[0] for r in q_rows]
-    qq = np.floor(
-        np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows]) * scale
-        + 0.5
-    ).astype(np.int64)
-    qs = qq.reshape(len(q_ids), m, dsub)
-    # LUT[qi, j, c] = exact |qs - CB|^2 per subspace slice
-    LUT = (
-        (qs * qs).sum(axis=2)[:, :, None]
-        + cb_sq[None, :, :]
-        - 2 * np.einsum("qjd,jcd->qjc", qs, CB)
-    )  # (Q, m, ksub) int64
+    cb_sq = (cb * cb).sum(axis=2)  # (m, ksub)
 
-    nq = len(q_ids)
-    out_schema = f"{query_id} {id_type}, {corpus_id} {cid_type}, adc_d2q long"
+    def make_scorer(q_mat: np.ndarray):
+        # LUT[qi, j, c] = exact |q_j - codeword_jc|^2 per subspace slice
+        lut = _pq_dists(
+            _quantize(q_mat, quantize).reshape(len(q_mat), m, dsub), cb, cb_sq
+        )
 
-    def kernel(batches) -> "pd.DataFrame":
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf[corpus_id].to_numpy()
-            mat = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]]
-            )
-            xs = (
-                np.floor(mat * scale + 0.5)
-                .astype(np.int64)
-                .reshape(len(c_ids), m, dsub)
-            )
-            d2 = (
-                (xs * xs).sum(axis=2)[:, :, None]
-                + cb_sq[None, :, :]
-                - 2 * np.einsum("bjd,jcd->bjc", xs, CB)
-            )
-            codes = d2.argmin(axis=2)  # (B, m); first occurrence = lowest
-            adc = np.zeros((nq, len(c_ids)), dtype=np.int64)
-            for j in range(m):
-                adc += LUT[:, j, :][:, codes[:, j]]
-            kk = min(k, len(c_ids))
-            id_rank = np.argsort(np.argsort(c_ids))
-            id_keys = np.broadcast_to(id_rank, (nq, len(c_ids)))
-            order = np.lexsort((id_keys, adc), axis=1)
-            rows = []
-            for qi in range(nq):
-                for ci in order[qi, :kk]:
-                    rows.append((q_ids[qi], c_ids[ci], int(adc[qi, ci])))
-            yield pd.DataFrame(rows, columns=[query_id, corpus_id, "adc_d2q"])
+        def score(c_mat: np.ndarray) -> np.ndarray:
+            xs = _quantize(c_mat, quantize).reshape(len(c_mat), m, dsub)
+            codes = _pq_dists(xs, cb, cb_sq).argmin(axis=2)  # (B, m)
+            return sum(lut[:, j, codes[:, j]] for j in range(m)).astype(np.float64)
 
-    src = corpus.select(corpus_id, corpus_vec).where(
-        F.col(corpus_vec).isNotNull()
-    )
-    cand = src.mapInPandas(kernel, out_schema)
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("adc_d2q").asc(), F.col(corpus_id).asc()
-    )
-    return cand.withColumn("rnk", F.row_number().over(w).cast("long")).where(
-        F.col("rnk") <= k
+        return score
+
+    return _map_side_topk(
+        queries, corpus, k, make_scorer, "adc_d2q", None,
+        query_id, corpus_id, query_vec, corpus_vec,
     )
 
 
@@ -1268,361 +1086,60 @@ def ivfpq_deterministic_topk(
 ) -> DataFrame:
     """END-TO-END deterministic IVFPQ search — the value-check twin of
     the rows-only trained ``s2d_ivfpq_materialized`` path, closing the
-    family: coarse quantizer (s2g), fine quantizer (s8c), and now their
+    family: coarse quantizer (s2g), fine quantizer (s8c), and their
     COMPOSITION — residual encoding + per-probed-cell ADC — all in
     exact integer arithmetic under one DuckDB oracle.
 
     Stages, every one engine-exact: (1) corpus cells by quantized
     argmin against the modular representatives; (2) RESIDUALS r = xq -
-    cq in quantized integer space (integers subtract exactly in either
-    engine); (3) residual PQ codebook = per-subspace slices of the
-    lowest-id vector's residual per ``id % ksub`` class (the modular
-    trick applied to residuals, which is what IVFPQ trains on);
-    (4) corpus codes = per-subspace argmin over that codebook, ties to
-    the lowest code; (5) queries probe their nprobe nearest cells and
-    build a PER-(query, probed-cell) residual LUT (|Q| x nprobe x m x
-    ksub integer distances — broadcastable by construction); (6) ADC =
-    broadcast join of the corpus code table on (cell, subspace, code),
-    map-side partial sum, rank ascending with the vec_id tie-break made
-    total.
+    cq in quantized integer space; (3) residual PQ codebook = per-
+    subspace slices of the lowest-id vector's residual per ``id % ksub``
+    class (the modular trick applied to residuals, which is what IVFPQ
+    trains on); (4) corpus codes = per-subspace argmin over that
+    codebook, ties to the lowest code; (5) queries probe their nprobe
+    nearest cells, with one residual LUT per (query, cell); (6) ADC =
+    m gathers of those LUTs, non-probed (query, vector) pairs masked
+    out, ranked ascending with the vec_id tie-break made total.
 
-    Scale shape: centroid and codebook tables broadcast; the corpus is
-    scanned once for assignment+encoding (at 100 TB this is the build
-    job — s2d materializes exactly these code rows cell-partitioned)
-    and the search side touches only code rows in probed cells.  The
-    trained variant swaps KMeans centroids + Lloyd's codebooks into the
-    same geometry and keeps the recall gates."""
+    Stages 1, 2 and 4 run per corpus batch inside the map-side top-k
+    kernel (``_map_side_topk``).  Driver-side model artifacts are
+    bounded: centroids (nlist x dim), the rep residual codebook
+    (m x ksub x dim/m), and the |Q| x nlist x m x ksub int64 LUTs —
+    computing every cell in ONE einsum and masking beats a |Q| x nprobe
+    loop of small einsums (the measured sf1 bottleneck of the first
+    version).  The trained variant swaps KMeans centroids + Lloyd's
+    codebooks into the same geometry and keeps the recall gates."""
     assert dim % m == 0
     dsub = dim // m
-    cents = modular_representatives(
-        corpus, nlist=nlist, vec_col=corpus_vec, id_col=corpus_id
-    )
-    cq = cents.select(
-        "cell", quantized_vec(F.col("centroid"), quantize).alias("__cq")
-    )
-    assign = quantized_cell_assignments(
-        corpus, cents, quantize=quantize, vec_col=corpus_vec, id_col=corpus_id
-    ).select(corpus_id, "cell")
-    resid = (
-        spread(corpus.select(F.col(corpus_id), F.col(corpus_vec)), by=corpus_id)
-        .select(
-            F.col(corpus_id),
-            quantized_vec(F.col(corpus_vec), quantize).alias("__xq"),
-        )
-        .join(assign, corpus_id)
-        .join(F.broadcast(cq), "cell")
-        .select(
-            corpus_id,
-            "cell",
-            F.zip_with(
-                F.col("__xq"), F.col("__cq"), lambda a, b: a - b
-            ).alias("__r"),
-        )
-    )
-    # Persisted since round 12: the residual projection feeds three
-    # consumers (rreps, rslices, and the code table), and each recompute
-    # re-runs quantize + two joins.  The pre-spread measurement that
-    # favored recompute (4.7 s persisted vs 4.3 s, r7 note) was taken
-    # when the whole subtree ran on the 1-2 scan partitions; with the
-    # corpus spread across every core the materialization is cheap and
-    # saves two full re-evaluations (profiled: stages 66/67/80 = 10.7 +
-    # 11.5 + 33 s executor time re-deriving resid three times).  At
-    # 100 TB the build side materializes anyway as s2d's stored code
-    # table.  Registered with caching so the bench/driver release it
-    # after each run.
-    from pyspark import StorageLevel
-
-    from martech_pipelines_spark import caching
-
-    resid = caching.register(resid.persist(StorageLevel.MEMORY_AND_DISK))
-    # Residual PQ codebook: the modular-representative trick on residuals
-    rreps = resid.groupBy(
-        (F.col(corpus_id) % ksub).cast("int").alias("code")
-    ).agg(F.min(corpus_id).alias("__rid"))
-    rcb = (
-        rreps.join(resid, rreps["__rid"] == resid[corpus_id])
-        .select(
-            "code",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).cast("int").alias("subspace"),
-                            F.slice(F.col("__r"), j * dsub + 1, dsub).alias(
-                                "__cw"
-                            ),
-                        )
-                        for j in range(m)
-                    ]
-                )
-            ).alias("__s"),
-        )
-        .select(
-            F.col("__s.subspace").alias("subspace"),
-            "code",
-            F.col("__s.__cw").alias("__cw"),
-        )
-    )
-    # Corpus code table: per-subspace argmin over the residual codebook
-    rslices = resid.select(
-        F.col(corpus_id),
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("int").alias("subspace"),
-                        F.slice(F.col("__r"), j * dsub + 1, dsub).alias("__sq"),
-                    )
-                    for j in range(m)
-                ]
-            )
-        ).alias("__s"),
-    ).select(
-        corpus_id,
-        "cell",
-        F.col("__s.subspace").alias("subspace"),
-        F.col("__s.__sq").alias("__sq"),
-    )
-    scored = rslices.join(F.broadcast(rcb), "subspace").select(
-        corpus_id,
-        "cell",
-        "subspace",
-        "code",
-        quantized_sqdist(F.col("__sq"), F.col("__cw")).alias("__d2"),
-    )
-    codes = (
-        scored.groupBy(corpus_id, "cell", "subspace")
-        .agg(F.min(F.struct("__d2", "code")).alias("__b"))
-        .select(corpus_id, "cell", "subspace", F.col("__b.code").alias("code"))
-    )
-
-    # Per-(query, probed cell) residual LUT — small by construction
-    probes = quantized_probe_cells(
-        queries, cents, nprobe=nprobe, quantize=quantize,
-        vec_col=query_vec, id_col=query_id,
-    ).select(query_id, "cell")
-    qresid = (
-        queries.select(
-            F.col(query_id),
-            quantized_vec(F.col(query_vec), quantize).alias("__qq"),
-        )
-        .join(probes, query_id)
-        .join(F.broadcast(cq), "cell")
-        .select(
-            query_id,
-            "cell",
-            F.zip_with(
-                F.col("__qq"), F.col("__cq"), lambda a, b: a - b
-            ).alias("__qr"),
-        )
-    )
-    qslices = qresid.select(
-        F.col(query_id),
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("int").alias("subspace"),
-                        F.slice(F.col("__qr"), j * dsub + 1, dsub).alias("__sq"),
-                    )
-                    for j in range(m)
-                ]
-            )
-        ).alias("__s"),
-    ).select(
-        query_id,
-        "cell",
-        F.col("__s.subspace").alias("subspace"),
-        F.col("__s.__sq").alias("__sq"),
-    )
-    lut = qslices.join(F.broadcast(rcb), "subspace").select(
-        query_id,
-        "cell",
-        "subspace",
-        "code",
-        quantized_sqdist(F.col("__sq"), F.col("__cw")).alias("__qd2"),
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["cell", "subspace", "code"])
-        .groupBy(query_id, corpus_id)
-        .agg(F.sum("__qd2").alias("adc_d2q"))
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("adc_d2q").asc(), F.col(corpus_id).asc()
-    )
-    return adc.withColumn("rnk", F.row_number().over(w).cast("long")).where(
-        F.col("rnk") <= k
-    )
-
-
-def ivfpq_deterministic_topk_arrow(
-    queries: DataFrame,
-    corpus: DataFrame,
-    nlist: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    ksub: int = 16,
-    dim: int = 64,
-    k: int = 5,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec: str = "embedding",
-    corpus_vec: str = "embedding",
-    quantize: int = 6,
-) -> DataFrame:
-    """s2i's SCALE twin — the s8c2 gather kernel composed with the
-    s2g2 probe mask: identical result to ``ivfpq_deterministic_topk``
-    (pytest pins exact multisets incl. distances and rank), one Arrow
-    pass per corpus batch.  Per batch: int64 einsum assigns cells
-    (first-occurrence argmin = lowest cell), residuals subtract in
-    int64, a second einsum encodes residual codes (lowest-code ties),
-    then per PROBED cell the (query, cell) residual LUT gathers ADC for
-    the cell's columns — non-probed (query, vector) pairs are masked
-    out exactly as the SQL join drops them.  The exchange is
-    batches x |Q| x k rows.  Driver-side model artifacts are bounded:
-    centroids (nlist x dim), the rep residual codebook (m x ksub x
-    dim/m), per-(query, probed cell) LUTs (|Q| x nprobe x m x ksub
-    int64 — the per-query probe-time cost real IVFPQ pays).
-
-    Registered as ``s2i2_ivfpq_arrow`` in the round-8 window (shares
-    s2i's full oracle); the pytest equality pin against the SQL form
-    remains as the bit-level interchangeability proof."""
-    import pandas as pd
-
-    assert dim % m == 0
-    dsub = dim // m
-    scale = float(10**quantize)
-    id_type = dict(queries.dtypes)[query_id]
-    cid_type = dict(corpus.dtypes)[corpus_id]
-
-    cent_rows = modular_representatives(
-        corpus, nlist=nlist, vec_col=corpus_vec, id_col=corpus_id
-    ).collect()
-    C = np.array(
-        [
-            np.floor(
-                np.asarray(r["centroid"], dtype=np.float64) * scale + 0.5
-            ).astype(np.int64)
-            for r in sorted(cent_rows, key=lambda r: r["cell"])
-        ]
-    )  # (nlist, dim)
-
-    def assign(mat_q: np.ndarray) -> np.ndarray:
-        d2 = (
-            (mat_q * mat_q).sum(axis=1, keepdims=True)
-            + (C * C).sum(axis=1)
-            - 2 * (mat_q @ C.T)
-        )
-        return d2.argmin(axis=1)  # first occurrence = lowest cell
-
+    cents = _modular_centroids(corpus, nlist, quantize, corpus_vec, corpus_id)
     # Residual codebook from the ksub rep vectors (lowest id per
-    # id % ksub class), residuals computed with the SAME assignment —
-    # bit-identical to the distributed rreps/rcb tables.
-    rep_rows = modular_representatives(
-        corpus, nlist=ksub, vec_col=corpus_vec, id_col=corpus_id
-    ).collect()
-    rep_q = np.array(
-        [
-            np.floor(
-                np.asarray(r["centroid"], dtype=np.float64) * scale + 0.5
-            ).astype(np.int64)
-            for r in sorted(rep_rows, key=lambda r: r["cell"])
-        ]
-    )  # (ksub, dim) ordered by code
-    rep_resid = rep_q - C[assign(rep_q)]
-    RCB = rep_resid.reshape(ksub, m, dsub).transpose(1, 0, 2)  # (m, ksub, dsub)
-    rcb_sq = (RCB * RCB).sum(axis=2)  # (m, ksub)
+    # id % ksub class, ordered by code), residuals under the SAME
+    # assignment as the corpus rows.
+    reps = _modular_centroids(corpus, ksub, quantize, corpus_vec, corpus_id)
+    rep_resid = reps - cents[_sq_dists(reps, cents).argmin(axis=1)]
+    rcb = rep_resid.reshape(ksub, m, dsub).transpose(1, 0, 2)  # (m, ksub, dsub)
+    rcb_sq = (rcb * rcb).sum(axis=2)  # (m, ksub)
 
-    def encode(resid: np.ndarray) -> np.ndarray:
-        """(B, dim) int64 residuals -> (B, m) codes, lowest-code ties."""
-        xs = resid.reshape(len(resid), m, dsub)
-        d2 = (
-            (xs * xs).sum(axis=2)[:, :, None]
-            + rcb_sq[None, :, :]
-            - 2 * np.einsum("bjd,jcd->bjc", xs, RCB)
-        )
-        return d2.argmin(axis=2)
+    def make_scorer(q_mat: np.ndarray):
+        qq = _quantize(q_mat, quantize)
+        probe = _probe_mask(qq, cents, nprobe)
+        # luta[qi, c, j, code]: query qi's residual to cell c, per slice
+        qr = (qq[:, None, :] - cents[None, :, :]).reshape(len(qq), len(cents), m, dsub)
+        luta = _pq_dists(qr, rcb, rcb_sq)
 
-    q_rows = queries.select(query_id, query_vec).collect()
-    if not q_rows:
-        schema = (
-            f"{query_id} {id_type}, {corpus_id} {cid_type}, "
-            "adc_d2q long, rnk long"
-        )
-        return corpus.sparkSession.createDataFrame([], schema)
-    q_ids = [r[0] for r in q_rows]
-    nq = len(q_ids)
-    qq = np.floor(
-        np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows]) * scale
-        + 0.5
-    ).astype(np.int64)
-    qd2 = (
-        (qq * qq).sum(axis=1, keepdims=True)
-        + (C * C).sum(axis=1)
-        - 2 * (qq @ C.T)
-    )
-    probe_idx = np.argsort(qd2, axis=1, kind="stable")[:, :nprobe]
-    probe_mask = np.zeros((nq, nlist), dtype=bool)
-    np.put_along_axis(probe_mask, probe_idx, True, axis=1)
-    # per-(query, cell) residual LUTs in ONE einsum: LUTA[qi, c, j, code]
-    # (|Q| x nlist x dim int64 residual tensor ~ MBs; computing every
-    # cell and masking beats a |Q| x nprobe Python loop of small einsums
-    # — that loop was the measured sf1 bottleneck of the first version)
-    qr = (qq[:, None, :] - C[None, :, :]).reshape(nq, nlist, m, dsub)
-    LUTA = (
-        (qr * qr).sum(axis=3)[:, :, :, None]
-        + rcb_sq[None, None, :, :]
-        - 2 * np.einsum("qcjd,jkd->qcjk", qr, RCB)
-    )
+        def score(c_mat: np.ndarray) -> np.ndarray:
+            xq = _quantize(c_mat, quantize)
+            cells = _sq_dists(xq, cents).argmin(axis=1)
+            resid = (xq - cents[cells]).reshape(len(xq), m, dsub)
+            codes = _pq_dists(resid, rcb, rcb_sq).argmin(axis=2)  # (B, m)
+            adc = sum(luta[:, cells, j, codes[:, j]] for j in range(m))
+            return np.where(probe[:, cells], adc, np.nan)
 
-    out_schema = f"{query_id} {id_type}, {corpus_id} {cid_type}, adc_d2q long"
+        return score
 
-    def kernel(batches) -> "pd.DataFrame":
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf[corpus_id].to_numpy()
-            nb = len(c_ids)
-            mat = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]]
-            )
-            xq = np.floor(mat * scale + 0.5).astype(np.int64)
-            cells = assign(xq)
-            codes = encode(xq - C[cells])
-            keep = probe_mask[:, cells]  # (Q, B)
-            adc = np.zeros((nq, nb), dtype=np.int64)
-            for c in np.unique(cells):
-                colmask = cells == c
-                sub = codes[colmask]  # (Bc, m)
-                acc = np.zeros((nq, int(colmask.sum())), dtype=np.int64)
-                lut_c = LUTA[:, c]  # (Q, m, ksub)
-                for j in range(m):
-                    acc += lut_c[:, j, :][:, sub[:, j]]
-                adc[:, colmask] = acc
-            big = np.iinfo(np.int64).max
-            adc_m = np.where(keep, adc, big)
-            kk = min(k, nb)
-            id_rank = np.argsort(np.argsort(c_ids))
-            id_keys = np.broadcast_to(id_rank, (nq, nb))
-            order = np.lexsort((id_keys, adc_m), axis=1)
-            rows = []
-            for qi in range(nq):
-                for ci in order[qi, :kk]:
-                    if keep[qi, ci]:
-                        rows.append((q_ids[qi], c_ids[ci], int(adc[qi, ci])))
-            yield pd.DataFrame(rows, columns=[query_id, corpus_id, "adc_d2q"])
-
-    src = corpus.select(corpus_id, corpus_vec).where(
-        F.col(corpus_vec).isNotNull()
-    )
-    cand = src.mapInPandas(kernel, out_schema)
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("adc_d2q").asc(), F.col(corpus_id).asc()
-    )
-    return cand.withColumn("rnk", F.row_number().over(w).cast("long")).where(
-        F.col("rnk") <= k
+    return _map_side_topk(
+        queries, corpus, k, make_scorer, "adc_d2q", None,
+        query_id, corpus_id, query_vec, corpus_vec,
     )
 
 
@@ -2878,43 +2395,90 @@ def knn_graph(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_dp: int = 4,
+    block_cells: int = _MAX_QUERY_CELLS,
 ) -> DataFrame:
     """EXACT k-nearest-neighbor graph: for every vector, its top-k cosine
     neighbors (self excluded). Output (src_id, nbr_id, cos_sim, rnk).
 
-    This is the exact baseline (broadcast corpus x corpus — O(N^2) dot
-    products): correct at any gate scale, quadratic at 100 TB. The scale
-    form is ``knn_graph_lsh`` below, whose candidates come from a banded
-    signature SELF-join (a keyed shuffle, no broadcast of the corpus),
-    equality/recall-pinned against this baseline in pytest.
+    The graph is every corpus vector run as a brute-force top-(k+1)
+    query over the corpus, so it rides the Arrow matmul lane of
+    ``brute_force_topk_arrow`` (measured 66.8s -> 2.1s at sf0.1, k=8,
+    against the JVM-HOF all-pairs form).  The scale form is
+    ``knn_graph_lsh`` below, whose candidates come from a banded
+    signature SELF-join (a keyed shuffle, no collect), recall-pinned
+    against this one in pytest.
+
+    Corpus-as-queries means the query side is NOT |Q|-bounded, so the
+    collect is BLOCKED (VERDICT r8): when the corpus exceeds
+    ``block_cells`` float64 cells, the query side is split into
+    deterministic hash-mod id blocks, each block rides the kernel
+    within budget, and the per-block top-(k+1) results are unioned —
+    per-query output is independent of blocking (pinned in pytest).
+    Peak driver memory is one block; the corpus is re-scanned once per
+    block, which is the honest cost of an EXACT O(N^2) build.
+
+    Self-exclusion: self is requested as one extra slot and then
+    filtered.  Under exact-duplicate ties self may rank BELOW a
+    lower-id duplicate (both cos 1.0), but it is always within the
+    top-(k+1), so dropping it and re-ranking gives the exact (cos DESC,
+    id ASC) neighbor order that s10's oracle checks.
 
     Graph uses: SemDeDup-style connected-component dedup over embedding
     space, label propagation, and kNN-classifier data curation."""
-    a = vectors.select(
-        F.col(id_col).alias("__qid"), _as_double(F.col(vec_col)).alias("__qv")
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-    b = vectors.select(
-        F.col(id_col).alias("__cid"), _as_double(F.col(vec_col)).alias("__cv")
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-    denom = F.col("__qn") * F.col("__cn")
-    scored = (
-        F.broadcast(a)
-        .crossJoin(b)
-        .where(F.col("__qid") != F.col("__cid"))
-        .select(
-            F.col("__qid").alias("src_id"),
-            F.col("__cid").alias("nbr_id"),
-            F.round(
-                F.when(denom > 0, dot(F.col("__qv"), F.col("__cv")) / denom),
-                round_dp,
-            ).alias("cos_sim"),
-        )
+    queries = vectors.select(
+        F.col(id_col).alias("__gq"), F.col(vec_col).alias("__gv")
     )
-    w = Window.partitionBy("src_id").orderBy(F.desc("cos_sim"), F.col("nbr_id").asc())
-    return (
-        scored.where(F.col("cos_sim").isNotNull())
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
+    total_cells = (
+        vectors.select(
+            F.sum(F.coalesce(F.size(F.col(vec_col)), F.lit(0))).alias("__c")
+        ).first()["__c"]
+        or 0
+    )
+    if total_cells <= block_cells:
+        topk1 = brute_force_topk_arrow(
+            queries,
+            vectors,
+            k=k + 1,
+            query_id="__gq",
+            corpus_id=id_col,
+            query_vec="__gv",
+            corpus_vec=vec_col,
+            round_dp=round_dp,
+            max_query_cells=block_cells,
+        )
+    else:
+        from functools import reduce
+
+        n_blocks = math.ceil(total_cells / block_cells)
+        # hash-mod blocks are uniform regardless of id distribution;
+        # 2x slack on the per-block budget absorbs the mod skew.
+        parts = [
+            brute_force_topk_arrow(
+                queries.where(
+                    F.pmod(F.xxhash64(F.col("__gq")), F.lit(n_blocks)) == i
+                ),
+                vectors,
+                k=k + 1,
+                query_id="__gq",
+                corpus_id=id_col,
+                query_vec="__gv",
+                corpus_vec=vec_col,
+                round_dp=round_dp,
+                max_query_cells=2 * block_cells,
+            )
+            for i in range(n_blocks)
+        ]
+        topk1 = reduce(lambda a, b: a.unionByName(b), parts)
+    kept = topk1.where(F.col("__gq") != F.col(id_col)).select(
+        F.col("__gq").alias("src_id"),
+        F.col(id_col).alias("nbr_id"),
+        "cos_sim",
+    )
+    w = Window.partitionBy("src_id").orderBy(
+        F.desc("cos_sim"), F.col("nbr_id").asc()
+    )
+    return kept.withColumn("rnk", F.row_number().over(w).cast("long")).where(
+        F.col("rnk") <= k
     )
 
 
@@ -3507,7 +3071,7 @@ def graph_ann_beam_search(
     # O(N^2) scoring — once per reference.  A materialized deployment
     # reads the edge table from storage; inline, the persist is that
     # materialization.  (The larger build win is algorithmic: see
-    # knn_graph_arrow, 16x the JVM-HOF exact form at sf0.1.)
+    # knn_graph, 16x the JVM-HOF exact form at sf0.1.)
     edges = caching.register(
         graph.select(
             F.col("src_id").alias("__src"), F.col("nbr_id").alias("__nbr")
@@ -3590,94 +3154,3 @@ def graph_ann_beam_search(
             out = out.unionByName(nxt)
         return out
     return topk(visited)
-
-
-def knn_graph_arrow(
-    vectors: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 4,
-    block_cells: int = _MAX_QUERY_CELLS,
-) -> DataFrame:
-    """``knn_graph`` through the Arrow map-side-top-k kernel (the
-    s1/s1b twin pattern applied to the graph BUILD): the kNN graph is
-    just every corpus vector run as a brute-force top-(k+1) query over
-    the corpus, so it rides the existing matmul lane and drops the
-    JVM-HOF all-pairs cost (measured 66.8s -> 2.1s at sf0.1, k=8).
-
-    Corpus-as-queries means the query side is NOT |Q|-bounded, so the
-    collect is BLOCKED (VERDICT r8): when the corpus exceeds
-    ``block_cells`` float64 cells, the query side is split into
-    deterministic hash-mod id blocks, each block rides the kernel
-    within budget, and the per-block top-(k+1) results are unioned —
-    per-query output is independent of blocking, so this is bit-equal
-    to the single-pass form (pinned in pytest).  Peak driver memory is
-    one block; the corpus is re-scanned once per block, which is the
-    honest cost of an EXACT O(N^2) build — this path is the oracle
-    anchor and the gate-scale inline build, while the 100-TB production
-    build is ``knn_graph_lsh`` (banded self-join, no collect at all —
-    s10b, and the s29b registered beam-search form).
-
-    Self-exclusion detail that keeps this bit-equal to ``knn_graph``
-    (pinned in pytest): self is requested as one extra slot and then
-    filtered.  Under exact-duplicate ties self may rank BELOW a
-    lower-id duplicate (both cos 1.0), but it is always within the
-    top-(k+1), so dropping it and re-ranking reproduces the exact
-    form's (cos DESC, id ASC) neighbor order."""
-    queries = vectors.select(
-        F.col(id_col).alias("__gq"), F.col(vec_col).alias("__gv")
-    )
-    total_cells = (
-        vectors.select(
-            F.sum(F.coalesce(F.size(F.col(vec_col)), F.lit(0))).alias("__c")
-        ).first()["__c"]
-        or 0
-    )
-    if total_cells <= block_cells:
-        topk1 = brute_force_topk_arrow(
-            queries,
-            vectors,
-            k=k + 1,
-            query_id="__gq",
-            corpus_id=id_col,
-            query_vec="__gv",
-            corpus_vec=vec_col,
-            round_dp=round_dp,
-            max_query_cells=block_cells,
-        )
-    else:
-        import math
-        from functools import reduce
-
-        n_blocks = math.ceil(total_cells / block_cells)
-        # hash-mod blocks are uniform regardless of id distribution;
-        # 2x slack on the per-block budget absorbs the mod skew.
-        parts = [
-            brute_force_topk_arrow(
-                queries.where(
-                    F.pmod(F.xxhash64(F.col("__gq")), F.lit(n_blocks)) == i
-                ),
-                vectors,
-                k=k + 1,
-                query_id="__gq",
-                corpus_id=id_col,
-                query_vec="__gv",
-                corpus_vec=vec_col,
-                round_dp=round_dp,
-                max_query_cells=2 * block_cells,
-            )
-            for i in range(n_blocks)
-        ]
-        topk1 = reduce(lambda a, b: a.unionByName(b), parts)
-    kept = topk1.where(F.col("__gq") != F.col(id_col)).select(
-        F.col("__gq").alias("src_id"),
-        F.col(id_col).alias("nbr_id"),
-        "cos_sim",
-    )
-    w = Window.partitionBy("src_id").orderBy(
-        F.desc("cos_sim"), F.col("nbr_id").asc()
-    )
-    return kept.withColumn("rnk", F.row_number().over(w).cast("long")).where(
-        F.col("rnk") <= k
-    )

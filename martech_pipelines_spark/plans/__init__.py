@@ -283,12 +283,9 @@ _WINDOW_PRIORITY = [
     "s2f_ivf_probe_sets",
     "s8b_pq_codes",
     "s2g_ivf_deterministic_topk",
-    "s2g2_ivf_deterministic_arrow",
     "s2h_ivf_delta_probe",
     "s8c_pq_adc_deterministic_topk",
     "s2i_ivfpq_deterministic_topk",
-    "s2i2_ivfpq_arrow",
-    "s8c2_pq_adc_arrow",
     "mm4_resize",
     "mm5_frame_sample",
     "mm6_phash_near_dup",

@@ -79,7 +79,7 @@ def _fixed_queries(emb: DataFrame) -> DataFrame:
 def s8c3_pq_adc_fixedq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s8c's fixed-|Q| scale twin: the identical deterministic PQ/ADC
     kernel with |Q| pinned at 500 queries at every sf, so BENCH_sf1
-    growth reads engine behavior (code-table scan + keyed ADC agg),
+    growth reads engine behavior (per-batch encode + ADC gathers),
     not the workload quadratic the %10 query set bakes in (s8c grew
     26.9x at 10x data because BOTH |Q| and the corpus scaled).  Same
     full oracle family; only the query predicate differs."""

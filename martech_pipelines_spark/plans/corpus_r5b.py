@@ -364,9 +364,10 @@ _S10_EXACT_ORACLE = """
 def s10_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-NN graph over the whole embedding table (self excluded) —
     the neighbor structure SemDeDup-style embedding dedup, label
-    propagation, and kNN curation build on. Exact baseline (broadcast
-    N x N); the shuffle-only scale form is s10b, recall-gated against
-    this in pytest. See ``similarity.knn_graph``."""
+    propagation, and kNN curation build on. Exact baseline (corpus as
+    a brute-force top-(k+1) query set on the Arrow matmul lane); the
+    shuffle-only scale form is s10b, recall-gated against this in
+    pytest. See ``similarity.knn_graph``."""
     from martech_pipelines_spark.operators import similarity as SIM
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -30,8 +30,8 @@ audit_limit_ties discipline: the argmin is strict on this corpus).
 
 The family closers take the component oracles end to end:
 
-``s2g``/``s2g2`` — the complete deterministic IVF search (SQL anchor +
-                   Arrow scale twin, one shared oracle);
+``s2g``          — the complete deterministic IVF search (Arrow
+                   map-side top-k kernel);
 ``s2h``          — the MATERIALIZED lifecycle under the same oracle:
                    base build, frozen-quantizer delta append, probe
                    pruning partitions on both sides of the union;
@@ -302,8 +302,8 @@ def s2g_ivf_deterministic_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END deterministic IVF search, fully value-checked — the
     upgrade past the component oracles: coarse quantizer = modular
     representatives, cell assignment + probe selection = integer-exact
-    argmin folded inline in the scan projection (zero shuffles, zero
-    joins before scoring — the literal centroid array IS the broadcast),
+    int64 argmin per corpus Arrow batch (the map-side top-k kernel: one
+    scoring matmul, batches*|Q|*k rows into the one rank exchange),
     ranking = exact cosine within the probed cells under s1's
     rounded-rank + id tie-break contract.  Every stage deterministic =>
     the complete ANN query has a DuckDB oracle; the trained-KMeans
@@ -317,26 +317,6 @@ def s2g_ivf_deterministic_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return SIM.ivf_deterministic_topk(
-        queries, emb, nlist=_NLIST, nprobe=_NPROBE, k=5
-    ).select("query_id", "vec_id", "cos_sim", "rnk")
-
-
-@q("s2g2_ivf_deterministic_arrow", _S2G_ORACLE)  # SHARES s2g's oracle
-def s2g2_ivf_deterministic_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """s2g through the Arrow map-side-top-k kernel (the s1/s1b twin
-    pattern applied to IVF): int64 numpy cell assignment per corpus
-    batch (bit-identical to the SQL argmin), probe-mask + one scoring
-    matmul, per-batch top-k emission — the exchange is batches*|Q|*k
-    rows and per-pair cost is a matmul lane, not an interpreted HOF
-    fold.  Sharing the oracle proves the two physical forms
-    interchangeable; this one is the 100-TB search path."""
-    from martech_pipelines_spark.operators import similarity as SIM
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return SIM.ivf_deterministic_topk_arrow(
         queries, emb, nlist=_NLIST, nprobe=_NPROBE, k=5
     ).select("query_id", "vec_id", "cos_sim", "rnk")
 
@@ -463,10 +443,10 @@ def s8c_pq_adc_deterministic_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     upgrade applied to the PQ family: the coarse-quantizer lifecycle
     (s2e/s2f/s2g/s2h) and now the fine-quantizer ADC machinery both
     carry full DuckDB oracles; only the Lloyd's training itself stays
-    behind the recall gates.  Scale shape: codebook + query LUT
-    broadcast, the scan is the skinny code table (m small ints per
-    vector, never the vectors), partial-summed map-side before one
-    keyed exchange on (query_id, vec_id)."""
+    behind the recall gates.  Scale shape: the codebook and query LUT
+    are closed over by the map-side top-k kernel, which encodes each
+    corpus Arrow batch and scores it by m table gathers; only
+    batches*|Q|*k candidate rows reach the one rank exchange."""
     from martech_pipelines_spark.operators import similarity as SIM
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -585,9 +565,10 @@ def s2i_ivfpq_deterministic_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query, probed-cell) residual LUTs, ADC ranking with a total vec_id
     tie-break.  The last deterministic stage of the ANN family to gain
     a full DuckDB oracle — after this only Lloyd's/KMeans training
-    itself is recall-gated.  Scale shape: centroids + codebook + LUT
-    broadcast; the corpus is scanned once for assign+encode (= s2d's
-    build job) and search touches only code rows in probed cells."""
+    itself is recall-gated.  Scale shape: centroids, residual codebook
+    and per-(query, cell) LUTs are closed over by the map-side top-k
+    kernel; each corpus Arrow batch is assigned + encoded (= s2d's
+    build job) and scored only against the queries probing its cells."""
     from martech_pipelines_spark.operators import similarity as SIM
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -597,50 +578,4 @@ def s2i_ivfpq_deterministic_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.ivfpq_deterministic_topk(
         queries, emb, nlist=_NLIST, nprobe=_NPROBE, m=_PQ_M, ksub=_NLIST,
         dim=64, k=5,
-    ).select("query_id", "vec_id", "adc_d2q", "rnk")
-
-
-@q("s2i2_ivfpq_arrow", _S2I_ORACLE)  # SHARES s2i's oracle
-def s2i2_ivfpq_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """s2i through the Arrow serving kernel — the s8c2 gather composed
-    with the s2g2 probe mask (cells by int64 einsum, residual codes by
-    a second einsum, per-(query, probed-cell) residual LUT gathers with
-    non-probed pairs masked exactly as the SQL join drops them).
-    Registered into the round-8 window so the last ANN physical form
-    carries its own driver-green row instead of transitive pinning
-    (VERDICT r7 #5); measured 3.7x the SQL form at sf0.1 and 15x at
-    sf1 (BENCH_NOTES_r07.md).  Sharing s2i's full oracle proves the
-    two physical forms interchangeable — same contract as s1/s1b,
-    s2g/s2g2, s8c/s8c2."""
-    from martech_pipelines_spark.operators import similarity as SIM
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return SIM.ivfpq_deterministic_topk_arrow(
-        queries, emb, nlist=_NLIST, nprobe=_NPROBE, m=_PQ_M, ksub=_NLIST,
-        dim=64, k=5,
-    ).select("query_id", "vec_id", "adc_d2q", "rnk")
-
-
-@q("s8c2_pq_adc_arrow", _S8C_ORACLE)  # SHARES s8c's oracle
-def s8c2_pq_adc_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """s8c through the Arrow map-side-top-k kernel (the s1b/s2g2
-    interchangeable-forms pattern applied to PQ serving): per corpus
-    batch ONE int64 einsum encodes the codes and m vectorized table
-    GATHERS compute ADC for every query — the exchange shrinks from
-    |Q| x N x m joined rows to batches x |Q| x k candidates.  Sharing
-    s8c's oracle proves the two physical forms interchangeable; this
-    one is the 100-TB serving path (a JVM map-lookup pivot was tried
-    and rejected — Spark map element_at is a linear scan; see
-    BENCH_NOTES_r07)."""
-    from martech_pipelines_spark.operators import similarity as SIM
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return SIM.pq_adc_deterministic_topk_arrow(
-        queries, emb, m=_PQ_M, ksub=_NLIST, dim=64, k=5
     ).select("query_id", "vec_id", "adc_d2q", "rnk")

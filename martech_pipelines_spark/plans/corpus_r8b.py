@@ -1584,17 +1584,18 @@ def s29_graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expected behavior, not a bug: recall trails the s25 IVF curve at
     equal candidate budgets when the entry lands in a far cluster —
     that is the known NSW cold-entry trade the hierarchical variant
-    exists to fix.  The build runs through ``knn_graph_arrow`` — the
-    graph is corpus-as-queries top-(k+1) with self filtered, pinned
-    bit-equal to the exact JVM form and measured 16x faster at sf0.1
-    (66.8s -> 4.1s) — so the inline index cost stays gate-friendly."""
+    exists to fix.  The build runs through ``knn_graph`` — the graph
+    is corpus-as-queries top-(k+1) with self filtered on the Arrow
+    matmul lane, measured 16x faster than the JVM all-pairs form at
+    sf0.1 (66.8s -> 4.1s) — so the inline index cost stays
+    gate-friendly."""
     from martech_pipelines_spark.operators import similarity as SIM
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    graph = SIM.knn_graph_arrow(emb, k=_S29_GK).select("src_id", "nbr_id")
+    graph = SIM.knn_graph(emb, k=_S29_GK).select("src_id", "nbr_id")
     entry = emb.agg(F.min("vec_id")).collect()[0][0]  # 1-row control plane
     return SIM.graph_ann_beam_search(
         queries,

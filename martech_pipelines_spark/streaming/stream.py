@@ -1350,83 +1350,6 @@ def read_card_state(spark: SparkSession, state_path: str) -> DataFrame:
     return render_dataset_card(fold_card_state(parts))
 
 
-# ---------------------------------------------------------------------------
-# Streaming KMV distinct maintenance (r3c/h24's streaming twin)
-# ---------------------------------------------------------------------------
-
-
-def apply_kmv_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
-    key_col: str = "event_type",
-    col: str = "user_id",
-    k: int = 64,
-) -> None:
-    """One fold of ``streaming_kmv_maintenance``: reduce the micro-batch
-    to its (key, h) KMV rows and land them as the state root's
-    ``batch_id={N}`` partition with OVERWRITE (replay = idempotent, the
-    card/covariance convention).  Per-batch rows are each batch's k
-    smallest distinct hashes — the mergeable state, never raw events."""
-    from martech_pipelines_spark.operators.sketches import kmv_sketch_table
-
-    kmv_sketch_table(batch_df, key_col, col, k=k).write.mode(
-        "overwrite"
-    ).parquet(f"{state_path}/batch_id={batch_id}")
-
-
-def streaming_kmv_maintenance(
-    events_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-    key_col: str = "event_type",
-    col: str = "user_id",
-    k: int = 64,
-) -> "object":
-    """Continuously maintain per-key KMV distinct sketches from an event
-    stream — the streaming twin of ``h24_incremental_kmv`` (and the
-    deterministic counterpart of the HLL ``streaming`` path): each
-    micro-batch lands one state partition; ``read_kmv_state`` folds and
-    estimates on demand, EQUAL to a batch recompute over the same events
-    because k-smallest-of-union == k-smallest-of-per-batch-k-smallest
-    (pinned in test_streaming)."""
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_kmv_batch(batch_df, batch_id, state_path, key_col, col, k)
-
-    return (
-        events_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
-
-
-def read_kmv_state(
-    spark: SparkSession,
-    state_path: str,
-    key_col: str = "event_type",
-    k: int = 64,
-) -> DataFrame:
-    """Estimate per-key distinct counts from the per-batch KMV state:
-    one fold (re-window to the k smallest across batches) + the shared
-    half-up estimator."""
-    from pyspark.sql import Window
-
-    from martech_pipelines_spark.operators.sketches import kmv_estimate
-
-    parts = spark.read.parquet(state_path).select(key_col, "h").dropDuplicates(
-        [key_col, "h"]
-    )
-    w = Window.partitionBy(key_col).orderBy(F.col("h").asc())
-    folded = (
-        parts.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-    return kmv_estimate(folded, key_col, k=k)
-
-
 def _read_range_markers(spark: SparkSession, state_path: str):
     """Read the ordered-ingestion ``_range`` markers under a state root.
 

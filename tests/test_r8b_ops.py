@@ -512,15 +512,6 @@ def test_exact_rerank_matches_bruteforce_on_candidate_set(spark, sf_dir):
     )
 
 
-def test_knn_graph_arrow_bit_equal_to_exact(spark, sf_dir):
-    from martech_pipelines_spark.sources import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = {tuple(r) for r in SIM.knn_graph(emb, k=8).collect()}
-    b = {tuple(r) for r in SIM.knn_graph_arrow(emb, k=8).collect()}
-    assert a == b and len(a) > 0
-
-
 def test_knn_graph_arrow_blocked_bit_equal(spark, sf_dir):
     # VERDICT r8 scale fix: corpus-as-queries builds over the cell budget
     # split into hash-mod query blocks; per-query output is independent of
@@ -528,10 +519,10 @@ def test_knn_graph_arrow_blocked_bit_equal(spark, sf_dir):
     from martech_pipelines_spark.sources import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    a = {tuple(r) for r in SIM.knn_graph_arrow(emb, k=5).collect()}
+    a = {tuple(r) for r in SIM.knn_graph(emb, k=5).collect()}
     b = {
         tuple(r)
-        for r in SIM.knn_graph_arrow(emb, k=5, block_cells=4000).collect()
+        for r in SIM.knn_graph(emb, k=5, block_cells=4000).collect()
     }
     assert a == b and len(a) > 0
 
@@ -549,6 +540,22 @@ def test_brute_force_arrow_query_budget_raises(spark, sf_dir):
     q = emb.selectExpr("vec_id AS query_id", "embedding")
     with pytest.raises(ValueError, match="knn_graph_lsh"):
         SIM.brute_force_topk_arrow(q, emb, k=3, max_query_cells=1000).count()
+
+
+def test_index_search_query_budget_raises(spark, sf_dir, monkeypatch):
+    # The IVF and PQ-ADC kernels collect their query side under the same
+    # module-level budget as brute_force_topk_arrow (no per-call knob).
+    import pytest
+
+    from martech_pipelines_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.selectExpr("vec_id AS query_id", "embedding")
+    monkeypatch.setattr(SIM, "_MAX_QUERY_CELLS", 1000)
+    with pytest.raises(ValueError, match="driver-side budget"):
+        SIM.ivf_deterministic_topk(q, emb, nlist=8, nprobe=2, k=3)
+    with pytest.raises(ValueError, match="driver-side budget"):
+        SIM.pq_adc_deterministic_topk(q, emb, k=3)
 
 
 def test_graph_beam_search_reaches_expected_visited_set(spark):

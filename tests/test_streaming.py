@@ -1391,59 +1391,6 @@ def test_streaming_card_maintenance_matches_batch(spark, tmp_path):
     assert got == want
 
 
-def test_streaming_kmv_maintenance_matches_batch(spark, tmp_path):
-    """h24's streaming twin: per-batch KMV state partitions folded at
-    read must produce the same distinct estimates as the batch sketch
-    over all events (k-smallest-of-union == k-smallest-of-per-batch
-    k-smallest)."""
-    import glob as _g
-    import shutil as _sh
-
-    from martech_pipelines_spark.operators.sketches import (
-        kmv_estimate,
-        kmv_sketch_table,
-    )
-    from martech_pipelines_spark.streaming.stream import (
-        read_kmv_state,
-        streaming_kmv_maintenance,
-    )
-
-    d = tmp_path / "ev_stream"
-    d.mkdir()
-    ev = load_table(spark, SF, "events")
-    for i in range(3):
-        ev.where(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"evslice{i}"))
-        src = _g.glob(str(tmp_path / f"evslice{i}" / "part-*.parquet"))[0]
-        _sh.copy(src, d / f"part-{i:03d}.parquet")
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    state = str(tmp_path / "kmv_state")
-    q = streaming_kmv_maintenance(
-        stream, state, str(tmp_path / "kmv_ckpt"), k=32
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {tuple(r) for r in read_kmv_state(spark, state, k=32).collect()}
-    want = {
-        tuple(r)
-        for r in kmv_estimate(
-            kmv_sketch_table(ev, "event_type", "user_id", k=32),
-            "event_type",
-            k=32,
-        ).collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_streaming_journey_maintenance_matches_batch(spark, tmp_path):
     """h27's streaming twin: per-batch journey-state partitions folded
     at read (batch_id order) must reproduce the batch mart24 readout —

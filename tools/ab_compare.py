@@ -10,8 +10,11 @@ Usage:
     python tools/ab_compare.py QUERY  VARIANT_SPEC [VARIANT_SPEC ...]
 
 A VARIANT_SPEC is ``label=module:attr=value`` — before each timed run
-of that variant, setattr(module, attr, eval(value)) is applied (module
-imported by dotted path).  ``base=`` applies nothing.
+of that variant, setattr(module, attr, ast.literal_eval(value)) is
+applied (module imported by dotted path).  ``value`` must be a Python
+literal (number, string, tuple, list, dict, bool, None): expressions
+such as ``2**20`` or name references raise ValueError.  ``value`` may
+itself contain ``=``.  ``base=`` applies nothing.
 """
 
 from __future__ import annotations
@@ -36,7 +39,7 @@ def main() -> None:
         if not rest:
             specs.append((label, None))
             continue
-        mod_attr, _, value = rest.rpartition("=")
+        mod_attr, _, value = rest.partition("=")
         mod, _, attr = mod_attr.partition(":")
         specs.append((label, (mod, attr, ast.literal_eval(value))))
 

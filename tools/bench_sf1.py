@@ -96,11 +96,9 @@ HEAVY = [
     # steady-state refresh cost the materialization exists to deliver
     # (compare against pipe10's linear-in-text number)
     "pipe10b_prep_funnel_materialized",
-    # round-7 closing: the end-to-end deterministic IVF pair — the SQL
-    # oracle anchor vs its Arrow matmul twin on the same 10x corpus (the
-    # interchangeable-forms claim measured at scale, not just asserted)
+    # round-7 closing: the end-to-end deterministic IVF search on the
+    # 10x corpus
     "s2g_ivf_deterministic_topk",
-    "s2g2_ivf_deterministic_arrow",
     # round-7 family closers: the materialized IVF lifecycle probe
     # (best-of-2 index-cache provenance — run 1 builds base+delta, run 2
     # is the pruned steady-state probe), and the deterministic PQ/IVFPQ
@@ -108,12 +106,6 @@ HEAVY = [
     "s2h_ivf_delta_probe",
     "s8c_pq_adc_deterministic_topk",
     "s2i_ivfpq_deterministic_topk",
-    # round-7: s8c's Arrow gather-kernel twin (shared oracle) — the PQ
-    # serving path measured against its SQL anchor at 10x
-    "s8c2_pq_adc_arrow",
-    # round-8: s2i's Arrow serving twin, now a registered driver query —
-    # the full IVFPQ scale lane measured against its SQL anchor at 10x
-    "s2i2_ivfpq_arrow",
     # round-8b: incremental sessionization (event-volume interval folds),
     # deterministic LPA (3 keyed join+mode rounds over the catalog-bound
     # graph), the recall-vs-probes sweep (one exact pass + one max-probe
@@ -346,8 +338,8 @@ RECALL_QUERIES = {
     "s7_sq8_topk": 0.9,
     "s8_pq_topk": 0.5,
     "s2d_ivfpq_materialized": 0.5,
-    # deterministic IVF (s2g2 is bit-equal to s2g by the shared oracle —
-    # grading one grades both; s2h shares the same oracle too)
+    # deterministic IVF (s2h shares the same oracle — grading one
+    # grades both)
     "s2g_ivf_deterministic_topk": 0.5,
     # deterministic PQ/IVFPQ machinery checks: these entries RECORD the
     # measured recall but do not gate retrieval quality — their

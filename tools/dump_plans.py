@@ -257,17 +257,9 @@ SHOWCASE = [
     ),
     (
         "s2g_ivf_deterministic_topk",
-        "end-to-end deterministic IVF (the oracle anchor): literal-"
-        "centroid argmin folded INLINE in the scan projection (zero "
-        "joins before scoring), probe rows broadcast, per-query top-k "
-        "as WindowGroupLimit",
-    ),
-    (
-        "s2g2_ivf_deterministic_arrow",
-        "the IVF's 100-TB search path (shares s2g's oracle): one Arrow "
-        "kernel assigns cells + applies the probe mask + scores via a "
-        "single matmul per batch, emitting only batches*|Q|*k rows into "
-        "the final rank exchange",
+        "end-to-end deterministic IVF: one Arrow kernel assigns cells + "
+        "applies the probe mask + scores via a single matmul per batch, "
+        "emitting only batches*|Q|*k rows into the final rank exchange",
     ),
     (
         "s2h_ivf_delta_probe",
@@ -278,17 +270,17 @@ SHOWCASE = [
     ),
     (
         "s8c_pq_adc_deterministic_topk",
-        "end-to-end PQ/ADC under a full oracle: codebook + per-query "
-        "integer LUT broadcast, the scan side is the m-byte code table "
-        "(never vectors), partial-summed map-side before one keyed "
-        "exchange on (query, vector)",
+        "end-to-end PQ/ADC under a full oracle: one Arrow kernel "
+        "encodes each corpus batch and scores every query by m integer "
+        "LUT gathers, emitting only batches*|Q|*k rows into the final "
+        "rank exchange",
     ),
     (
         "s2i_ivfpq_deterministic_topk",
         "end-to-end IVFPQ (coarse probe x residual ADC) under a full "
-        "oracle: centroids/codebook/LUT all broadcast, residuals "
-        "subtract exactly in quantized integer space, search touches "
-        "only code rows in probed cells",
+        "oracle: one Arrow kernel assigns cells, encodes residuals in "
+        "exact int64 and gathers per-(query, cell) LUTs with non-probed "
+        "pairs masked, emitting only batches*|Q|*k rows",
     ),
 ]
 
