@@ -1,22 +1,33 @@
 """Similarity search over embedding columns (north-star surface).
 
-Embeddings are ``array<float>`` columns (embeddings table: 64-dim). Two
-paths:
+Embeddings are ``array<float>`` columns (embeddings table: 64-dim).  Every
+search kernel here -- exact, LSH, IVF, PQ, graph walk, dedup and pair
+mining -- is a candidate generator followed by ONE ranking contract:
 
-- **Brute-force cosine top-k** — the exactness baseline. Query set ×
-  corpus via broadcast join (the query set is small by construction);
-  cosine in pure higher-order functions (zip_with dot product), double
-  math; top-k per query via window. Cost O(|Q| * N) — fine when |Q| is
-  bounded; this is what verifies the ANN path's recall.
+- cosine in double precision over per-row L2 norms, NULL when either
+  norm is zero (a zero vector is never returned);
+- rounded to ``round_dp`` BEFORE ranking, so 1-ulp summation-order noise
+  cannot flip ranks across engines;
+- ranked descending (exact integer distances: ascending), ties to the
+  lowest corpus id, ``rnk`` a long <= k.
 
-- **Random-hyperplane LSH (SimHash-for-vectors)** — the scale path. Each
-  vector gets a b-bit signature (sign of dot with b deterministic
-  pseudo-random hyperplanes); candidates collide on signature bands;
-  exact cosine re-ranks candidates only. At 100 TB the all-pairs product
-  never materializes — the join key is the band signature.
+Each part of the contract has one home:
+
+- ``_side`` -- the (id, double vector, L2 norm) projection of a search
+  side, so norms are computed once per row, never per pair;
+- ``_cosine_col`` -- the rounded-cosine column over those norms, and
+  ``_np_cosine`` its numpy twin for the Arrow scorers;
+- ``_rank_topk`` -- the one top-k window.
+
+Candidates come either from a JVM join (broadcast query side x corpus,
+band collisions, probed IVF cells, graph edges) scored by higher-order
+function folds (``dot``), or from ``_map_side_candidates``: an Arrow
+``mapInPandas`` kernel that scores each corpus batch against the
+collected query matrix and keeps each query's within-batch shortlist
+(REPOSE's local top-k, globally merged by ``_rank_topk``).
 
 Hyperplane determinism: components are derived from md5(seed, plane, dim)
-mapped to [-1, 1) — reproducible across runs/engines with no RNG state.
+mapped to [-1, 1) -- reproducible across runs/engines with no RNG state.
 """
 
 from __future__ import annotations
@@ -54,6 +65,72 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(ad, bd) / denom)
 
 
+def _side(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    prefix: str,
+    *extra: Column,
+    id_as: str | None = None,
+    spread_by_id: bool = False,
+) -> DataFrame:
+    """(``{prefix}id``, ``{prefix}v`` double vector, ``*extra``,
+    ``{prefix}n`` L2 norm) -- one side of a cosine search.  ``id_as``
+    keeps a caller-visible id name; ``spread_by_id`` repairs a 1-2
+    partition scan (``parallelism.spread``) BEFORE the norm, so the norm
+    and the pair scoring run on every core."""
+    base = df.select(
+        F.col(id_col).alias(id_as or f"{prefix}id"),
+        _as_double(F.col(vec_col)).alias(f"{prefix}v"),
+        *extra,
+    )
+    if spread_by_id:
+        base = spread(base, by=id_as or f"{prefix}id")
+    return base.withColumn(f"{prefix}n", l2_norm(F.col(f"{prefix}v")))
+
+
+def _cosine_col(round_dp: int, a: str = "__q", b: str = "__c") -> Column:
+    """``cos_sim``: the rounded cosine of two ``_side`` projections
+    (prefixes ``a`` and ``b``), NULL on a zero norm."""
+    denom = F.col(f"{a}n") * F.col(f"{b}n")
+    return F.round(
+        F.when(denom > 0, dot(F.col(f"{a}v"), F.col(f"{b}v")) / denom), round_dp
+    ).alias("cos_sim")
+
+
+def _np_norms(mat: np.ndarray) -> np.ndarray:
+    return np.sqrt((mat * mat).sum(axis=1))
+
+
+def _np_cosine(dots: np.ndarray, q_norm: np.ndarray, c_norm: np.ndarray) -> np.ndarray:
+    """numpy ``_cosine_col`` before rounding: a (|Q|, batch) dot matrix
+    over precomputed norms, NaN where either norm is zero."""
+    denom = np.outer(q_norm, c_norm)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom > 0, dots / denom, np.nan)
+
+
+def _rank_topk(
+    scored: DataFrame,
+    by: str,
+    score_col: str,
+    id_col: str,
+    k: int,
+    ascending: bool = False,
+    rank_col: str = "rnk",
+) -> DataFrame:
+    """The one top-k window: per ``by``, NULL scores dropped, ordered by
+    ``score_col`` descending (``ascending`` for distances) with ties to
+    the lowest ``id_col``, ``rank_col`` a long <= k."""
+    order = F.col(score_col).asc() if ascending else F.col(score_col).desc()
+    w = Window.partitionBy(by).orderBy(order, F.col(id_col).asc())
+    return (
+        scored.where(F.col(score_col).isNotNull())
+        .withColumn(rank_col, F.row_number().over(w).cast("long"))
+        .where(F.col(rank_col) <= k)
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -65,46 +142,21 @@ def brute_force_topk(
     round_dp: int = 4,
 ) -> DataFrame:
     """Exact cosine top-k per query: broadcast(queries) x corpus -> window.
-
-    Output: (query_id, vec_id, cos_sim, rnk), rnk 1..k, deterministic
-    tie-break on corpus id. The corpus side is never shuffled — the join
-    broadcasts the query set and the window partitions by query_id (small
-    cardinality => one narrow shuffle of the scored pairs).
-
-    Norms are computed once per ROW before the join — a naive
-    ``cosine(qv, cv)`` per pair recomputes both norms |Q|x|C| times, which
-    tripled this operator's cost at bench scale."""
-    q = queries.select(
-        F.col(query_id).alias("__qid"),
-        _as_double(F.col(query_vec)).alias("__qv"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
+    Output: (query_id, vec_id, cos_sim, rnk).  The corpus side is never
+    shuffled -- the join broadcasts the query set and the window
+    partitions by query_id (one narrow shuffle of the scored pairs)."""
+    q = _side(queries, query_id, query_vec, "__q")
     # The |Q| x |C| dot products evaluate on the corpus side's
     # partitioning, and the single-row-group testdata scans arrive as
     # 1-2 partitions (measured: s32's dense stage = ONE task x 8.4 s).
     # spread() unlocks every core; no-op on real multi-partition scans.
-    c = spread(
-        corpus.select(
-            F.col(corpus_id).alias("__cid"),
-            _as_double(F.col(corpus_vec)).alias("__cv"),
-        ),
-        by="__cid",
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-    denom = F.col("__qn") * F.col("__cn")
+    c = _side(corpus, corpus_id, corpus_vec, "__c", spread_by_id=True)
     scored = F.broadcast(q).crossJoin(c).select(
         F.col("__qid").alias(query_id),
         F.col("__cid").alias(corpus_id),
-        F.round(
-            F.when(denom > 0, dot(F.col("__qv"), F.col("__cv")) / denom), round_dp
-        ).alias("cos_sim"),
+        _cosine_col(round_dp),
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc("cos_sim"), F.col(corpus_id).asc()
-    )
-    return (
-        scored.where(F.col("cos_sim").isNotNull())
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-    )
+    return _rank_topk(scored, query_id, "cos_sim", corpus_id, k)
 
 
 #: Driver-side budget for the query matrix every map-side top-k kernel
@@ -117,39 +169,34 @@ def brute_force_topk(
 _MAX_QUERY_CELLS = 8_000_000
 
 
-def _map_side_topk(
+def _map_side_candidates(
     queries: DataFrame,
     corpus: DataFrame,
-    k: int,
     make_scorer,
-    score_col: str,
-    round_dp: int | None,
     query_id: str,
     corpus_id: str,
     query_vec: str,
     corpus_vec: str,
+    shortlist: int,
+    round_dp: int | None = None,
+    score_col: str = "cos_sim",
     max_query_cells: int | None = None,
 ) -> DataFrame:
-    """The one physical plan of every Arrow search kernel: local top-k
-    per corpus batch, then a global merge (REPOSE's distributed top-k).
-    The query matrix (small by construction) is collected once and
-    closed over by a ``mapInPandas`` kernel that scores each corpus
-    Arrow batch against ALL queries and emits only each query's
-    within-batch top-k; the final window then ranks |batches| * |Q| * k
-    candidate rows instead of |Q| * N scored pairs — the one exchange is
-    the window's hash partitioning on ``query_id``.
+    """Candidate producer of every Arrow search kernel: the local half of
+    REPOSE's distributed top-k, globally merged by ``_rank_topk``.  The
+    query matrix (small by construction) is collected once and closed
+    over by a ``mapInPandas`` kernel that scores each corpus Arrow batch
+    against ALL queries and emits each query's within-batch top
+    ``shortlist`` -- |batches| * |Q| * shortlist rows reach the window's
+    one exchange instead of |Q| * N scored pairs.
 
     ``make_scorer(q_mat)`` receives the (|Q|, dim) float64 query matrix
     and returns ``score(c_mat)``, which maps a (batch, dim) float64
     corpus matrix to a (|Q|, batch) float64 score matrix, NaN where the
-    pair is not a candidate.  Two ranking contracts, both with ties to
-    the lowest corpus id:
-
-    - ``round_dp`` set: a similarity, ranked DESCENDING on the value
-      rounded to ``round_dp`` (s1's contract, so 1-ulp summation-order
-      noise cannot flip ranks), output as a rounded double;
-    - ``round_dp=None``: an exact integer distance (exact in float64
-      below 2^53), ranked ASCENDING, output as a long.
+    pair is not a candidate.  With ``round_dp`` the score is a
+    similarity, selected and output rounded (the module contract); with
+    ``round_dp=None`` it is an exact integer distance (exact in float64
+    below 2^53), selected ascending and output as a long.
 
     The query collect is BUDGETED: the driver never materializes more
     than ``max_query_cells`` (default ``_MAX_QUERY_CELLS``) float64
@@ -184,7 +231,7 @@ def _map_side_topk(
             f"collect)."
         )
     if not q_rows:
-        return corpus.sparkSession.createDataFrame([], out_schema + ", rnk long")
+        return corpus.sparkSession.createDataFrame([], out_schema)
     q_ids = np.array([r[0] for r in q_rows])
     score = make_scorer(
         np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
@@ -207,7 +254,7 @@ def _map_side_topk(
             key = np.where(np.isnan(key), np.inf, key)
             id_rank = np.argsort(np.argsort(c_ids))  # ordinal id rank (any id type)
             id_keys = np.broadcast_to(id_rank, key.shape)
-            top = np.lexsort((id_keys, key), axis=1)[:, :k]
+            top = np.lexsort((id_keys, key), axis=1)[:, :shortlist]
             qi = np.repeat(np.arange(len(q_ids)), top.shape[1])
             ci = top.ravel()
             vals = s[qi, ci]
@@ -232,13 +279,7 @@ def _map_side_topk(
         cand = cand.select(
             query_id, corpus_id, F.round(score_col, round_dp).alias(score_col)
         )
-        by_score = F.desc(score_col)
-    else:
-        by_score = F.col(score_col).asc()
-    w = Window.partitionBy(query_id).orderBy(by_score, F.col(corpus_id).asc())
-    return cand.withColumn("rnk", F.row_number().over(w).cast("long")).where(
-        F.col("rnk") <= k
-    )
+    return cand
 
 
 def brute_force_topk_arrow(
@@ -252,28 +293,23 @@ def brute_force_topk_arrow(
     round_dp: int = 4,
     max_query_cells: int = _MAX_QUERY_CELLS,
 ) -> DataFrame:
-    """Exact cosine top-k via the Arrow map-side top-k kernel
-    (``_map_side_topk``): one float64 matmul scores each corpus batch
-    against ALL queries.  Same result as ``brute_force_topk`` (pytest
-    pins equality); at 100 TB the shuffle shrinks by ~N/(batches*k),
-    the difference between a terabyte-scale and a megabyte-scale
-    exchange.  ``max_query_cells`` overrides the driver-side query
-    budget for a query set that is genuinely this large."""
+    """Exact cosine top-k via the Arrow map-side kernel: one float64
+    matmul scores each corpus batch against ALL queries.  Same result as
+    ``brute_force_topk`` (pytest pins equality); at 100 TB the shuffle
+    shrinks by ~N/(batches*k), the difference between a terabyte-scale
+    and a megabyte-scale exchange.  ``max_query_cells`` overrides the
+    driver-side query budget for a query set that is genuinely this
+    large."""
 
     def make_scorer(q_mat: np.ndarray):
-        q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
+        q_norm = _np_norms(q_mat)
+        return lambda c_mat: _np_cosine(q_mat @ c_mat.T, q_norm, _np_norms(c_mat))
 
-        def score(c_mat: np.ndarray) -> np.ndarray:
-            denom = np.outer(np.sqrt((c_mat * c_mat).sum(axis=1)), q_norm)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                return np.where(denom > 0, (c_mat @ q_mat.T) / denom, np.nan).T
-
-        return score
-
-    return _map_side_topk(
-        queries, corpus, k, make_scorer, "cos_sim", round_dp,
-        query_id, corpus_id, query_vec, corpus_vec, max_query_cells,
+    cand = _map_side_candidates(
+        queries, corpus, make_scorer, query_id, corpus_id, query_vec,
+        corpus_vec, k, round_dp, max_query_cells=max_query_cells,
     )
+    return _rank_topk(cand, query_id, "cos_sim", corpus_id, k)
 
 
 # --- random-hyperplane LSH ---------------------------------------------------
@@ -332,6 +368,43 @@ def rp_signature_pandas(dim: int, bits: int = 16, seed: str = "rp"):
     return sig
 
 
+def _banded_signatures(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    bits: int,
+    bands: int,
+) -> DataFrame:
+    """(__id, __v, __n, band, band_val) rows -- the ``_side``
+    projection plus one posexplode pass over the Arrow-computed
+    hyperplane signature.  One posexplode, not a per-band union, which
+    would re-run the signature UDF once per band (no exchange reuse
+    across branches).  Not spread: the signature UDF is one matmul per
+    Arrow batch -- the round-12 A/B read no-spread faster (2.31s vs
+    2.45s best)."""
+    band_bits = bits // bands
+    sig_udf = rp_signature_pandas(dim, bits)
+    base = _side(df, id_col, vec_col, "__", sig_udf(F.col(vec_col)).alias("__sig"))
+    band_vals = [
+        F.shiftright("__sig", b * band_bits).bitwiseAND(F.lit((1 << band_bits) - 1))
+        for b in range(bands)
+    ]
+    return base.select(
+        "__id",
+        "__v",
+        "__n",
+        F.posexplode(F.array(*band_vals)).alias("band", "band_val"),
+    )
+
+
+def _renamed(df: DataFrame, prefix: str, id_as: str | None = None) -> DataFrame:
+    """``_side``'s ``__id/__v/__n`` columns under another prefix."""
+    return df.withColumnsRenamed(
+        {"__id": id_as or f"{prefix}id", "__v": f"{prefix}v", "__n": f"{prefix}n"}
+    )
+
+
 def lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -352,38 +425,12 @@ def lsh_topk(
     (band, band_bits). Recall tuned by bits/bands (more bands = more
     candidates = higher recall); tests pin recall >= 0.5 at 16/4 on the
     synthetic corpus. Signatures via the Arrow matmul UDF (one kernel per
-    batch); candidate re-rank with per-row precomputed norms."""
-    band_bits = bits // bands
-    sig_udf = rp_signature_pandas(dim, bits)
-
-    def with_bands(df: DataFrame, id_col_: str, vec_col: str) -> DataFrame:
-        # not spread: the signature UDF is one matmul per Arrow batch —
-        # the round-12 A/B read no-spread faster (2.31s vs 2.45s best)
-        base = df.select(
-            F.col(id_col_).alias("__id"),
-            _as_double(F.col(vec_col)).alias("__v"),
-            sig_udf(F.col(vec_col)).alias("__sig"),
-        ).withColumn("__n", l2_norm(F.col("__v")))
-        band_vals = [
-            F.shiftright("__sig", b * band_bits).bitwiseAND(
-                F.lit((1 << band_bits) - 1)
-            )
-            for b in range(bands)
-        ]
-        # one posexplode pass — a per-band union would re-run the Arrow
-        # signature UDF once per band (no exchange reuse across branches)
-        return base.select(
-            "__id",
-            "__v",
-            "__n",
-            F.posexplode(F.array(*band_vals)).alias("band", "band_val"),
-        )
-
-    qb = with_bands(queries, query_id, query_vec).withColumnsRenamed(
-        {"__id": "__qid", "__v": "__qv", "__n": "__qn"}
+    batch)."""
+    qb = _renamed(
+        _banded_signatures(queries, query_id, query_vec, dim, bits, bands), "__q"
     )
-    cb = with_bands(corpus, corpus_id, corpus_vec).withColumnsRenamed(
-        {"__id": "__cid", "__v": "__cv", "__n": "__cn"}
+    cb = _renamed(
+        _banded_signatures(corpus, corpus_id, corpus_vec, dim, bits, bands), "__c"
     )
     cand = (
         F.broadcast(qb)
@@ -391,20 +438,12 @@ def lsh_topk(
         .select("__qid", "__qv", "__qn", "__cid", "__cv", "__cn")
         .dropDuplicates(["__qid", "__cid"])
     )
-    denom = F.col("__qn") * F.col("__cn")
     scored = cand.select(
         F.col("__qid").alias(query_id),
         F.col("__cid").alias(corpus_id),
-        F.round(
-            F.when(denom > 0, dot(F.col("__qv"), F.col("__cv")) / denom), round_dp
-        ).alias("cos_sim"),
+        _cosine_col(round_dp),
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col(corpus_id).asc())
-    return (
-        scored.where(F.col("cos_sim").isNotNull())
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-    )
+    return _rank_topk(scored, query_id, "cos_sim", corpus_id, k)
 
 
 def _centroid_kernels(centroids: np.ndarray, nprobe: int):
@@ -488,33 +527,20 @@ def ivf_topk(
     whose corpus table is partitioned by cell so probes prune partitions."""
     centroids = _train_centroids(corpus, corpus_vec, nlist, seed)
     probe_cells, assign_cell = _centroid_kernels(centroids, nprobe)
-
-    c = corpus.select(
-        F.col(corpus_id).alias("__cid"),
-        _as_double(F.col(corpus_vec)).alias("__cv"),
+    c = _side(
+        corpus, corpus_id, corpus_vec, "__c",
         assign_cell(F.col(corpus_vec)).alias("cell"),
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-
-    qrows = queries.select(
-        F.col(query_id).alias("__qid"),
-        _as_double(F.col(query_vec)).alias("__qv"),
+    )
+    qrows = _side(
+        queries, query_id, query_vec, "__q",
         F.explode(probe_cells(F.col(query_vec))).alias("cell"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-
-    denom = F.col("__qn") * F.col("__cn")
+    )
     scored = F.broadcast(qrows).join(c, "cell").select(
         F.col("__qid").alias(query_id),
         F.col("__cid").alias(corpus_id),
-        F.round(
-            F.when(denom > 0, dot(F.col("__qv"), F.col("__cv")) / denom), round_dp
-        ).alias("cos_sim"),
+        _cosine_col(round_dp),
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col(corpus_id).asc())
-    return (
-        scored.where(F.col("cos_sim").isNotNull())
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-    )
+    return _rank_topk(scored, query_id, "cos_sim", corpus_id, k)
 
 
 def normalized_embeddings(
@@ -531,9 +557,7 @@ def normalized_embeddings(
     the optimized plan keeps ONE aggregate fold; a single-expression
     form would re-evaluate the norm subtree per element (Catalyst does
     no CSE inside lambda bodies). Rounded output for oracle stability."""
-    staged = corpus.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("__v")
-    ).withColumn("__n", l2_norm(F.col("__v")))
+    staged = _side(corpus, id_col, vec_col, "__", id_as=id_col)
     return staged.select(
         id_col,
         F.when(
@@ -850,12 +874,11 @@ def ivf_deterministic_topk(
 
     Coarse quantizer = the modular-representative centroid table (the
     trained-KMeans variants swap the table, reuse the geometry).  In the
-    map-side top-k kernel (``_map_side_topk``) each corpus batch gets
+    map-side kernel (``_map_side_candidates``) each corpus batch gets
     its cells by an int64 numpy argmin (integer distances, lowest-cell
-    ties — bit-identical to ``quantized_cell_assignments``), the
-    per-query probe masks non-probed cells before one scoring matmul,
-    and ranking is exact cosine under s1's rounded-rank + id tie-break
-    contract.  The per-pair cost is a matmul lane, ~nprobe/nlist of the
+    ties — bit-identical to ``quantized_cell_assignments``) and the
+    per-query probe masks non-probed cells out of one scoring matmul.
+    The per-pair cost is a matmul lane, ~nprobe/nlist of the
     pairs are candidates, and the one exchange is batches*|Q|*k rows.
 
     ``candidate_filter`` (a predicate over corpus columns) enables
@@ -867,25 +890,23 @@ def ivf_deterministic_topk(
     cents = _modular_centroids(corpus, nlist, quantize, corpus_vec, corpus_id)
 
     def make_scorer(q_mat: np.ndarray):
-        q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
+        q_norm = _np_norms(q_mat)
         probe = _probe_mask(_quantize(q_mat, quantize), cents, nprobe)
 
         def score(c_mat: np.ndarray) -> np.ndarray:
             cells = _sq_dists(_quantize(c_mat, quantize), cents).argmin(axis=1)
-            denom = np.outer(q_norm, np.sqrt((c_mat * c_mat).sum(axis=1)))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                return np.where(
-                    probe[:, cells] & (denom > 0), (q_mat @ c_mat.T) / denom, np.nan
-                )
+            cos = _np_cosine(q_mat @ c_mat.T, q_norm, _np_norms(c_mat))
+            return np.where(probe[:, cells], cos, np.nan)
 
         return score
 
     if candidate_filter is not None:
         corpus = corpus.where(candidate_filter)  # after the centroids
-    return _map_side_topk(
-        queries, corpus, k, make_scorer, "cos_sim", round_dp,
-        query_id, corpus_id, query_vec, corpus_vec,
+    cand = _map_side_candidates(
+        queries, corpus, make_scorer, query_id, corpus_id, query_vec,
+        corpus_vec, k, round_dp,
     )
+    return _rank_topk(cand, query_id, "cos_sim", corpus_id, k)
 
 
 def quantized_probe_cells(
@@ -916,12 +937,9 @@ def quantized_probe_cells(
             quantized_sqdist(F.col("__xq"), F.col("__cq")).alias("d2q"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy("d2q", "cell")
-    return (
-        scored.withColumn("probe_rank", F.row_number().over(w).cast("long"))
-        .where(F.col("probe_rank") <= nprobe)
-        .select(id_col, "probe_rank", "cell", "d2q")
-    )
+    return _rank_topk(
+        scored, id_col, "d2q", "cell", nprobe, ascending=True, rank_col="probe_rank"
+    ).select(id_col, "probe_rank", "cell", "d2q")
 
 
 def quantized_pq_slice_scores(
@@ -1026,12 +1044,12 @@ def pq_adc_deterministic_topk(
     summed table lookups) run against the deterministic modular
     codebook in exact integer arithmetic, hence a FULL DuckDB oracle.
     Output (query_id, vec_id, adc_d2q, rnk) — rnk by ascending ADC
-    distance, ties to the lowest corpus id (total order: deterministic
-    even when two vectors share all m codes, which IS the tie case PQ
-    creates by construction).
+    distance (the lowest-id tie-break makes it total even when two
+    vectors share all m codes, which IS the tie case PQ creates by
+    construction).
 
-    The production PQ serving loop in the map-side top-k kernel
-    (``_map_side_topk``): each corpus batch is encoded with one int64
+    The production PQ serving loop in the map-side kernel
+    (``_map_side_candidates``): each corpus batch is encoded with one int64
     einsum (first-occurrence argmin = lowest code, bit-identical to
     ``quantized_pq_codes``), then ADC for ALL queries is m table
     GATHERS (``LUT[:, j, codes[:, j]]``).  The two collects are the
@@ -1063,10 +1081,11 @@ def pq_adc_deterministic_topk(
 
         return score
 
-    return _map_side_topk(
-        queries, corpus, k, make_scorer, "adc_d2q", None,
-        query_id, corpus_id, query_vec, corpus_vec,
+    cand = _map_side_candidates(
+        queries, corpus, make_scorer, query_id, corpus_id, query_vec,
+        corpus_vec, k, score_col="adc_d2q",
     )
+    return _rank_topk(cand, query_id, "adc_d2q", corpus_id, k, ascending=True)
 
 
 def ivfpq_deterministic_topk(
@@ -1099,10 +1118,10 @@ def ivfpq_deterministic_topk(
     codebook, ties to the lowest code; (5) queries probe their nprobe
     nearest cells, with one residual LUT per (query, cell); (6) ADC =
     m gathers of those LUTs, non-probed (query, vector) pairs masked
-    out, ranked ascending with the vec_id tie-break made total.
+    out, ranked ascending.
 
-    Stages 1, 2 and 4 run per corpus batch inside the map-side top-k
-    kernel (``_map_side_topk``).  Driver-side model artifacts are
+    Stages 1, 2 and 4 run per corpus batch inside the map-side kernel
+    (``_map_side_candidates``).  Driver-side model artifacts are
     bounded: centroids (nlist x dim), the rep residual codebook
     (m x ksub x dim/m), and the |Q| x nlist x m x ksub int64 LUTs —
     computing every cell in ONE einsum and masking beats a |Q| x nprobe
@@ -1137,10 +1156,11 @@ def ivfpq_deterministic_topk(
 
         return score
 
-    return _map_side_topk(
-        queries, corpus, k, make_scorer, "adc_d2q", None,
-        query_id, corpus_id, query_vec, corpus_vec,
+    cand = _map_side_candidates(
+        queries, corpus, make_scorer, query_id, corpus_id, query_vec,
+        corpus_vec, k, score_col="adc_d2q",
     )
+    return _rank_topk(cand, query_id, "adc_d2q", corpus_id, k, ascending=True)
 
 
 def modular_pq_codebook(
@@ -1182,6 +1202,45 @@ def modular_pq_codebook(
     )
 
 
+# --- materialized IVF index: one on-disk layout ------------------------------
+#   {index_path}/centroids                          (cell, centroid), one file
+#   {index_path}/corpus/cell=<c>                    (vec_id, v, n)
+#   {index_path}/corpus_delta/batch=<b>/cell=<c>    (vec_id, v, n)
+
+
+def _write_inverted_lists(
+    df: DataFrame, corpus_id: str, corpus_vec: str, cell: Column, path: str
+) -> None:
+    """(vec_id, v, n) rows partitioned by ``cell`` -- the inverted lists
+    as physical partitions, so a probe is partition pruning, not a scan.
+    Overwrite makes a replayed batch write exactly-once."""
+    (
+        _side(df, corpus_id, corpus_vec, "", cell.alias("cell"), id_as="vec_id")
+        .write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(path)
+    )
+
+
+def _write_centroids(spark, index_path: str, cells) -> None:
+    """The coarse-quantizer table from (cell, centroid) pairs."""
+    spark.createDataFrame(
+        [(int(c), [float(x) for x in v]) for c, v in cells],
+        "cell int, centroid array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
+
+
+def _read_centroids(spark, index_path: str) -> list:
+    """The frozen coarse quantizer's rows, sorted by cell (control plane:
+    nlist x dim)."""
+    rows = spark.read.parquet(f"{index_path}/centroids").collect()
+    return sorted(rows, key=lambda r: r["cell"])
+
+
+def _centroid_matrix(spark, index_path: str) -> np.ndarray:
+    return np.array([r["centroid"] for r in _read_centroids(spark, index_path)])
+
+
 def ivf_build_index(
     corpus: DataFrame,
     index_path: str,
@@ -1203,25 +1262,13 @@ def ivf_build_index(
     docstring promises: assignment is a single Arrow-kernel pass over the
     corpus and one partitioned write; no shuffle beyond the write's own
     partitioning."""
-    spark = corpus.sparkSession
     centroids = _train_centroids(corpus, corpus_vec, nlist, seed)
     _, assign_cell = _centroid_kernels(centroids, nprobe=1)
-    (
-        corpus.select(
-            F.col(corpus_id).alias("vec_id"),
-            _as_double(F.col(corpus_vec)).alias("v"),
-            assign_cell(F.col(corpus_vec)).alias("cell"),
-        )
-        .withColumn("n", l2_norm(F.col("v")))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/corpus")
+    _write_inverted_lists(
+        corpus, corpus_id, corpus_vec, assign_cell(F.col(corpus_vec)),
+        f"{index_path}/corpus",
     )
-    cdf = spark.createDataFrame(
-        [(i, c.tolist()) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    )
-    cdf.coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
+    _write_centroids(corpus.sparkSession, index_path, enumerate(centroids))
 
 
 def ivf_index_append_batch(
@@ -1245,22 +1292,11 @@ def ivf_index_append_batch(
     historical corpus.  Caller contract: batch ids are disjoint from
     already-indexed ids (the ingest watermark guarantees this upstream,
     same as ``prep.prep_index_append``)."""
-    spark = batch_df.sparkSession
-    cent_rows = spark.read.parquet(f"{index_path}/centroids").collect()
-    centroids = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])]
-    )
+    centroids = _centroid_matrix(batch_df.sparkSession, index_path)
     _, assign_cell = _centroid_kernels(centroids, nprobe=1)
-    (
-        batch_df.select(
-            F.col(corpus_id).alias("vec_id"),
-            _as_double(F.col(corpus_vec)).alias("v"),
-            assign_cell(F.col(corpus_vec)).alias("cell"),
-        )
-        .withColumn("n", l2_norm(F.col("v")))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/corpus_delta/batch={int(batch_id)}")
+    _write_inverted_lists(
+        batch_df, corpus_id, corpus_vec, assign_cell(F.col(corpus_vec)),
+        f"{index_path}/corpus_delta/batch={int(batch_id)}",
     )
 
 
@@ -1400,6 +1436,33 @@ def ivf_compact_index(spark, index_path: str) -> None:
     shutil.rmtree(old)
 
 
+def _probe_ivf_index(
+    queries: DataFrame,
+    index_path: str,
+    cells: Column,
+    k: int,
+    query_id: str,
+    query_vec: str,
+    round_dp: int,
+    as_of: int | None,
+) -> DataFrame:
+    """Probe body shared by both IVF index kinds, given ``cells`` (each
+    query's probe-cell array).  The distinct probed cells are collected
+    driver-side (bounded by nlist -- the watermark-lookup class of
+    collect) so the corpus read carries a LITERAL ``cell IN (...)``
+    predicate: static partition pruning on both the base and the delta
+    side of the union, visible as ``PartitionFilters`` in the scan."""
+    qrows = _side(queries, query_id, query_vec, "__q", F.explode(cells).alias("cell"))
+    probed = sorted({r["cell"] for r in qrows.select("cell").distinct().collect()})
+    c = _read_ivf_corpus(queries.sparkSession, index_path, as_of=as_of).where(
+        F.col("cell").isin([int(x) for x in probed])
+    )
+    scored = F.broadcast(qrows).join(c, "cell").select(
+        F.col("__qid").alias(query_id), "vec_id", _cosine_col(round_dp, "__q", "")
+    )
+    return _rank_topk(scored, query_id, "cos_sim", "vec_id", k)
+
+
 def ivf_probe_topk(
     queries: DataFrame,
     index_path: str,
@@ -1410,48 +1473,16 @@ def ivf_probe_topk(
     round_dp: int = 4,
     as_of: int | None = None,
 ) -> DataFrame:
-    """Stage 2: probe a prebuilt IVF index with partition pruning.
-
-    The probe cells of the (small, by construction) query set are computed
-    driver-side — a control-plane collect like the watermark lookup — so
-    the corpus read carries a LITERAL ``cell IN (...)`` predicate: static
-    partition pruning, visible as ``PartitionFilters`` in the scan node.
-    Only ~|cells probed|/nlist of the corpus is ever read, which is the
-    entire point of the inverted-file layout at 100 TB."""
-    spark = queries.sparkSession
-    cent_rows = spark.read.parquet(f"{index_path}/centroids").collect()
-    centroids = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])]
+    """Stage 2: probe a prebuilt IVF index with partition pruning (each
+    query's ``nprobe`` nearest trained centroids).  Only ~|cells
+    probed|/nlist of the corpus is ever read, which is the entire point
+    of the inverted-file layout at 100 TB."""
+    probe_cells, _ = _centroid_kernels(
+        _centroid_matrix(queries.sparkSession, index_path), nprobe
     )
-    probe_cells, _ = _centroid_kernels(centroids, nprobe)
-
-    qrows = (
-        queries.select(
-            F.col(query_id).alias("__qid"),
-            _as_double(F.col(query_vec)).alias("__qv"),
-            F.explode(probe_cells(F.col(query_vec))).alias("cell"),
-        )
-        .withColumn("__qn", l2_norm(F.col("__qv")))
-    )
-    # control-plane collect of the distinct probed cells (bounded by nlist)
-    probed = sorted({r["cell"] for r in qrows.select("cell").distinct().collect()})
-
-    c = _read_ivf_corpus(spark, index_path, as_of=as_of).where(
-        F.col("cell").isin([int(x) for x in probed])
-    )
-    denom = F.col("__qn") * F.col("n")
-    scored = F.broadcast(qrows).join(c, "cell").select(
-        F.col("__qid").alias(query_id),
-        "vec_id",
-        F.round(
-            F.when(denom > 0, dot(F.col("__qv"), F.col("v")) / denom), round_dp
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col("vec_id").asc())
-    return (
-        scored.where(F.col("cos_sim").isNotNull())
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
+    return _probe_ivf_index(
+        queries, index_path, probe_cells(F.col(query_vec)), k,
+        query_id, query_vec, round_dp, as_of,
     )
 
 
@@ -1474,32 +1505,23 @@ def ivf_det_build_index(
     ``ivf_deterministic_topk`` search over base ∪ delta — the full
     DuckDB oracle covers the whole materialized lifecycle, while the
     trained-KMeans build keeps the recall gates."""
-    spark = corpus.sparkSession
-    cent_rows = modular_representatives(
-        corpus, nlist=nlist, vec_col=corpus_vec, id_col=corpus_id
-    ).collect()  # control-plane: nlist x dim, the frozen quantizer
+    cent_rows = sorted(
+        modular_representatives(
+            corpus, nlist=nlist, vec_col=corpus_vec, id_col=corpus_id
+        ).collect(),  # control-plane: nlist x dim, the frozen quantizer
+        key=lambda r: r["cell"],
+    )
     cells = _quantized_cell_structs(
         _as_double(F.col(corpus_vec)), cent_rows, quantize
     )
-    (
-        corpus.select(
-            F.col(corpus_id).alias("vec_id"),
-            _as_double(F.col(corpus_vec)).alias("v"),
-            F.array_min(cells)["cell"].alias("cell"),
-        )
-        .withColumn("n", l2_norm(F.col("v")))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/corpus")
+    _write_inverted_lists(
+        corpus, corpus_id, corpus_vec, F.array_min(cells)["cell"],
+        f"{index_path}/corpus",
     )
-    cdf = spark.createDataFrame(
-        [
-            (int(r["cell"]), [float(x) for x in r["centroid"]])
-            for r in sorted(cent_rows, key=lambda r: r["cell"])
-        ],
-        "cell int, centroid array<double>",
+    _write_centroids(
+        corpus.sparkSession, index_path,
+        [(r["cell"], r["centroid"]) for r in cent_rows],
     )
-    cdf.coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
 
 
 def ivf_det_append_batch(
@@ -1518,21 +1540,14 @@ def ivf_det_append_batch(
     and the same reader (``_read_ivf_corpus``) / compactor
     (``ivf_compact_index``) as the trained form — the layout is
     kernel-agnostic."""
-    spark = batch_df.sparkSession
-    cent_rows = spark.read.parquet(f"{index_path}/centroids").collect()
     cells = _quantized_cell_structs(
-        _as_double(F.col(corpus_vec)), cent_rows, quantize
+        _as_double(F.col(corpus_vec)),
+        _read_centroids(batch_df.sparkSession, index_path),
+        quantize,
     )
-    (
-        batch_df.select(
-            F.col(corpus_id).alias("vec_id"),
-            _as_double(F.col(corpus_vec)).alias("v"),
-            F.array_min(cells)["cell"].alias("cell"),
-        )
-        .withColumn("n", l2_norm(F.col("v")))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/corpus_delta/batch={int(batch_id)}")
+    _write_inverted_lists(
+        batch_df, corpus_id, corpus_vec, F.array_min(cells)["cell"],
+        f"{index_path}/corpus_delta/batch={int(batch_id)}",
     )
 
 
@@ -1550,47 +1565,20 @@ def ivf_det_probe_topk(
     """Deterministic twin of ``ivf_probe_topk``: probe a materialized
     deterministic index (base + any delta batches) with static partition
     pruning.  Probe-set selection is the integer-exact nprobe argmin
-    against the frozen centroid table; the distinct probed cells are
-    collected driver-side (bounded by nlist — the watermark-lookup class
-    of collect) so the corpus read carries a literal ``cell IN (...)``
-    partition filter on BOTH the base and the delta side of the union.
-    Scoring and ranking follow s1's exact-cosine rounded-rank + id
-    tie-break contract, so the result is bit-equal to
+    against the frozen centroid table, so the result is bit-equal to
     ``ivf_deterministic_topk`` over the same total corpus — one shared
     oracle value-checks the inline search, the materialized build, the
     frozen-quantizer append, and this probe."""
-    spark = queries.sparkSession
-    cent_rows = spark.read.parquet(f"{index_path}/centroids").collect()
     qcells = _quantized_cell_structs(
-        _as_double(F.col(query_vec)), cent_rows, quantize
+        _as_double(F.col(query_vec)),
+        _read_centroids(queries.sparkSession, index_path),
+        quantize,
     )
-    qrows = queries.select(
-        F.col(query_id).alias("__qid"),
-        _as_double(F.col(query_vec)).alias("__qv"),
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(qcells), 1, nprobe), lambda s: s["cell"]
-            )
-        ).alias("cell"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-    probed = sorted({r["cell"] for r in qrows.select("cell").distinct().collect()})
-
-    c = _read_ivf_corpus(spark, index_path, as_of=as_of).where(
-        F.col("cell").isin([int(x) for x in probed])
+    nearest = F.transform(
+        F.slice(F.array_sort(qcells), 1, nprobe), lambda st: st["cell"]
     )
-    denom = F.col("__qn") * F.col("n")
-    scored = F.broadcast(qrows).join(c, "cell").select(
-        F.col("__qid").alias(query_id),
-        "vec_id",
-        F.round(
-            F.when(denom > 0, dot(F.col("__qv"), F.col("v")) / denom), round_dp
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col("vec_id").asc())
-    return (
-        scored.where(F.col("cos_sim").isNotNull())
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
+    return _probe_ivf_index(
+        queries, index_path, nearest, k, query_id, query_vec, round_dp, as_of
     )
 
 
@@ -1605,41 +1593,17 @@ def embedding_near_duplicates(
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via signature-band blocking +
     exact-cosine verify (id_a < id_b). The corpus never self-crossJoins."""
-    band_bits = bits // bands
-    sig_udf = rp_signature_pandas(dim, bits)
-    base = corpus.select(
-        F.col(corpus_id).alias("id"),
-        _as_double(F.col(corpus_vec)).alias("v"),
-        sig_udf(F.col(corpus_vec)).alias("sig"),
-    ).withColumn("n", l2_norm(F.col("v")))
-    band_vals = [
-        F.shiftright("sig", b * band_bits).bitwiseAND(F.lit((1 << band_bits) - 1))
-        for b in range(bands)
-    ]
-    parts = base.select(
-        "id", "v", "n", F.posexplode(F.array(*band_vals)).alias("band", "band_val")
-    )
-    left = parts.select(
-        "band", "band_val",
-        F.col("id").alias("id_a"), F.col("v").alias("v_a"), F.col("n").alias("n_a"),
-    )
-    right = parts.select(
-        "band", "band_val",
-        F.col("id").alias("id_b"), F.col("v").alias("v_b"), F.col("n").alias("n_b"),
-    )
+    parts = _banded_signatures(corpus, corpus_id, corpus_vec, dim, bits, bands)
+    left = _renamed(parts, "__a", id_as="id_a")
+    right = _renamed(parts, "__b", id_as="id_b")
     cand = (
         left.join(right, ["band", "band_val"])
         .where(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    denom = F.col("n_a") * F.col("n_b")
-    return cand.select(
-        "id_a",
-        "id_b",
-        F.round(
-            F.when(denom > 0, dot(F.col("v_a"), F.col("v_b")) / denom), 4
-        ).alias("cos_sim"),
-    ).where(F.col("cos_sim") >= threshold)
+    return cand.select("id_a", "id_b", _cosine_col(4, "__a", "__b")).where(
+        F.col("cos_sim") >= threshold
+    )
 
 
 # --- SemDeDup: semantic dedup via cluster + in-cluster cosine ----------------
@@ -1671,36 +1635,14 @@ def semdedup(
     work is N^2/C, the SemDeDup trade exactly — cluster count grows with
     the corpus (the paper uses 50k clusters for LAION) so in-cluster
     blocks stay bounded; the join shuffles each side once on the cluster
-    id and nothing is ever all-pairs across clusters. Norms are computed
-    once per row before the join, not per pair."""
+    id and nothing is ever all-pairs across clusters."""
     sig = rp_signature_pandas(dim, bits=cluster_bits, seed=seed)
-    base = (
-        corpus.select(
-            F.col(id_col).alias("__id"),
-            _as_double(F.col(vec_col)).alias("__v"),
-            sig(F.col(vec_col)).alias("cluster"),
-        )
-        .withColumn("__n", l2_norm(F.col("__v")))
-    )
-    a = base.select(
-        F.col("__id").alias("id_a"), "cluster",
-        F.col("__v").alias("__va"), F.col("__n").alias("__na"),
-    )
-    b = base.select(
-        F.col("__id").alias("id_b"), "cluster",
-        F.col("__v").alias("__vb"), F.col("__n").alias("__nb"),
-    )
-    denom = F.col("__na") * F.col("__nb")
+    base = _side(corpus, id_col, vec_col, "__", sig(F.col(vec_col)).alias("cluster"))
     dropped = (
-        a.join(b, "cluster")
+        _renamed(base, "__a", id_as="id_a")
+        .join(_renamed(base, "__b", id_as="id_b"), "cluster")
         .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            F.col("id_b"),
-            F.round(
-                F.when(denom > 0, dot(F.col("__va"), F.col("__vb")) / denom),
-                round_dp,
-            ).alias("cos_sim"),
-        )
+        .select(F.col("id_b"), _cosine_col(round_dp, "__a", "__b"))
         .where(F.col("cos_sim") >= threshold)
         .select(F.col("id_b").alias("__id"))
         .distinct()
@@ -1772,9 +1714,8 @@ def sq8_topk(
     the scale win is the 4x-smaller corpus scan when codes are
     materialized; here quantization is inline and deterministic, so the
     entire path has a full DuckDB oracle (unlike trained-codebook PQ).
-    Scoring goes through the Arrow map-side-top-k kernel (same
-    rounded-rank contract as the HOF form — the s1/s1b equivalence
-    argument), with quantize+reconstruct still a JVM-side projection."""
+    Scoring goes through ``brute_force_topk_arrow``, with
+    quantize+reconstruct still a JVM-side projection."""
     mins, maxs = sq8_stats(corpus, dim, vec_col=corpus_vec)
     # not spread (round-12 A/B): the dequant projection is cheap per row
     # and the downstream Arrow kernel prefers few big batches — s7 read
@@ -1831,26 +1772,31 @@ def pq_encode_udf(codebooks: np.ndarray):
     (vs 4*dim for float32 — 32x smaller at dim=64, m=8)."""
     from pyspark.sql.functions import pandas_udf
 
-    m, ksub, dsub = codebooks.shape
-
     @pandas_udf("array<int>")
     def encode(vecs: pd.Series) -> pd.Series:
         mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
         if mat.size == 0:
             return pd.Series([], dtype=object)
-        codes = np.empty((len(mat), m), dtype=np.int32)
-        for j in range(m):
-            sub = mat[:, j * dsub : (j + 1) * dsub]
-            cent = codebooks[j]
-            d2 = (
-                (sub * sub).sum(1, keepdims=True)
-                - 2 * (sub @ cent.T)
-                + (cent * cent).sum(1)
-            )
-            codes[:, j] = d2.argmin(axis=1)
-        return pd.Series([row.tolist() for row in codes])
+        return pd.Series([row.tolist() for row in _pq_encode(mat, codebooks)])
 
     return encode
+
+
+def _pq_encode(mat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(rows, m) int32 codes: per subspace, the nearest codeword by one
+    distance matmul (first-occurrence argmin = lowest code)."""
+    m, _, dsub = codebooks.shape
+    codes = np.empty((len(mat), m), dtype=np.int32)
+    for j in range(m):
+        sub = mat[:, j * dsub : (j + 1) * dsub]
+        cent = codebooks[j]
+        d2 = (
+            (sub * sub).sum(1, keepdims=True)
+            - 2 * (sub @ cent.T)
+            + (cent * cent).sum(1)
+        )
+        codes[:, j] = d2.argmin(axis=1)
+    return codes
 
 
 def pq_topk(
@@ -1869,21 +1815,18 @@ def pq_topk(
     refine: int = 4,
 ) -> DataFrame:
     """PQ asymmetric-distance search with exact refine (the FAISS
-    IVFADC+refine recipe): full-precision queries vs m-byte codes. Per
-    query a lookup table LUT[j][c] = dot(q_subj, centroid_jc) turns
-    scoring into m table gathers per corpus vector — no float corpus scan
-    in the shortlist pass, only the code table. Estimated cosine =
+    IVFADC+refine recipe): full-precision queries vs m-byte codes. Each
+    corpus batch is encoded in the map-side kernel (``_pq_encode``) and
+    a per-query lookup table LUT[j][c] = dot(q_subj, centroid_jc) turns
+    scoring into m table gathers per corpus vector. Estimated cosine =
     sum_j LUT[j][code_j] / (|q| * |x_hat|), with |x_hat| reconstructed
     from the codes.
 
     ADC estimates are noisy where true neighbors are near-ties, so the
-    kernel emits a refine*k shortlist per (query, batch) and the final
-    ranking re-scores the shortlist with EXACT cosines — a broadcast-
-    shortlist semi-join against the corpus, touching only candidate rows.
-    ``refine=0`` ranks raw ADC scores directly.
-
-    Same map-side top-k shape as ``brute_force_topk_arrow``: the exchange
-    is batches*|Q|*refine*k rows. Trained codebooks make shortlist
+    map-side kernel (``_map_side_candidates``) emits a refine*k
+    shortlist per (query, batch) and ``exact_rerank`` re-scores it with
+    EXACT cosines, touching only candidate rows.  ``refine=0`` ranks raw
+    ADC scores directly.  Trained codebooks make shortlist
     membership seed-dependent => rows-only driver check + recall gate in
     pytest (the deterministic-quantizer twin with a full oracle is
     ``sq8_topk``)."""
@@ -1891,88 +1834,34 @@ def pq_topk(
         corpus, dim, m=m, ksub=ksub, corpus_vec=corpus_vec,
         corpus_id=corpus_id, seed=seed,
     )
-    _, _, dsub = codebooks.shape
-    encode = pq_encode_udf(codebooks)
-
-    id_type = dict(queries.dtypes)[query_id]
-    cid_type = dict(corpus.dtypes)[corpus_id]
-    q_rows = queries.select(query_id, query_vec).collect()
-    if not q_rows:
-        schema = f"{query_id} {id_type}, {corpus_id} {cid_type}, cos_sim double, rnk long"
-        return corpus.sparkSession.createDataFrame([], schema)
-    q_ids = [r[0] for r in q_rows]
-    q_mat = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    # LUT[q, j, c] = dot(q_subj, centroid_jc)
-    lut = np.einsum("qjd,jcd->qjc", q_mat.reshape(len(q_ids), m, dsub), codebooks)
+    dsub = codebooks.shape[2]
     # reconstructed-norm contribution per (j, c): |centroid_jc|^2
     cent_sq = (codebooks * codebooks).sum(axis=2)  # (m, ksub)
 
-    out_schema = f"{query_id} {id_type}, {corpus_id} {cid_type}, cos_sim double"
+    def make_scorer(q_mat: np.ndarray):
+        q_norm = _np_norms(q_mat)
+        # LUT[q, j, c] = dot(q_subj, centroid_jc)
+        lut = np.einsum("qjd,jcd->qjc", q_mat.reshape(len(q_mat), m, dsub), codebooks)
 
-    def kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf[corpus_id].to_numpy()
-            codes = np.array([np.asarray(c, dtype=np.int64) for c in pdf["__codes"]])
-            j_idx = np.arange(m)
-            # ADC inner products: gather LUT along the code axis, (Q, batch)
-            ip = np.stack([lut[:, j, codes[:, j]] for j in range(m)]).sum(axis=0)
-            xhat_norm = np.sqrt(cent_sq[j_idx, codes].sum(axis=1))  # (batch,)
-            denom = np.outer(q_norm, xhat_norm)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom > 0, ip / denom, np.nan)  # (Q, batch)
-            sims_r = np.round(np.nan_to_num(sims, nan=-2.0), round_dp)
-            kk = min(max(k, refine * k), len(c_ids))
-            id_rank = np.argsort(np.argsort(c_ids))
-            id_keys = np.broadcast_to(id_rank, (len(q_ids), len(c_ids)))
-            order = np.lexsort((id_keys, -sims_r), axis=1)
-            rows = []
-            for qi in range(len(q_ids)):
-                for ci in order[qi, :kk]:
-                    s = sims[qi, ci]
-                    if not np.isnan(s):
-                        rows.append((q_ids[qi], c_ids[ci], float(s)))
-            yield pd.DataFrame(rows, columns=[query_id, corpus_id, "cos_sim"])
+        def score(c_mat: np.ndarray) -> np.ndarray:
+            codes = _pq_encode(c_mat, codebooks)
+            # ADC inner products: m LUT gathers along the code axis
+            ip = sum(lut[:, j, codes[:, j]] for j in range(m))
+            xhat_norm = np.sqrt(cent_sq[np.arange(m), codes].sum(axis=1))
+            return _np_cosine(ip, q_norm, xhat_norm)
 
-    codes_df = corpus.select(
-        F.col(corpus_id), encode(F.col(corpus_vec)).alias("__codes")
+        return score
+
+    cand = _map_side_candidates(
+        queries, corpus, make_scorer, query_id, corpus_id, query_vec,
+        corpus_vec, max(k, refine * k), round_dp,
     )
-    cand = codes_df.mapInPandas(kernel, out_schema)
     if refine:
-        # exact re-rank of the shortlist: broadcast the candidate pairs,
-        # semi-join-shaped BHJ against the corpus so only shortlisted rows
-        # carry their full vectors into scoring
-        qv = queries.select(
-            F.col(query_id), _as_double(F.col(query_vec)).alias("__qv")
-        ).withColumn("__qn", l2_norm(F.col("__qv")))
-        cv = corpus.select(
-            F.col(corpus_id), _as_double(F.col(corpus_vec)).alias("__cv")
-        ).withColumn("__cn", l2_norm(F.col("__cv")))
-        denom = F.col("__qn") * F.col("__cn")
-        scored = (
-            cv.join(F.broadcast(cand.select(query_id, corpus_id)), corpus_id)
-            .join(F.broadcast(qv), query_id)
-            .select(
-                query_id,
-                corpus_id,
-                F.round(
-                    F.when(denom > 0, dot(F.col("__qv"), F.col("__cv")) / denom),
-                    round_dp,
-                ).alias("cos_sim"),
-            )
-            .where(F.col("cos_sim").isNotNull())
+        return exact_rerank(
+            cand, queries, corpus, k, query_id, corpus_id, query_vec,
+            corpus_vec, round_dp,
         )
-    else:
-        scored = cand.select(
-            query_id, corpus_id, F.round("cos_sim", round_dp).alias("cos_sim")
-        )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col(corpus_id).asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-    )
+    return _rank_topk(cand, query_id, "cos_sim", corpus_id, k)
 
 
 # --- IVF-PQ: cell-partitioned index over residual PQ codes -------------------
@@ -2043,7 +1932,6 @@ def ivfpq_build_index(
     )
     resid = sx - centroids[d2.argmin(axis=1)]
     codebooks = _pq_lloyds(resid, m, ksub, iters=10, seed=seed)
-    dsub = dim // m
 
     from pyspark.sql.functions import pandas_udf
 
@@ -2052,17 +1940,7 @@ def ivfpq_build_index(
         mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
         if mat.size == 0:
             return pd.Series([], dtype=object)
-        r = mat - centroids[cells.to_numpy()]
-        codes = np.empty((len(mat), m), dtype=np.int32)
-        for j in range(m):
-            sub = r[:, j * dsub : (j + 1) * dsub]
-            cb = codebooks[j]
-            dd = (
-                (sub * sub).sum(1, keepdims=True)
-                - 2 * (sub @ cb.T)
-                + (cb * cb).sum(1)
-            )
-            codes[:, j] = dd.argmin(axis=1)
+        codes = _pq_encode(mat - centroids[cells.to_numpy()], codebooks)
         return pd.Series([row.tolist() for row in codes])
 
     (
@@ -2076,10 +1954,7 @@ def ivfpq_build_index(
         .partitionBy("cell")
         .parquet(f"{index_path}/codes")
     )
-    spark.createDataFrame(
-        [(i, c.tolist()) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
+    _write_centroids(spark, index_path, enumerate(centroids))
     spark.createDataFrame(
         [
             (j, c, codebooks[j, c].tolist())
@@ -2108,16 +1983,13 @@ def ivfpq_probe_topk(
     centroid[cell] + decode(codes) per Arrow batch, one matmul against
     the collected query matrix, map-side shortlist of refine_mult*k per
     (query, batch). With ``refine_corpus`` the shortlist is exactly
-    re-scored against true vectors fetched by id (the FAISS refine
-    stage, which stores full vectors beside the index for this purpose);
+    re-scored by ``exact_rerank`` against true vectors fetched by id (the
+    FAISS refine stage, which stores full vectors beside the index);
     without it the ADC estimates rank directly. The probe never reads a
     float vector outside the refine point-lookup — the scan cost is m
     bytes/vector over nprobe/nlist of the corpus."""
     spark = queries.sparkSession
-    cent_rows = spark.read.parquet(f"{index_path}/centroids").collect()
-    centroids = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])]
-    )
+    centroids = _centroid_matrix(spark, index_path)
     cb_rows = spark.read.parquet(f"{index_path}/codebooks").collect()
     m = 1 + max(r["subspace"] for r in cb_rows)
     ksub = 1 + max(r["code"] for r in cb_rows)
@@ -2127,94 +1999,65 @@ def ivfpq_probe_topk(
         codebooks[r["subspace"], r["code"]] = r["vec"]
 
     probe_cells, _ = _centroid_kernels(centroids, nprobe)
-    q_rows = queries.select(query_id, query_vec).collect()
-    id_type = dict(queries.dtypes)[query_id]
-    q_ids = [r[0] for r in q_rows]
-    q_mat = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-
     qcells = queries.select(
         F.explode(probe_cells(F.col(query_vec))).alias("cell")
     )
     probed = sorted({r["cell"] for r in qcells.distinct().collect()})
-    codes_df = spark.read.parquet(f"{index_path}/codes").where(
-        F.col("cell").isin([int(x) for x in probed])
+    # each row's cell rides in front of its codes: one decoded matrix
+    codes_df = (
+        spark.read.parquet(f"{index_path}/codes")
+        .where(F.col("cell").isin([int(x) for x in probed]))
+        .select("vec_id", F.concat(F.array("cell"), "codes").alias("__cc"))
     )
 
-    out_schema = f"{query_id} {id_type}, {corpus_id} long, cos_sim double"
-    kk_short = max(k, refine_mult * k if refine_corpus is not None else k)
+    def make_scorer(q_mat: np.ndarray):
+        q_norm = _np_norms(q_mat)
 
-    def kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf["vec_id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            codes = np.array([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
+        def score(cc: np.ndarray) -> np.ndarray:
+            cc = cc.astype(np.int64)
             # reconstruct: centroid + per-subspace codebook gathers
-            recon = centroids[cells].copy()
+            recon = centroids[cc[:, 0]]
             for j in range(m):
-                recon[:, j * dsub : (j + 1) * dsub] += codebooks[j][codes[:, j]]
-            r_norm = np.sqrt((recon * recon).sum(axis=1))
-            denom = np.outer(q_norm, r_norm)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom > 0, (q_mat @ recon.T) / denom, np.nan)
-            sims_r = np.round(np.nan_to_num(sims, nan=-2.0), round_dp)
-            kk = min(kk_short, len(c_ids))
-            id_rank = np.argsort(np.argsort(c_ids))
-            id_keys = np.broadcast_to(id_rank, (len(q_ids), len(c_ids)))
-            order = np.lexsort((id_keys, -sims_r), axis=1)
-            rows = []
-            for qi in range(len(q_ids)):
-                for ci in order[qi, :kk]:
-                    s = sims[qi, ci]
-                    if not np.isnan(s):
-                        rows.append((q_ids[qi], int(c_ids[ci]), float(s)))
-            yield pd.DataFrame(rows, columns=[query_id, "vec_id", "cos_sim"])
+                recon[:, j * dsub : (j + 1) * dsub] += codebooks[j][cc[:, 1 + j]]
+            return _np_cosine(q_mat @ recon.T, q_norm, _np_norms(recon))
 
-    cand = codes_df.select("vec_id", "cell", "codes").mapInPandas(kernel, out_schema)
-    if refine_corpus is not None:
-        qv = queries.select(
-            F.col(query_id), _as_double(F.col(query_vec)).alias("__qv")
-        ).withColumn("__qn", l2_norm(F.col("__qv")))
-        cv = refine_corpus.select(
-            F.col(corpus_id).alias("vec_id"),
-            _as_double(F.col(corpus_vec)).alias("__cv"),
-        ).withColumn("__cn", l2_norm(F.col("__cv")))
-        denom = F.col("__qn") * F.col("__cn")
-        scored = (
-            cv.join(F.broadcast(cand.select(query_id, "vec_id")), "vec_id")
-            .join(F.broadcast(qv), query_id)
-            .select(
-                query_id,
-                "vec_id",
-                F.round(
-                    F.when(denom > 0, dot(F.col("__qv"), F.col("__cv")) / denom),
-                    round_dp,
-                ).alias("cos_sim"),
-            )
-            .where(F.col("cos_sim").isNotNull())
-        )
-    else:
-        scored = cand.select(
-            query_id, "vec_id", F.round("cos_sim", round_dp).alias("cos_sim")
-        )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
+        return score
+
+    refine = refine_corpus is not None
+    cand = _map_side_candidates(
+        queries, codes_df, make_scorer, query_id, "vec_id", query_vec, "__cc",
+        max(k, refine_mult * k) if refine else k, round_dp,
     )
+    if refine:
+        return exact_rerank(
+            cand, queries,
+            refine_corpus.select(F.col(corpus_id).alias("vec_id"), corpus_vec),
+            k, query_id, "vec_id", query_vec, corpus_vec, round_dp,
+        )
+    return _rank_topk(cand, query_id, "cos_sim", "vec_id", k)
 
 
-def _mine_best_pairs(scored: DataFrame, query_id: str, corpus_id: str) -> DataFrame:
-    """Shared fold of hard_negative_mining and its IVF twin: from scored
-    (query, candidate, __same, cos_sim) rows, pick the best positive and
-    best negative per query in ONE keyed aggregation. Both picks are
-    max(struct(sim, -id)) — lexicographic struct ordering = sim desc
-    then id asc, the exact tie-break contract of the window form — so
-    map-side combine collapses each partition to one row per anchor.
+def _mine_best_pairs(
+    pairs: DataFrame, query_id: str, corpus_id: str, round_dp: int
+) -> DataFrame:
+    """Shared fold of hard_negative_mining and its IVF twin: from joined
+    anchor x candidate ``_side`` rows (self excluded here), pick the best
+    positive and best negative per query in ONE keyed aggregation. Both
+    picks are max(struct(sim, -id)) — lexicographic struct ordering = sim
+    desc then id asc, the module's ranking contract — so map-side
+    combine collapses each partition to one row per anchor.
     One definition guarantees the exact and IVF forms cannot drift
     (their equality at nprobe == nlist is pinned in pytest)."""
+    scored = (
+        pairs.where(F.col("__cid") != F.col("__qid"))
+        .select(
+            F.col("__qid").alias(query_id),
+            F.col("__cid").alias(corpus_id),
+            (F.col("__clabel") == F.col("__qlabel")).alias("__same"),
+            _cosine_col(round_dp),
+        )
+        .where(F.col("cos_sim").isNotNull())
+    )
     cand = F.struct(
         F.col("cos_sim").alias("s"), (-F.col(corpus_id)).alias("nid")
     )
@@ -2250,49 +2093,28 @@ def hard_negative_mining(
     data pipeline.
 
     Output: (query_id, pos_id, pos_sim, neg_id, neg_sim), one row per
-    anchor that has at least one candidate on each side. Ranking is on
-    the ROUNDED similarity with corpus-id tie-break (cross-engine
-    deterministic, same contract as ``brute_force_topk``).
+    anchor that has at least one candidate on each side.
 
-    Scale shape: exactly brute_force_topk's NLJ — broadcast(anchors)
-    with per-row precomputed norms, corpus never shuffles — then ONE
-    keyed aggregation: both picks are struct-max aggregates
-    max(struct(sim, -candidate_id)) (lexicographic struct ordering =
-    sim desc, id asc — the same deterministic tie-break as the window
-    form), so map-side combine collapses each partition to one row per
+    Scale shape: exactly brute_force_topk's NLJ — broadcast(anchors),
+    corpus never shuffles — then ONE keyed aggregation: both picks are
+    struct-max aggregates max(struct(sim, -candidate_id))
+    (lexicographic struct ordering = sim desc, id asc — the module's
+    ranking contract), so map-side combine collapses each partition to one row per
     anchor and the only exchange carries |anchors| x partitions tiny
     rows. A window + self-join formulation costs 4 exchanges; this
     costs 1. Swap the NLJ for an IVF probe when the corpus outgrows
     exact search (the aggregation only needs (query, candidate, sim,
     same_label) rows).
     """
-    q = anchors.select(
-        F.col(query_id).alias("__qid"),
-        F.col(label_col).alias("__qlabel"),
-        _as_double(F.col(query_vec)).alias("__qv"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-    c = corpus.select(
-        F.col(corpus_id).alias("__cid"),
-        F.col(label_col).alias("__clabel"),
-        _as_double(F.col(corpus_vec)).alias("__cv"),
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-    denom = F.col("__qn") * F.col("__cn")
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("__cid") != F.col("__qid"))
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("__cid").alias(corpus_id),
-            (F.col("__clabel") == F.col("__qlabel")).alias("__same"),
-            F.round(
-                F.when(denom > 0, dot(F.col("__qv"), F.col("__cv")) / denom),
-                round_dp,
-            ).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim").isNotNull())
+    q = _side(
+        anchors, query_id, query_vec, "__q", F.col(label_col).alias("__qlabel")
     )
-    return _mine_best_pairs(scored, query_id, corpus_id)
+    c = _side(
+        corpus, corpus_id, corpus_vec, "__c", F.col(label_col).alias("__clabel")
+    )
+    return _mine_best_pairs(
+        F.broadcast(q).crossJoin(c), query_id, corpus_id, round_dp
+    )
 
 
 def hard_negative_mining_ivf(
@@ -2324,69 +2146,22 @@ def hard_negative_mining_ivf(
     centroids = _train_centroids(corpus, corpus_vec, nlist, seed)
     probe_cells, assign_cell = _centroid_kernels(centroids, nprobe)
 
-    c = corpus.select(
-        F.col(corpus_id).alias("__cid"),
+    c = _side(
+        corpus, corpus_id, corpus_vec, "__c",
         F.col(label_col).alias("__clabel"),
-        _as_double(F.col(corpus_vec)).alias("__cv"),
         assign_cell(F.col(corpus_vec)).alias("cell"),
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-    qrows = anchors.select(
-        F.col(query_id).alias("__qid"),
-        F.col(label_col).alias("__qlabel"),
-        _as_double(F.col(query_vec)).alias("__qv"),
-        F.explode(probe_cells(F.col(query_vec))).alias("cell"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-
-    denom = F.col("__qn") * F.col("__cn")
-    scored = (
-        F.broadcast(qrows)
-        .join(c, "cell")
-        .where(F.col("__cid") != F.col("__qid"))
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("__cid").alias(corpus_id),
-            (F.col("__clabel") == F.col("__qlabel")).alias("__same"),
-            F.round(
-                F.when(denom > 0, dot(F.col("__qv"), F.col("__cv")) / denom),
-                round_dp,
-            ).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim").isNotNull())
     )
-    return _mine_best_pairs(scored, query_id, corpus_id)
+    qrows = _side(
+        anchors, query_id, query_vec, "__q",
+        F.col(label_col).alias("__qlabel"),
+        F.explode(probe_cells(F.col(query_vec))).alias("cell"),
+    )
+    return _mine_best_pairs(
+        F.broadcast(qrows).join(c, "cell"), query_id, corpus_id, round_dp
+    )
 
 
 # --- k-NN graph (round 5b) ---------------------------------------------------
-
-
-def _banded_signatures(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    bits: int,
-    bands: int,
-) -> DataFrame:
-    """(id, vec, norm, band, band_val) rows — one posexplode pass over the
-    Arrow-computed hyperplane signature (same banding as ``lsh_topk``;
-    extracted so the self-join graph form can reuse it)."""
-    band_bits = bits // bands
-    sig_udf = rp_signature_pandas(dim, bits)
-    base = df.select(
-        F.col(id_col).alias("__id"),
-        _as_double(F.col(vec_col)).alias("__v"),
-        sig_udf(F.col(vec_col)).alias("__sig"),
-    ).withColumn("__n", l2_norm(F.col("__v")))
-    band_vals = [
-        F.shiftright("__sig", b * band_bits).bitwiseAND(F.lit((1 << band_bits) - 1))
-        for b in range(bands)
-    ]
-    return base.select(
-        "__id",
-        "__v",
-        "__n",
-        F.posexplode(F.array(*band_vals)).alias("band", "band_val"),
-    )
 
 
 def knn_graph(
@@ -2474,12 +2249,7 @@ def knn_graph(
         F.col(id_col).alias("nbr_id"),
         "cos_sim",
     )
-    w = Window.partitionBy("src_id").orderBy(
-        F.desc("cos_sim"), F.col("nbr_id").asc()
-    )
-    return kept.withColumn("rnk", F.row_number().over(w).cast("long")).where(
-        F.col("rnk") <= k
-    )
+    return _rank_topk(kept, "src_id", "cos_sim", "nbr_id", k)
 
 
 def knn_graph_lsh(
@@ -2524,34 +2294,14 @@ def knn_graph_lsh(
         .select("__qid", "__cid")
         .dropDuplicates()
     )
-    vec = vectors.select(
-        F.col(id_col).alias("__id"), _as_double(F.col(vec_col)).alias("__v")
-    ).withColumn("__n", l2_norm(F.col("__v")))
-    qv = vec.select(
-        F.col("__id").alias("__qid"),
-        F.col("__v").alias("__qv"),
-        F.col("__n").alias("__qn"),
-    )
-    cv = vec.select(
-        F.col("__id").alias("__cid"),
-        F.col("__v").alias("__cv"),
-        F.col("__n").alias("__cn"),
-    )
-    cand = pairs.join(qv, "__qid").join(cv, "__cid")
-    denom = F.col("__qn") * F.col("__cn")
+    vec = _side(vectors, id_col, vec_col, "__")
+    cand = pairs.join(_renamed(vec, "__q"), "__qid").join(_renamed(vec, "__c"), "__cid")
     scored = cand.select(
         F.col("__qid").alias("src_id"),
         F.col("__cid").alias("nbr_id"),
-        F.round(
-            F.when(denom > 0, dot(F.col("__qv"), F.col("__cv")) / denom), round_dp
-        ).alias("cos_sim"),
+        _cosine_col(round_dp),
     )
-    w = Window.partitionBy("src_id").orderBy(F.desc("cos_sim"), F.col("nbr_id").asc())
-    return (
-        scored.where(F.col("cos_sim").isNotNull())
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-    )
+    return _rank_topk(scored, "src_id", "cos_sim", "nbr_id", k)
 
 
 # =============================================================================
@@ -2598,14 +2348,7 @@ def mips_topk(
         F.col("__cid").alias(corpus_id),
         F.round(dot(F.col("__qv"), F.col("__cv")), round_dp).alias("dot_score"),
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc("dot_score"), F.col(corpus_id).asc()
-    )
-    return (
-        scored.where(F.col("dot_score").isNotNull())
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-    )
+    return _rank_topk(scored, query_id, "dot_score", corpus_id, k)
 
 
 def augment_for_mips(
@@ -2700,14 +2443,9 @@ def mmr_rerank(
             F.col("__cid").alias(corpus_id),
             dot(F.col("__qv"), F.col("__cv")).cast("long").alias("rel"),
         )
-        w = Window.partitionBy(query_id).orderBy(
-            F.desc("rel"), F.col(corpus_id).asc()
-        )
-        cand = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= n_candidates)
-            .drop("rn")
-        )
+        cand = _rank_topk(
+            scored, query_id, "rel", corpus_id, n_candidates, rank_col="rn"
+        ).drop("rn")
     else:
         cand = candidates.select(query_id, corpus_id, "rel")
     # pairwise sims among each query's candidates: k^2 rows per query,
@@ -2837,17 +2575,9 @@ def cluster_cap_sample(
         raise ValueError(f"keep must be 'far' or 'near', got {keep!r}")
     cents = modular_representatives(corpus, nlist, vec_col, id_col)
     assigned = quantized_cell_assignments(corpus, cents, vec_col=vec_col, id_col=id_col)
-    order = (
-        [F.col("d2q").desc(), F.col(id_col).asc()]
-        if keep == "far"
-        else [F.col("d2q").asc(), F.col(id_col).asc()]
-    )
-    w = Window.partitionBy("cell").orderBy(*order)
-    return (
-        assigned.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= cap)
-        .select("cell", id_col, "d2q", "rk")
-    )
+    return _rank_topk(
+        assigned, "cell", "d2q", id_col, cap, ascending=keep == "near", rank_col="rk"
+    ).select("cell", id_col, "d2q", "rk")
 
 
 def ivf_probe_sweep_topk(
@@ -2884,50 +2614,40 @@ def ivf_probe_sweep_topk(
     cells = _quantized_cell_structs(
         _as_double(F.col(corpus_vec)), cent_rows, quantize
     )
-    c = corpus.select(
-        F.col(corpus_id),
-        _as_double(F.col(corpus_vec)).alias("__v"),
-        F.array_min(cells)["cell"].alias("cell"),
-    ).withColumn("__n", l2_norm(F.col("__v")))
+    c = _side(
+        corpus, corpus_id, corpus_vec, "__c",
+        F.array_min(cells)["cell"].alias("cell"), id_as=corpus_id,
+    )
     c = caching.register(c.persist())  # same barrier rationale as s2g
 
     qcells = _quantized_cell_structs(
         _as_double(F.col(query_vec)), cent_rows, quantize
     )
-    qrows = queries.select(
-        F.col(query_id).alias("__qid"),
-        _as_double(F.col(query_vec)).alias("__qv"),
+    qrows = _side(
+        queries, query_id, query_vec, "__q",
         F.posexplode(
             F.transform(
                 F.slice(F.array_sort(qcells), 1, max_p), lambda s: s["cell"]
             )
         ).alias("__pr0", "cell"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-
-    denom = F.col("__qn") * F.col("__n")
+    )
     scored = F.broadcast(qrows).join(c, "cell").select(
         F.col("__qid").alias(query_id),
         F.col(corpus_id),
         (F.col("__pr0") + 1).alias("probe_rank"),
-        F.round(
-            F.when(denom > 0, dot(F.col("__qv"), F.col("__v")) / denom),
-            round_dp,
-        ).alias("cos_sim"),
+        _cosine_col(round_dp),
     ).where(F.col("cos_sim").isNotNull())
     # the sweep's whole point: materialize the scored candidates once,
     # serve every budget from the (|Q| x candidates) skinny table
     scored = caching.register(scored.persist())
 
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc("cos_sim"), F.col(corpus_id).asc()
-    )
     parts = []
     for p in probes:
         parts.append(
-            scored.where(F.col("probe_rank") <= p)
-            .withColumn("rnk", F.row_number().over(w).cast("long"))
-            .where(F.col("rnk") <= k)
-            .select(
+            _rank_topk(
+                scored.where(F.col("probe_rank") <= p),
+                query_id, "cos_sim", corpus_id, k,
+            ).select(
                 F.lit(p).cast("long").alias("nprobe"),
                 query_id,
                 corpus_id,
@@ -2954,42 +2674,22 @@ def exact_rerank(
 ) -> DataFrame:
     """Exact-cosine re-rank of a per-query candidate table — stage 2 of
     the retrieve-then-rerank serving pattern (a cheap quantized stage
-    proposes n candidates, the exact metric re-scores only those).
-    Same scoring contract as s1 (round-``round_dp`` cosine, ties to the
-    lowest corpus id), so any deterministic retriever composed with
-    this stays fully oracle-able.
+    proposes n candidates, the exact metric re-scores only those), and
+    the refine stage of ``pq_topk`` and ``ivfpq_probe_topk``.  Any
+    deterministic retriever composed with this stays fully oracle-able.
 
     Scale shape: vectors are fetched by TWO keyed joins on the skinny
     candidate table (|Q| x n rows) — the corpus is never scanned for
     scoring, which is the entire point of retrieving first."""
-    qv = queries.select(
-        F.col(query_id), _as_double(F.col(query_vec)).alias("__qv")
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-    cv = corpus.select(
-        F.col(corpus_id), _as_double(F.col(corpus_vec)).alias("__v")
-    ).withColumn("__n", l2_norm(F.col("__v")))
-    denom = F.col("__qn") * F.col("__n")
+    qv = _side(queries, query_id, query_vec, "__q", id_as=query_id)
+    cv = _side(corpus, corpus_id, corpus_vec, "__c", id_as=corpus_id)
     scored = (
         candidates.select(query_id, corpus_id)
         .join(qv, query_id)
         .join(cv, corpus_id)
-        .select(
-            query_id,
-            corpus_id,
-            F.round(
-                F.when(denom > 0, dot(F.col("__qv"), F.col("__v")) / denom),
-                round_dp,
-            ).alias("cos_sim"),
-        )
+        .select(query_id, corpus_id, _cosine_col(round_dp))
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc("cos_sim"), F.col(corpus_id).asc()
-    )
-    return (
-        scored.where(F.col("cos_sim").isNotNull())
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-    )
+    return _rank_topk(scored, query_id, "cos_sim", corpus_id, k)
 
 
 def adc_retrieve_rerank(
@@ -3038,9 +2738,8 @@ def graph_ann_beam_search(
     DETERMINISTIC, oracle-able form: fixed-hop beam search over a
     prebuilt neighbor graph.  Every query starts at the same entry
     node; each hop expands the current beam's out-neighbors, scores the
-    frontier exactly (s1's rounded-cosine + id tie-break contract), and
-    keeps the top-``beam``; the answer is the top-``k`` of everything
-    scored.  Fixed hops + total tie-breaks replace HNSW's
+    frontier exactly, and keeps the top-``beam``; the answer is the
+    top-``k`` of everything scored.  Fixed hops + total tie-breaks replace HNSW's
     insertion-order-dependent layers and data-dependent stopping rule —
     the build is the deterministic kNN graph (s10; swap in the banded
     LSH graph s10b for the scale build), so the whole search unrolls
@@ -3057,13 +2756,8 @@ def graph_ann_beam_search(
     scoring — the corpus is never scanned after the graph is built,
     which is the graph-index trade: walk edges instead of probing
     cells."""
-    qv = queries.select(
-        F.col(query_id), _as_double(F.col(query_vec)).alias("__qv")
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-    cv = corpus.select(
-        F.col(corpus_id).alias("__node"),
-        _as_double(F.col(corpus_vec)).alias("__v"),
-    ).withColumn("__n", l2_norm(F.col("__v")))
+    qv = _side(queries, query_id, query_vec, "__q", id_as=query_id)
+    cv = _side(corpus, corpus_id, corpus_vec, "__c", id_as="__node")
     from martech_pipelines_spark import caching
 
     # The graph IS the index: every hop (and the visited-set union)
@@ -3079,22 +2773,15 @@ def graph_ann_beam_search(
     )
 
     def score(frontier: DataFrame) -> DataFrame:
-        denom = F.col("__qn") * F.col("__n")
         return (
             frontier.join(qv, query_id)
             .join(cv, frontier["node"] == cv["__node"])
-            .select(
-                query_id,
-                F.col("node"),
-                F.round(
-                    F.when(
-                        denom > 0, dot(F.col("__qv"), F.col("__v")) / denom
-                    ),
-                    round_dp,
-                ).alias("cos_sim"),
-            )
+            .select(query_id, F.col("node"), _cosine_col(round_dp))
             .where(F.col("cos_sim").isNotNull())
         )
+
+    def top(vis: DataFrame, n: int, rank_col: str = "__r") -> DataFrame:
+        return _rank_topk(vis, query_id, "cos_sim", "node", n, rank_col=rank_col)
 
     # The entry node rides in as a 1-row broadcast RELATION, not a
     # literal: F.lit(entry) constant-folds through the first beam
@@ -3107,23 +2794,11 @@ def graph_ann_beam_search(
     )
     beam_df = queries.select(F.col(query_id)).crossJoin(F.broadcast(entry_df))
     visited = score(beam_df)
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc("cos_sim"), F.col("node").asc()
-    )
-    beam_df = visited.withColumn("__r", F.row_number().over(w)).where(
-        F.col("__r") <= beam
-    ).select(query_id, "node")
+    beam_df = top(visited, beam).select(query_id, "node")
 
     def topk(vis: DataFrame) -> DataFrame:
-        return (
-            vis.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .where(F.col("rnk") <= k)
-            .select(
-                query_id,
-                F.col("node").alias(corpus_id),
-                "cos_sim",
-                "rnk",
-            )
+        return top(vis, k, "rnk").select(
+            query_id, F.col("node").alias(corpus_id), "cos_sim", "rnk"
         )
 
     # NOTE (round 12): per-hop localCheckpoint(eager=False) of beam_df +
@@ -3140,9 +2815,7 @@ def graph_ann_beam_search(
         ).select(query_id, F.col("__nbr").alias("node"))
         frontier = beam_df.unionByName(nbrs).distinct()
         scored = score(frontier)
-        beam_df = scored.withColumn("__r", F.row_number().over(w)).where(
-            F.col("__r") <= beam
-        ).select(query_id, "node")
+        beam_df = top(scored, beam).select(query_id, "node")
         visited = visited.unionByName(scored).distinct()
         if sweep_hops and h in sweep_hops:
             per_hop.append(

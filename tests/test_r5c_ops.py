@@ -246,6 +246,42 @@ def test_mips_differs_from_cosine_on_scaled_vectors(spark):
     assert [r["vec_id"] for r in cos] == [1, 2]
 
 
+@pytest.mark.parametrize(
+    "kernel", ["brute_force_topk", "brute_force_topk_arrow", "exact_rerank"]
+)
+def test_cosine_topk_ties_to_lowest_id_and_skips_zero_norm(spark, kernel):
+    """The ranking contract every cosine kernel shares: equal rounded
+    cosines rank by the lowest corpus id, and a zero-norm vector (corpus
+    or query side) has a NULL cosine and is never returned."""
+    corpus = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0]),
+            (2, [10.0, 0.0]),  # same direction as 1: a cosine tie
+            (3, [0.0, 1.0]),
+            (4, [0.0, 0.0]),  # zero norm
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    q = spark.createDataFrame(
+        [(100, [1.0, 0.1]), (101, [0.0, 0.0])],
+        "query_id long, embedding array<double>",
+    )
+    fn = getattr(SIM, kernel)
+    if kernel == "exact_rerank":
+        pairs = q.select("query_id").crossJoin(corpus.select("vec_id"))
+        out = fn(pairs, q, corpus, k=4)
+    else:
+        out = fn(q, corpus, k=4)
+    got = sorted(
+        (r["query_id"], r["rnk"], r["vec_id"], r["cos_sim"]) for r in out.collect()
+    )
+    assert [(qid, rnk, vid) for qid, rnk, vid, _ in got] == [
+        (100, 1, 1), (100, 2, 2), (100, 3, 3)
+    ]
+    assert got[0][3] == got[1][3] == 0.995
+    assert dict(out.dtypes)["rnk"] == "bigint"
+
+
 def test_s11_no_corpus_shuffle(spark):
     """Queries broadcast; the only exchange feeds the per-query window
     (hashpartitioning on query_id), never the corpus scan."""

@@ -542,20 +542,50 @@ def test_brute_force_arrow_query_budget_raises(spark, sf_dir):
         SIM.brute_force_topk_arrow(q, emb, k=3, max_query_cells=1000).count()
 
 
-def test_index_search_query_budget_raises(spark, sf_dir, monkeypatch):
-    # The IVF and PQ-ADC kernels collect their query side under the same
-    # module-level budget as brute_force_topk_arrow (no per-call knob).
+def test_index_search_query_budget_raises(spark, sf_dir, monkeypatch, tmp_path):
+    # The IVF, PQ-ADC, trained-PQ and IVFPQ-probe kernels collect their
+    # query side under the same module-level budget as
+    # brute_force_topk_arrow (no per-call knob).
     import pytest
 
     from martech_pipelines_spark.sources import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.selectExpr("vec_id AS query_id", "embedding")
+    idx = str(tmp_path / "ivfpq")
+    SIM.ivfpq_build_index(emb, idx, dim=64, nlist=4, m=8, ksub=16)
     monkeypatch.setattr(SIM, "_MAX_QUERY_CELLS", 1000)
     with pytest.raises(ValueError, match="driver-side budget"):
         SIM.ivf_deterministic_topk(q, emb, nlist=8, nprobe=2, k=3)
     with pytest.raises(ValueError, match="driver-side budget"):
         SIM.pq_adc_deterministic_topk(q, emb, k=3)
+    with pytest.raises(ValueError, match="driver-side budget"):
+        SIM.pq_topk(q, emb, dim=64, k=3)
+    with pytest.raises(ValueError, match="driver-side budget"):
+        SIM.ivfpq_probe_topk(q, idx, k=3, nprobe=2, refine_corpus=emb)
+
+
+def test_ivfpq_probe_empty_queries_returns_empty_frame(spark, sf_dir, tmp_path):
+    # An empty query set gets the usual output schema and no rows, with
+    # and without the exact-refine stage.
+    from martech_pipelines_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = str(tmp_path / "ivfpq")
+    SIM.ivfpq_build_index(emb, idx, dim=64, nlist=4, m=8, ksub=16)
+    q = emb.selectExpr("vec_id AS query_id", "embedding")
+    for refine in (emb, None):
+        full = SIM.ivfpq_probe_topk(
+            q.where("vec_id % 50 = 0"), idx, k=3, nprobe=2, refine_corpus=refine
+        )
+        empty = SIM.ivfpq_probe_topk(
+            q.where("vec_id < 0"), idx, k=3, nprobe=2, refine_corpus=refine
+        )
+        assert empty.count() == 0
+        assert empty.dtypes == full.dtypes
+        assert [c for c, _ in full.dtypes] == [
+            "query_id", "vec_id", "cos_sim", "rnk"
+        ]
 
 
 def test_graph_beam_search_reaches_expected_visited_set(spark):
