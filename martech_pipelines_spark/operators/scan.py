@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from martech_pipelines_spark import caching
+
 _PID = "__scan_pid"
 
 
@@ -45,8 +47,15 @@ def _ranged(df: DataFrame, order_cols: list[Column], num_ranges: int | None):
         num_ranges = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
         )
-    d = df.repartitionByRange(num_ranges, *order_cols).withColumn(
-        _PID, F.spark_partition_id()
+    # The offsets and the local ranks must come from ONE range split:
+    # Spark samples the range bounds per exchange, seeded by the RDD id,
+    # so two consumers of an unmaterialised ``d`` whose pruned plans
+    # differ get two different splits (rows off by a constant per
+    # partition).  One lazy persist makes both read the same split.
+    d = caching.register(
+        df.repartitionByRange(num_ranges, *order_cols)
+        .withColumn(_PID, F.spark_partition_id())
+        .persist()
     )
     local = Window.partitionBy(_PID).orderBy(*order_cols)
     spine = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)

@@ -13,12 +13,21 @@ of the input multiset (fixed lgK, no RNG), so union-of-batch-sketches
 equals the full-corpus sketch BIT-FOR-BIT — pinned in tests. The
 estimate differs from exact count (that is the trade), so the corpus
 query is rows-only with error/mergeability gates in pytest.
+
+Incremental capabilities (one ``state`` / ``merge`` / ``readout`` each;
+the section comment above each states its contract once): the batch
+query is ``readout(state(all))``, and its ``h*`` twin and the streaming
+fold in ``streaming/stream.py`` call the same functions.  Here: the
+fixed-grid price histogram, the exact value-histogram percentiles and
+the deterministic HLL registers.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from martech_pipelines_spark.operators.transforms import sum_merge
 
 
 def distinct_sketch_table(
@@ -168,9 +177,13 @@ def histogram_sketch(
     )
 
 
-def histogram_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Cell-wise sum — additive state, same contract as countmin_merge."""
-    return a.unionByName(b).groupBy("bin").agg(F.sum("cnt").alias("cnt"))
+def histogram_merge(*states: DataFrame) -> DataFrame:
+    """Cell-wise sum of histogram states — additive, same contract as
+    countmin_merge.  Every column but ``cnt`` is the cell key, so one
+    merge serves ``histogram_sketch``'s (bin), ``price_histogram``'s
+    (flag, bin) and ``value_histogram``'s (event_type, y) cells; one
+    state folds its own duplicate cells (a stream's per-batch union)."""
+    return sum_merge([c for c in states[0].columns if c != "cnt"], *states)
 
 
 def histogram_percentile_bins(
@@ -216,6 +229,118 @@ def histogram_percentile_bins(
         F.col("total_cnt").cast("long").alias("total_cnt"),
     )
 
+
+# ---------------------------------------------------------------------------
+# Fixed-grid price histogram with integer interpolation (r40 / h30 / the
+# histogram stream).  State: (flag, bin, cnt) cells on a _R40_W-cent grid;
+# merge: ``histogram_merge``; readout: per-flag cumulative over the
+# price-domain-bounded bin spine, then est = bin_lo + ((target -
+# cum_before) * W) div cnt at target = ceil(n * p / 100) — pure integer
+# arithmetic, so the estimate is engine-exact.
+# ---------------------------------------------------------------------------
+
+_R40_W = 10_000  # bin width: 10,000 cents = $100
+_R40_PS = (50, 90, 99)
+
+
+def price_histogram(li: DataFrame) -> DataFrame:
+    """(flag, bin, cnt) cells of a lineitem batch on the fixed grid."""
+    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+    return (
+        li.select(
+            F.col("l_returnflag").alias("flag"),
+            (cents / _R40_W).cast("long").alias("bin"),
+        )
+        .groupBy("flag", "bin")
+        .agg(F.count("*").cast("long").alias("cnt"))
+    )
+
+
+def histogram_quantile_readout(hist: DataFrame) -> DataFrame:
+    """(flag, p, n, est_cents) from merged ``price_histogram`` cells."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("flag").orderBy("bin").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cum = hist.select(
+        "flag",
+        "bin",
+        "cnt",
+        F.sum("cnt").over(w).cast("long").alias("cum"),
+    )
+    totals = hist.groupBy("flag").agg(F.sum("cnt").cast("long").alias("n"))
+    targets = totals.select(
+        "flag",
+        "n",
+        F.explode(
+            F.array(*[F.lit(p).cast("long") for p in _R40_PS])
+        ).alias("p"),
+    ).withColumn("target", F.expr("(n * p + 99) div 100"))
+    hit = targets.join(
+        cum,
+        (targets["flag"] == cum["flag"])
+        & (cum["cum"] >= targets["target"])
+        & (cum["cum"] - cum["cnt"] < targets["target"]),
+    )
+    est = (
+        F.col("bin") * _R40_W
+        + F.expr(f"((target - (cum - cnt)) * {_R40_W}) div cnt")
+    ).cast("long")
+    return hit.groupBy(targets["flag"], "p", "n").agg(
+        F.min(est).alias("est_cents")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Exact percentiles over a discrete value domain (r29 / h20).  State:
+# (event_type, y, cnt) counts of integer paise values — bounded by the
+# value domain, not the row count; merge: ``histogram_merge``; readout:
+# per-type cumulative over the value histogram and the rank rule
+# min{y : cum(y) >= ceil(q * n)} for p50/p90/p99.
+# ---------------------------------------------------------------------------
+
+
+def value_histogram(ev: DataFrame) -> DataFrame:
+    """(event_type, y, cnt) counts of non-null ``value`` in paise."""
+    return (
+        ev.where(F.col("value").isNotNull())
+        .select(
+            "event_type",
+            F.floor(F.col("value") * 100).cast("long").alias("y"),
+        )
+        .groupBy("event_type", "y")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+def percentiles_from_histogram(hist: DataFrame) -> DataFrame:
+    """(event_type, n, p50, p90, p99) from merged ``value_histogram``
+    cells."""
+    from pyspark.sql import Window
+
+    wc = (
+        Window.partitionBy("event_type")
+        .orderBy("y")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wn = Window.partitionBy("event_type")
+    cum = hist.select(
+        "event_type",
+        "y",
+        F.sum("cnt").over(wc).alias("c"),
+        F.sum("cnt").over(wn).alias("n"),
+    )
+    aggs = [F.max("n").alias("n")] + [
+        F.min(
+            F.when(
+                F.col("c") >= F.ceil(F.col("n") * F.lit(pq / 100.0)),
+                F.col("y"),
+            )
+        ).alias(name)
+        for pq, name in ((50, "p50"), (90, "p90"), (99, "p99"))
+    ]
+    return cum.groupBy("event_type").agg(*aggs)
 
 # ---------------------------------------------------------------------------
 # KMV (k-minimum-values) distinct sketch — the DETERMINISTIC, cross-engine
@@ -390,4 +515,54 @@ def kmv_theta_setops(sketch: DataFrame, key_col: str, k: int = 64) -> DataFrame:
         .otherwise(F.lit(0))
         .cast("long")
         .alias("sample_jaccard_e6"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Deterministic HLL registers (h7b / the HLL stream).  State:
+# (event_type, reg_idx, reg_val) with m = _HLL_M registers indexed by the
+# top 5 bits of an md5-derived 32-bit hash of user_id and reg_val = max
+# rho, rho = (W + 1) - bitlen(w) over the remaining W = _HLL_WBITS bits
+# (W + 1 when w = 0) — bin() lengths, no floats, identical on DuckDB.
+# Merge: elementwise register max, idempotent and order-free, so
+# merge(registers(A), registers(B)) == registers(A ∪ B) and replays are
+# free.  Absent registers read as 0.
+# ---------------------------------------------------------------------------
+
+_HLL_M = 32  # 2^5 registers
+_HLL_WBITS = 27  # 32 - 5
+
+
+def hll_registers(ev: DataFrame) -> DataFrame:
+    """Register state of an event batch.  Distinct (type, user)
+    collapses map-side before hashing; the register reduce is a keyed
+    max."""
+    h = F.conv(
+        F.substring(F.md5(F.concat(F.lit("hll:"), F.col("user_id").cast("string"))), 1, 8),
+        16, 10,
+    ).cast("long")
+    w = F.col("__h") % F.lit(2 ** _HLL_WBITS)
+    rho = F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
+        F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
+    )
+    return (
+        ev.select("event_type", "user_id")
+        .distinct()
+        .withColumn("__h", h)
+        .select(
+            "event_type",
+            (F.col("__h") / F.lit(2 ** _HLL_WBITS)).cast("long").alias("reg_idx"),
+            rho.alias("__r"),
+        )
+        .groupBy("event_type", "reg_idx")
+        .agg(F.max("__r").cast("long").alias("reg_val"))
+    )
+
+
+def hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Elementwise register max of two register states."""
+    return (
+        a.unionByName(b)
+        .groupBy("event_type", "reg_idx")
+        .agg(F.max("reg_val").cast("long").alias("reg_val"))
     )

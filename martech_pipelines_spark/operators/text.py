@@ -9,6 +9,12 @@ codegen and scale linearly with executors; there is no Python in the loop.
 Determinism note: everything here must be oracle-expressible, so hashes
 are md5-based (identical in Spark and DuckDB) rather than Spark-specific
 murmur3/xxhash.
+
+Incremental capabilities (one ``state`` / ``merge`` / ``readout`` each;
+the section comment above each states its contract once): the batch
+query is ``readout(state(all))``, and its ``h*`` twin and the streaming
+fold in ``streaming/stream.py`` call the same functions.  Here: feature
+hashing and the per-source completeness matrix.
 """
 
 from __future__ import annotations
@@ -1678,3 +1684,86 @@ def ngram_novelty_by_source(
             " div (2 * count(*))"
         ).cast("long").alias("novelty_e4"),
     )
+
+
+# ---------------------------------------------------------------------------
+# Feature hashing (fe6 / h34 / the feature-hash stream; Weinberger et al.
+# 2009).  State: signed per-(doc_id, slot) counts, slot = h_fh(token) mod
+# _FE6_D and sign = +1 / -1 from the parity of a second hash h_fs — kept
+# WITHOUT the zero filter, so a merged zero stays representable and a
+# later batch can move it off zero.  Merge: ``transforms.sum_merge`` on
+# (doc_id, slot) — no ordering or partitioning contract.  Readout: drop
+# zero-sum cells.
+# ---------------------------------------------------------------------------
+
+_FE6_D = 64
+
+
+def feature_hash_state(docs: DataFrame) -> DataFrame:
+    """(doc_id, slot, weight) signed cells of a document batch."""
+    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("w"))
+    slot = (md5_bucket32(F.col("w"), "fh") % _FE6_D).alias("slot")
+    sgn = F.when(md5_bucket32(F.col("w"), "fs") % 2 == 0, F.lit(1)).otherwise(
+        F.lit(-1)
+    )
+    return tok.select("doc_id", slot, sgn.alias("__sgn")).groupBy(
+        "doc_id", "slot"
+    ).agg(F.sum("__sgn").cast("long").alias("weight"))
+
+
+def feature_hash_readout(cells: DataFrame) -> DataFrame:
+    """(doc_id, slot, weight) non-zero hashed features of merged cells."""
+    return cells.where(F.col("weight") != 0).select(
+        "doc_id", F.col("slot").cast("long").alias("slot"), "weight"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Per-source completeness matrix (dq18 / h35).  State: counter cells per
+# (source, lang) — additive, bounded by |sources| x |langs|, and the lang
+# key carries the one non-additive column.  Merge: ``transforms.sum_merge``
+# on (source, lang).  Readout: counters summed per source, language-tag
+# cardinality as the number of non-NULL lang cells (exactly
+# COUNT(DISTINCT lang)).
+# ---------------------------------------------------------------------------
+
+_DQ18_SHORT = 20  # chars; "suspiciously short" document threshold
+_DQ18_COUNTERS = (
+    "n_docs",
+    "n_null_text",
+    "n_blank_text",
+    "n_short",
+    "n_no_lang",
+    "n_len_mismatch",
+)
+
+
+def completeness_state(docs: DataFrame) -> DataFrame:
+    """(source, lang, counters...) cells of a document batch."""
+    blank = F.col("text").isNotNull() & (F.trim("text") == "")
+    return docs.groupBy("source", "lang").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum(F.col("text").isNull().cast("int")).cast("long").alias(
+            "n_null_text"
+        ),
+        F.sum(blank.cast("int")).cast("long").alias("n_blank_text"),
+        F.sum((F.col("n_chars") < _DQ18_SHORT).cast("int"))
+        .cast("long")
+        .alias("n_short"),
+        F.sum(
+            (F.col("lang").isNull() | (F.trim("lang") == "")).cast("int")
+        )
+        .cast("long")
+        .alias("n_no_lang"),
+        F.sum((F.length("text") != F.col("n_chars")).cast("int"))
+        .cast("long")
+        .alias("n_len_mismatch"),
+    )
+
+
+def completeness_readout(cells: DataFrame) -> DataFrame:
+    """dq18's report from merged (source, lang) cells."""
+    return cells.groupBy("source").agg(
+        *[F.sum(c).cast("long").alias(c) for c in _DQ18_COUNTERS],
+        F.count("lang").cast("long").alias("n_langs"),
+    ).select("source", *_DQ18_COUNTERS[:5], "n_langs", "n_len_mismatch")

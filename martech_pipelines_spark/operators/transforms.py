@@ -16,12 +16,19 @@ transform rather than a per-row Python function.
 
 At 100 TB this whole pipeline is a single narrow projection stage fused by
 whole-stage codegen — zero shuffles, zero Python.
+
+Incremental capabilities (one ``state`` / ``merge`` / ``readout`` each;
+the section comment above each states its contract once): the batch
+query is ``readout(state(all))``, and its ``h*`` twin and the streaming
+fold in ``streaming/stream.py`` call the same functions.  Here: the
+revenue Gini and the market-basket rules.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -853,5 +860,148 @@ def rolling_active_hll(
         .select(
             F.date_format("rday", "yyyy-MM-dd").alias("day"),
             F.hll_sketch_estimate("sketch").cast("long").alias("active_users"),
+        )
+    )
+
+
+def sum_merge(keys: list[str], *states: DataFrame) -> DataFrame:
+    """Merge additive counter-cell states: union, then one keyed sum of
+    every non-key column (as BIGINT).  Commutative and associative, so
+    batches fold in any split and any order, and one state folds its
+    own duplicate cells (a stream's per-batch partitions)."""
+    u = reduce(DataFrame.unionByName, states)
+    return u.groupBy(*keys).agg(
+        *[F.sum(c).cast("long").alias(c) for c in u.columns if c not in keys]
+    )
+
+
+# ---------------------------------------------------------------------------
+# Revenue concentration: exact integer Gini per market segment (mart21 /
+# h23).  State: (segment, o_custkey, cents) per-customer revenue totals.
+# Merge: ``sum_merge`` on (segment, o_custkey).
+# Readout: (2 sum(i x_i) - (n + 1) sum x) / (n sum x) over ascending
+# (cents, o_custkey)-ranked totals — one per-segment rank window over
+# |customers| skinny rows (measured faster than a rank-free read off the
+# per-segment value histogram, which needs one more exchange).  The
+# rank-weighted sum runs in DECIMAL(38,0) (i * cents passes 2^63 near
+# 10^7 customers); only the half-up e6 ratio lands in BIGINT.
+# ---------------------------------------------------------------------------
+
+
+def customer_revenue_state(orders: DataFrame, customer: DataFrame) -> DataFrame:
+    """(segment, o_custkey, cents) integer-cent revenue per customer of
+    an orders batch."""
+    cust = customer.select(F.col("c_custkey").alias("o_custkey"), "c_mktsegment")
+    return (
+        orders.join(cust, "o_custkey")
+        .groupBy(F.col("c_mktsegment").alias("segment"), "o_custkey")
+        .agg(
+            F.sum(
+                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+            ).cast("long").alias("cents")
+        )
+    )
+
+
+def gini_readout(state: DataFrame) -> DataFrame:
+    """(segment, n_customers, total_cents, gini_e6) of merged totals."""
+    w = Window.partitionBy("segment").orderBy("cents", "o_custkey")
+    ranked = state.withColumn("i", F.row_number().over(w).cast("long"))
+    return ranked.groupBy("segment").agg(
+        F.count("*").cast("long").alias("n_customers"),
+        F.sum("cents").cast("long").alias("total_cents"),
+        # the cast happens PER TERM (inside the sum / before any
+        # multiplication): a cast around an already-overflowed BIGINT
+        # expression guards nothing
+        F.expr(
+            "CAST((2 * (2 * sum(CAST(i * cents AS DECIMAL(38,0)))"
+            "           - CAST(count(*) + 1 AS DECIMAL(38,0))"
+            "             * CAST(sum(CAST(cents AS DECIMAL(38,0)))"
+            "                    AS DECIMAL(38,0))) * 1000000"
+            "      + CAST(count(*) AS DECIMAL(38,0))"
+            "        * CAST(sum(CAST(cents AS DECIMAL(38,0))) AS DECIMAL(38,0)))"
+            " div (2 * CAST(count(*) AS DECIMAL(38,0))"
+            "        * CAST(sum(CAST(cents AS DECIMAL(38,0))) AS DECIMAL(38,0)))"
+            " AS BIGINT)"
+        ).cast("long").alias("gini_e6"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Market-basket association rules (mart10 / h15).  State: three additive
+# counters — (x, y, pair_cnt) unordered same-order part pairs, (p, cnt)
+# orders per part, and a 1-row (n) order count — built from ONE sorted
+# collect_set per order with the pairs generated map-side (bounded
+# per-order fan-out, no self-join re-shuffle).  Batches must split BY
+# ORDER (an order's lines arrive together), so every pair lives in one
+# batch.  Merge: ``basket_merge`` (keyed sums).  Readout: the top-N
+# pairs by (pair_cnt desc, x, y) with support, confidence and lift from
+# integer counts; the item counts join back broadcast, the order count
+# as a 1-row scalar.
+# ---------------------------------------------------------------------------
+
+
+def basket_state(li: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(pairs, items, orders) counters of a batch of (k, p) order lines."""
+    sets = li.groupBy("k").agg(F.sort_array(F.collect_set("p")).alias("ps"))
+    pair_expr = F.expr(
+        """
+        flatten(transform(ps, (xv, i) ->
+            transform(slice(ps, i + 2, size(ps)),
+                      yv -> struct(xv AS x, yv AS y))))
+        """
+    )
+    pairs = (
+        sets.select(F.explode(pair_expr).alias("pr"))
+        .select("pr.x", "pr.y")
+        .groupBy("x", "y")
+        .agg(F.count("*").alias("pair_cnt"))
+    )
+    items = (
+        sets.select(F.explode("ps").alias("p"))
+        .groupBy("p")
+        .agg(F.count("*").alias("cnt"))
+    )
+    return pairs, items, sets.select(F.count("*").alias("n"))
+
+
+def basket_merge(
+    a: tuple[DataFrame, DataFrame, DataFrame],
+    b: tuple[DataFrame, DataFrame, DataFrame],
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Keyed sums of two basket states."""
+    return tuple(
+        sum_merge(keys, x, y) for x, y, keys in zip(a, b, (["x", "y"], ["p"], []))
+    )
+
+
+def basket_readout(
+    state: tuple[DataFrame, DataFrame, DataFrame], top_n: int = 50
+) -> DataFrame:
+    """(x, y, pair_cnt, support, conf_x_y, lift) of the top-N pairs."""
+    pairs, items, orders = state
+    top = pairs.orderBy(F.desc("pair_cnt"), F.asc("x"), F.asc("y")).limit(top_n)
+    cx = items.select(F.col("p").alias("x"), F.col("cnt").alias("cnt_x"))
+    cy = items.select(F.col("p").alias("y"), F.col("cnt").alias("cnt_y"))
+    return (
+        top.join(F.broadcast(cx), "x")
+        .join(F.broadcast(cy), "y")
+        .crossJoin(F.broadcast(orders))
+        .select(
+            "x",
+            "y",
+            "pair_cnt",
+            F.round(F.col("pair_cnt").cast("double") / F.col("n"), 6).alias(
+                "support"
+            ),
+            F.round(
+                F.col("pair_cnt").cast("double") / F.col("cnt_x"), 6
+            ).alias("conf_x_y"),
+            F.round(
+                F.col("pair_cnt").cast("double")
+                * F.col("n")
+                / (F.col("cnt_x") * F.col("cnt_y")),
+                6,
+            ).alias("lift"),
         )
     )

@@ -7,12 +7,21 @@ under ``readStream``.
 
 All built-in: ``F.window`` (tumbling/sliding) and ``F.session_window``
 compile to Catalyst's native window-bucketing expressions — a projection
-plus ordinary aggregation, one shuffle on (key, window)."""
+plus ordinary aggregation, one shuffle on (key, window).
+
+Incremental capabilities (one ``state`` / ``merge`` / ``readout`` each;
+the section comment above each states its contract once): the batch
+query is ``readout(state(all))``, and its ``h*`` twin and the streaming
+fold in ``streaming/stream.py`` call the same functions.  Here: journey
+strings, journey transitions, daily-count trend/outlier statistics and
+the error-budget (SLO) counters."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from martech_pipelines_spark.operators.transforms import sum_merge
 
 
 def tumbling_agg(
@@ -353,3 +362,314 @@ def pareto_frontier_2d(
         ),
         (F.col(cost_col) == F.col("__fc")) & (F.col(gain_col) == F.col("__fg")),
     ).drop("__fc", "__fg")
+
+
+# ---------------------------------------------------------------------------
+# Per-user journey strings (mart24 / h27 / the journey stream).  State:
+# (user_id, n_events, journey) where journey is one code character per
+# event in total (ts, event_id) order.  Merge: sum the counts and
+# concatenate the strings in batch order — exact only for time-ordered
+# batches (same-ts events never straddle a batch), which is why the
+# stream checks its ``_range`` markers.  Readout: one regexp_count per
+# user at READ time, so funnels that span a batch boundary are counted.
+# ---------------------------------------------------------------------------
+
+# "a view, then a click, then a purchase, with no intervening purchase":
+# the [^p]* gaps anchor every match at the FIRST purchase, so greedy-vs-
+# lazy engine differences cannot change the count.
+_MART24_PATTERN = "v[^p]*c[^p]*p"
+
+
+def journey_state(ev: DataFrame) -> DataFrame:
+    """(user_id, n_events, journey) of an event batch — ``collect_list``
+    of structs + ``array_sort`` (collect_list alone has no
+    cross-partition order guarantee)."""
+    code = (
+        F.when(F.col("event_type") == "view", "v")
+        .when(F.col("event_type") == "click", "c")
+        .when(F.col("event_type") == "purchase", "p")
+        .when(F.col("event_type") == "signup", "s")
+        .otherwise("e")
+    )
+    return ev.groupBy("user_id").agg(
+        F.count("*").cast("long").alias("n_events"),
+        F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("ts", "event_id", code.alias("code")))
+                ),
+                lambda s: s["code"],
+            ),
+            "",
+        ).alias("journey"),
+    )
+
+
+def journey_merge(parts: DataFrame) -> DataFrame:
+    """Fold ``journey_state`` rows tagged with a ``batch_id`` (batch
+    order = time order) into one state row per user."""
+    return parts.groupBy("user_id").agg(
+        F.sum("n_events").cast("long").alias("n_events"),
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("batch_id", "journey"))),
+                lambda s: s["journey"],
+            ),
+            "",
+        ).alias("journey"),
+    )
+
+
+def journey_readout(state: DataFrame) -> DataFrame:
+    """(user_id, n_events, n_funnels, did_convert) of merged state."""
+    return state.select(
+        "user_id",
+        "n_events",
+        F.regexp_count("journey", F.lit(_MART24_PATTERN))
+        .cast("long")
+        .alias("n_funnels"),
+        F.col("journey").contains("p").cast("long").alias("did_convert"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# First-order journey transitions (mart28 / h32 / the transitions
+# stream).  State: (from_type, to_type, n_trans) cells of WITHIN-batch
+# consecutive pairs, plus per-user (first_type, last_type) bounds.
+# Merge: sum the cells and add one stitch transition (earlier.last_type
+# -> later.first_type) per user per pair of consecutive appearances —
+# exact for time-ordered batches.  Readout: per-source half-up e6
+# transition probabilities.
+# ---------------------------------------------------------------------------
+
+
+def transition_cells(ev: DataFrame) -> DataFrame:
+    """(from_type, to_type, n_trans) within-batch cells: one keyed lead
+    window per user + a map-side-combined count."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    nxt = ev.select(
+        F.col("event_type").alias("from_type"),
+        F.lead("event_type").over(w).alias("to_type"),
+    )
+    return nxt.where(F.col("to_type").isNotNull()).groupBy(
+        "from_type", "to_type"
+    ).agg(F.count("*").cast("long").alias("n_trans"))
+
+
+def transition_bounds(ev: DataFrame) -> DataFrame:
+    """(user_id, first_type, last_type) in total (ts, event_id) order."""
+    return ev.groupBy("user_id").agg(
+        F.min_by(
+            "event_type", F.struct(F.col("ts"), F.col("event_id"))
+        ).alias("first_type"),
+        F.max_by(
+            "event_type", F.struct(F.col("ts"), F.col("event_id"))
+        ).alias("last_type"),
+    )
+
+
+def transition_merge(cells: DataFrame, bounds: DataFrame) -> DataFrame:
+    """Merged (from_type, to_type, n_trans) cells from per-batch cells
+    and ``transition_bounds`` rows tagged with a ``batch_id`` (batch
+    order = time order): each user's consecutive appearances, in batch
+    order, add one stitch transition — users absent from intermediate
+    batches included."""
+    w = Window.partitionBy("user_id").orderBy("batch_id")
+    stitch = (
+        bounds.select(
+            F.col("last_type").alias("from_type"),
+            F.lead("first_type").over(w).alias("to_type"),
+        )
+        .where(F.col("to_type").isNotNull())
+        .groupBy("from_type", "to_type")
+        .agg(F.count("*").cast("long").alias("n_trans"))
+    )
+    return sum_merge(
+        ["from_type", "to_type"],
+        cells.select("from_type", "to_type", "n_trans"),
+        stitch,
+    )
+
+
+def transition_readout(cells: DataFrame) -> DataFrame:
+    """(from_type, to_type, n_trans, row_total, p_e6) of merged cells:
+    row totals broadcast back over the |types|^2 spine."""
+    rowtot = cells.groupBy("from_type").agg(
+        F.sum("n_trans").cast("long").alias("row_total")
+    )
+    return (
+        cells.join(F.broadcast(rowtot), "from_type")
+        .select(
+            "from_type",
+            "to_type",
+            "n_trans",
+            "row_total",
+            F.expr(
+                "(n_trans * 2000000 + row_total) div (2 * row_total)"
+            ).cast("long").alias("p_e6"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Daily event-count spine statistics (dq16 / h33 Mann-Kendall trend,
+# dq19 / h37 Tukey-fence outlier days).  State: (event_type, d, c) counter
+# cells.  Merge: ``transforms.sum_merge`` on (event_type, d) — cells are
+# additive, so time- or id-split batches may share (type, day) keys.
+# Each readout takes merged (unique) cells; its quadratic or
+# order-statistic work runs over the ~30-row-per-type day spine,
+# whatever the data scale.
+# ---------------------------------------------------------------------------
+
+
+def daily_count_state(ev: DataFrame) -> DataFrame:
+    """(event_type, d, c) per-day event counts of a batch."""
+    return ev.groupBy(
+        "event_type", F.col("ts").cast("date").alias("d")
+    ).agg(F.count("*").cast("long").alias("c"))
+
+
+def trend_readout(daily: DataFrame) -> DataFrame:
+    """(event_type, n_days, s_stat, var18, trend): Mann-Kendall S over
+    the day spine with the tie-corrected variance, in integers —
+    9 * S^2 > 2 * var18 is exactly |z| > 2."""
+    a, b = daily.alias("a"), daily.alias("b")
+    s = (
+        a.join(
+            b,
+            (F.col("a.event_type") == F.col("b.event_type"))
+            & (F.col("a.d") < F.col("b.d")),
+        )
+        .groupBy(F.col("a.event_type").alias("event_type"))
+        .agg(
+            F.sum(
+                F.when(F.col("b.c") > F.col("a.c"), 1)
+                .when(F.col("b.c") < F.col("a.c"), -1)
+                .otherwise(0)
+            )
+            .cast("long")
+            .alias("s_stat")
+        )
+    )
+    n = daily.groupBy("event_type").agg(
+        F.count("*").cast("long").alias("n_days")
+    )
+    ties = (
+        daily.groupBy("event_type", "c")
+        .agg(F.count("*").cast("long").alias("t"))
+        .groupBy("event_type")
+        .agg(
+            F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5))
+            .cast("long")
+            .alias("tie_term")
+        )
+    )
+    var18 = (
+        F.col("n_days") * (F.col("n_days") - 1) * (2 * F.col("n_days") + 5)
+        - F.coalesce(F.col("tie_term"), F.lit(0))
+    ).cast("long")
+    out = n.join(s, "event_type").join(ties, "event_type", "left")
+    return out.select(
+        "event_type",
+        "n_days",
+        "s_stat",
+        var18.alias("var18"),
+        F.when(
+            9 * F.col("s_stat") * F.col("s_stat") > 2 * var18,
+            F.when(F.col("s_stat") > 0, "up").otherwise("down"),
+        )
+        .otherwise("none")
+        .alias("trend"),
+    )
+
+
+def outlier_days_readout(daily: DataFrame) -> DataFrame:
+    """(event_type, n_days, q1, q3, n_outlier_days): order-statistic
+    quartiles (ceil-rank, integer (n+3) div 4) and the 1.5x IQR Tukey
+    fences doubled on both sides so no .5 ever materializes."""
+    w = Window.partitionBy("event_type").orderBy("c", "d")
+    wn = Window.partitionBy("event_type")
+    ranked = daily.select(
+        "event_type",
+        "c",
+        F.row_number().over(w).alias("rn"),
+        F.count("*").over(wn).alias("n"),
+    )
+    q1 = ranked.where(F.col("rn") == F.expr("(n + 3) div 4")).select(
+        "event_type", "n", F.col("c").alias("q1")
+    )
+    q3 = ranked.where(F.col("rn") == F.expr("(3 * n + 3) div 4")).select(
+        "event_type", F.col("c").alias("q3")
+    )
+    quart = q1.join(q3, "event_type")
+    return (
+        ranked.select("event_type", "c")
+        .join(F.broadcast(quart), "event_type")
+        .withColumn(
+            "__is_out",
+            (
+                (2 * F.col("c") < 2 * F.col("q1") - 3 * (F.col("q3") - F.col("q1")))
+                | (2 * F.col("c") > 2 * F.col("q3") + 3 * (F.col("q3") - F.col("q1")))
+            ).cast("int"),
+        )
+        .groupBy("event_type", "n", "q1", "q3")
+        .agg(F.sum("__is_out").cast("long").alias("n_outlier_days"))
+        .select(
+            "event_type",
+            F.col("n").cast("long").alias("n_days"),
+            "q1",
+            "q3",
+            "n_outlier_days",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Error-budget / SLO burn (dq15 / the SLO stream).  State: per-day
+# (day_s, n_events, n_errors) counter cells.  Merge:
+# ``transforms.sum_merge`` on day_s — batches may arrive in any order.
+# Readout: half-up e6 error share, a breach flag against ``budget_e6``
+# and the running breach count over the day spine.
+# ---------------------------------------------------------------------------
+
+DQ15_BUDGET_E6 = 210_000  # 21% daily error-share budget (data mean ~20%)
+
+
+def slo_state(ev: DataFrame) -> DataFrame:
+    """(day_s, n_events, n_errors) per-day counters of an event batch."""
+    return ev.groupBy(
+        F.date_format(F.col("ts").cast("date"), "yyyy-MM-dd").alias("day_s")
+    ).agg(
+        F.count("*").cast("long").alias("n_events"),
+        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
+        .cast("long")
+        .alias("n_errors"),
+    )
+
+
+def slo_readout(daily: DataFrame, budget_e6: int = DQ15_BUDGET_E6) -> DataFrame:
+    """(day_s, n_events, n_errors, err_share_e6, breach, breaches_cum)."""
+    shared = daily.select(
+        "day_s",
+        "n_events",
+        "n_errors",
+        F.expr(
+            "(n_errors * CAST(2000000 AS BIGINT) + n_events) div (2 * n_events)"
+        )
+        .cast("long")
+        .alias("err_share_e6"),
+    )
+    breach = F.when(F.col("err_share_e6") > budget_e6, F.lit(1)).otherwise(
+        F.lit(0)
+    )
+    w = Window.orderBy("day_s").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return shared.select(
+        "day_s",
+        "n_events",
+        "n_errors",
+        "err_share_e6",
+        breach.cast("long").alias("breach"),
+        F.sum(breach).over(w).cast("long").alias("breaches_cum"),
+    )

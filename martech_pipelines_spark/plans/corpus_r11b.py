@@ -37,14 +37,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from martech_pipelines_spark.operators.text import (
+    completeness_readout,
+    completeness_state,
+    feature_hash_readout,
+    feature_hash_state,
+)
+from martech_pipelines_spark.operators.transforms import sum_merge
+from martech_pipelines_spark.operators.windows import (
+    daily_count_state,
+    outlier_days_readout,
+    transition_cells,
+)
 from martech_pipelines_spark.plans.corpus import ORACLE, q
 from martech_pipelines_spark.plans.corpus_extended import _DUCK_NORM
 from martech_pipelines_spark.plans.corpus_r10 import (
     _DUCK_TOKENS,
     _t54_ctes,
     sparse_topk_readout,
-    transition_cells,
-    transition_readout,
     trigram_tf_state,
 )
 from martech_pipelines_spark.sources import load_table
@@ -403,53 +413,23 @@ def mart29_markov_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =============================================================================
 
 
-def feature_hash_state(docs: DataFrame) -> DataFrame:
-    """fe6's fold unit: signed per-(doc, slot) counts WITHOUT the
-    zero-weight filter (a merged zero must stay representable so later
-    batches can move it off zero).  Cells are additive — batches
-    compose by union + sum."""
-    from martech_pipelines_spark.operators import text as TX
-    from martech_pipelines_spark.plans.corpus_r10 import _FE6_D
-
-    tok = docs.select(
-        "doc_id", F.explode(TX.tokens(F.col("text"))).alias("w")
-    )
-    slot = (TX.md5_bucket32(F.col("w"), "fh") % _FE6_D).alias("slot")
-    sgn = F.when(
-        TX.md5_bucket32(F.col("w"), "fs") % 2 == 0, F.lit(1)
-    ).otherwise(F.lit(-1))
-    return tok.select("doc_id", slot, sgn.alias("__sgn")).groupBy(
-        "doc_id", "slot"
-    ).agg(F.sum("__sgn").cast("long").alias("weight"))
-
-
-def feature_hash_readout(state: DataFrame) -> DataFrame:
-    """Merge + render: sum cells per (doc, slot), drop zero-sum cells
-    (exactly fe6's output contract)."""
-    return (
-        state.groupBy("doc_id", "slot")
-        .agg(F.sum("weight").cast("long").alias("weight"))
-        .where(F.col("weight") != 0)
-        .select("doc_id", F.col("slot").cast("long").alias("slot"), "weight")
-    )
-
-
 @q("h34_incremental_feature_hashing", ORACLE["fe6_feature_hashing"])
 def h34_incremental_feature_hashing(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """fe6 maintained INCREMENTALLY (SHARES fe6's oracle — the IVM
     proof): docs split by parity into two ingest batches, each reduced
-    to signed (doc, slot) cells, composed by union, rendered by the
-    same readout.  Feature hashing is stateless per token, so the state
-    is additive by construction — the cheapest IVM family, and the one
-    a feature store maintains under streaming ingest.  Only the delta
+    to ``feature_hash_state`` cells, summed by ``sum_merge`` and
+    rendered by ``feature_hash_readout`` — the cheapest IVM family, the one a
+    feature store maintains under streaming ingest.  Only the delta
     batch is ever tokenized."""
     docs = load_table(spark, sf_dir, "documents")
     b1 = docs.where(F.col("doc_id") % 2 == 0)
     b2 = docs.where(F.col("doc_id") % 2 == 1)
-    state = feature_hash_state(b1).unionByName(feature_hash_state(b2))
-    return feature_hash_readout(state)
+    cells = sum_merge(
+        ["doc_id", "slot"], feature_hash_state(b1), feature_hash_state(b2)
+    )
+    return feature_hash_readout(cells)
 
 
 # =============================================================================
@@ -457,89 +437,22 @@ def h34_incremental_feature_hashing(
 # =============================================================================
 
 
-def completeness_state(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """dq18's fold unit: (additive counter cells, distinct (source,
-    lang) cells).  Counters merge by sum; the lang-cardinality column —
-    dq18's one non-additive aggregate — folds through the distinct-cell
-    state (union + distinct), the standard IVM treatment for COUNT
-    DISTINCT at source-bounded cardinality."""
-    from martech_pipelines_spark.plans.corpus_r10 import _DQ18_SHORT
-
-    blank = F.col("text").isNotNull() & (F.trim("text") == "")
-    counters = docs.groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.col("text").isNull().cast("int")).cast("long").alias(
-            "n_null_text"
-        ),
-        F.sum(blank.cast("int")).cast("long").alias("n_blank_text"),
-        F.sum((F.col("n_chars") < _DQ18_SHORT).cast("int"))
-        .cast("long")
-        .alias("n_short"),
-        F.sum(
-            (F.col("lang").isNull() | (F.trim("lang") == "")).cast("int")
-        )
-        .cast("long")
-        .alias("n_no_lang"),
-        F.sum((F.length("text") != F.col("n_chars")).cast("int"))
-        .cast("long")
-        .alias("n_len_mismatch"),
-    )
-    langs = docs.select("source", "lang").distinct()
-    return counters, langs
-
-
-def completeness_readout(
-    counters: DataFrame, langs: DataFrame
-) -> DataFrame:
-    """Merge counter cells by sum, lang cells by distinct-count, and
-    render dq18's column order."""
-    folded = counters.groupBy("source").agg(
-        *[
-            F.sum(c).cast("long").alias(c)
-            for c in (
-                "n_docs",
-                "n_null_text",
-                "n_blank_text",
-                "n_short",
-                "n_no_lang",
-                "n_len_mismatch",
-            )
-        ]
-    )
-    nl = langs.distinct().groupBy("source").agg(
-        F.count("*").cast("long").alias("n_langs")
-    )
-    return folded.join(nl, "source").select(
-        "source",
-        "n_docs",
-        "n_null_text",
-        "n_blank_text",
-        "n_short",
-        "n_no_lang",
-        "n_langs",
-        "n_len_mismatch",
-    )
-
-
 @q("h35_incremental_completeness", ORACLE["dq18_completeness_matrix"])
 def h35_incremental_completeness(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """dq18 maintained INCREMENTALLY (SHARES dq18's oracle): docs split
-    by parity, each batch reduced to counter cells + distinct (source,
-    lang) cells, merged, rendered identical to the full recompute —
-    how an intake dashboard absorbs a new crawl slice without
-    re-scanning history.  The count-distinct column is the interesting
-    one: it folds through distinct-cell state (bounded by
-    |sources| x |langs|), not a counter."""
+    by parity, each batch reduced to ``completeness_state``, the cells
+    merged and rendered by ``completeness_readout`` identical to the
+    full recompute — how an intake dashboard absorbs a new crawl slice
+    without re-scanning history."""
     docs = load_table(spark, sf_dir, "documents")
     b1 = docs.where(F.col("doc_id") % 2 == 0)
     b2 = docs.where(F.col("doc_id") % 2 == 1)
-    c1, l1 = completeness_state(b1)
-    c2, l2 = completeness_state(b2)
-    return completeness_readout(
-        c1.unionByName(c2), l1.unionByName(l2)
+    cells = sum_merge(
+        ["source", "lang"], completeness_state(b1), completeness_state(b2)
     )
+    return completeness_readout(cells)
 
 
 # =============================================================================
@@ -584,41 +497,4 @@ def dq19_iqr_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side to the (type, day) spine; ranks and fences run per type
     over ~30-row keyed windows."""
     ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count("*").cast("long").alias("c"))
-    w = Window.partitionBy("event_type").orderBy("c", "d")
-    wn = Window.partitionBy("event_type")
-    ranked = daily.select(
-        "event_type",
-        "c",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(wn).alias("n"),
-    )
-    q1 = ranked.where(
-        F.col("rn") == F.expr("(n + 3) div 4")
-    ).select("event_type", "n", F.col("c").alias("q1"))
-    q3 = ranked.where(
-        F.col("rn") == F.expr("(3 * n + 3) div 4")
-    ).select("event_type", F.col("c").alias("q3"))
-    quart = q1.join(q3, "event_type")
-    out = (
-        ranked.select("event_type", "c")
-        .join(F.broadcast(quart), "event_type")
-        .withColumn(
-            "__is_out",
-            (
-                (2 * F.col("c") < 2 * F.col("q1") - 3 * (F.col("q3") - F.col("q1")))
-                | (2 * F.col("c") > 2 * F.col("q3") + 3 * (F.col("q3") - F.col("q1")))
-            ).cast("int"),
-        )
-        .groupBy("event_type", "n", "q1", "q3")
-        .agg(F.sum("__is_out").cast("long").alias("n_outlier_days"))
-    )
-    return out.select(
-        "event_type",
-        F.col("n").cast("long").alias("n_days"),
-        "q1",
-        "q3",
-        "n_outlier_days",
-    )
+    return outlier_days_readout(daily_count_state(ev))

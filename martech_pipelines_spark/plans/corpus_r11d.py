@@ -28,6 +28,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from martech_pipelines_spark.operators import text as TX
+from martech_pipelines_spark.operators.transforms import sum_merge
+from martech_pipelines_spark.operators.windows import (
+    daily_count_state,
+    outlier_days_readout,
+)
 from martech_pipelines_spark.plans.corpus import ORACLE, q
 from martech_pipelines_spark.plans.corpus_extended import _lang_score_sql
 from martech_pipelines_spark.sources import load_table
@@ -196,58 +201,6 @@ def dq20_key_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =============================================================================
 
 
-def daily_count_state(ev: DataFrame) -> DataFrame:
-    """dq19's fold unit: per (event_type, day) counter cells —
-    additive, so time- or id-split batches compose by union + sum."""
-    return ev.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count("*").cast("long").alias("c"))
-
-
-def outlier_days_readout(state: DataFrame) -> DataFrame:
-    """dq19's readout over merged daily cells: fold duplicate (type,
-    day) cells by sum, then order-statistic quartiles + doubled Tukey
-    fences (exactly dq19's report)."""
-    daily = state.groupBy("event_type", "d").agg(
-        F.sum("c").cast("long").alias("c")
-    )
-    w = Window.partitionBy("event_type").orderBy("c", "d")
-    wn = Window.partitionBy("event_type")
-    ranked = daily.select(
-        "event_type",
-        "c",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(wn).alias("n"),
-    )
-    q1 = ranked.where(F.col("rn") == F.expr("(n + 3) div 4")).select(
-        "event_type", "n", F.col("c").alias("q1")
-    )
-    q3 = ranked.where(F.col("rn") == F.expr("(3 * n + 3) div 4")).select(
-        "event_type", F.col("c").alias("q3")
-    )
-    quart = q1.join(q3, "event_type")
-    return (
-        ranked.select("event_type", "c")
-        .join(F.broadcast(quart), "event_type")
-        .withColumn(
-            "__is_out",
-            (
-                (2 * F.col("c") < 2 * F.col("q1") - 3 * (F.col("q3") - F.col("q1")))
-                | (2 * F.col("c") > 2 * F.col("q3") + 3 * (F.col("q3") - F.col("q1")))
-            ).cast("int"),
-        )
-        .groupBy("event_type", "n", "q1", "q3")
-        .agg(F.sum("__is_out").cast("long").alias("n_outlier_days"))
-        .select(
-            "event_type",
-            F.col("n").cast("long").alias("n_days"),
-            "q1",
-            "q3",
-            "n_outlier_days",
-        )
-    )
-
-
 @q("h37_incremental_outlier_days", ORACLE["dq19_iqr_outlier_days"])
 def h37_incremental_outlier_days(
     spark: SparkSession, sf_dir: str
@@ -255,15 +208,15 @@ def h37_incremental_outlier_days(
     """dq19 maintained INCREMENTALLY (SHARES dq19's oracle — the IVM
     proof): events split by event_id parity — so both batches
     contribute cells to the SAME (type, day) keys, the hard merge case
-    — each reduced to daily counter cells, merged by sum, rendered by
-    the unchanged readout.  Order statistics are readout-time over the
-    ~30-row spine, so fences re-derive correctly however the counts
-    arrived."""
+    — each reduced to ``daily_count_state``, summed and rendered by
+    ``outlier_days_readout``."""
     ev = load_table(spark, sf_dir, "events")
     b1 = ev.where(F.col("event_id") % 2 == 0)
     b2 = ev.where(F.col("event_id") % 2 == 1)
-    state = daily_count_state(b1).unionByName(daily_count_state(b2))
-    return outlier_days_readout(state)
+    daily = sum_merge(
+        ["event_type", "d"], daily_count_state(b1), daily_count_state(b2)
+    )
+    return outlier_days_readout(daily)
 
 
 # =============================================================================

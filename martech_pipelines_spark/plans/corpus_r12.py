@@ -37,6 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from martech_pipelines_spark.operators.sketches import (
+    _HLL_M,
+    _HLL_WBITS,
+    hll_merge,
+    hll_registers,
+)
 from martech_pipelines_spark.plans.corpus import q
 from martech_pipelines_spark.plans.corpus_r10 import (
     _DUCK_TOKENS,
@@ -125,25 +131,18 @@ def s32b_lexical_dense_agreement_fixedq(
 # h7b: deterministic HLL registers, incrementally maintained + full oracle
 # =============================================================================
 #
-# Register contract (both engines, integers end to end): h = the first
-# 8 hex chars of md5('hll:' || user_id) as a 32-bit unsigned value;
-# register index = top 5 bits (m = 32); w = the remaining 27 bits;
-# rho = 28 - bitlen(w) (bitlen via the engines' identical minimal
-# binary-string length — bin() in both — no log2 floats), rho = 28 when
-# w = 0.  Register value = max rho per (event_type, reg_idx); absent
-# registers report 0 via a generated (type x 0..31) frame.  Raw
-# estimate (per type, repeated on each register row for one-table
-# hashing): alpha_m * m^2 / sum_j 2^(-M_j) with alpha_32 = 0.697
-# carried as 697/1000 and the register sum carried exactly as
-# N = sum_j 2^(28 - M_j) over 2^28 — so
+# Register state and merge: operators/sketches.py (``hll_registers`` /
+# ``hll_merge``).  Absent registers report 0 via a generated
+# (type x 0..31) frame.  Raw estimate (per type, repeated on each
+# register row for one-table hashing): alpha_m * m^2 / sum_j 2^(-M_j)
+# with alpha_32 = 0.697 carried as 697/1000 and the register sum
+# carried exactly as N = sum_j 2^(28 - M_j) over 2^28 — so
 #   est = floor((697 * 32 * 32 * 2^28 * 2 + 1000 * N) / (2 * 1000 * N))
 # (half-up), pure BIGINT (697*1024*2^28*2 ≈ 3.8e17 < 2^63; N <= 32*2^28).
 # No small/large-range corrections: this is the RAW HLL estimator,
 # value-checked; the production datasketches path (h7) keeps its pytest
 # error gates.
 
-_HLL_M = 32          # 2^5 registers
-_HLL_WBITS = 27      # 32 - 5
 _HLL_ALPHA_E3 = 697  # alpha_32 = 0.697 (Flajolet et al., m = 32)
 _HLL_POW = 2 ** (_HLL_WBITS + 1)                       # 2^28, the N scale
 _HLL_EST_NUM = _HLL_ALPHA_E3 * _HLL_M * _HLL_M * _HLL_POW * 2  # ~3.8e17
@@ -188,63 +187,22 @@ _H7B_ORACLE = f"""
 """
 
 
-def _hll_registers(ev: DataFrame) -> DataFrame:
-    """(event_type, reg_idx, reg_val) deterministic HLL state from an
-    event batch — the fold unit.  Distinct (type, user) collapses
-    map-side before hashing; the register reduce is a keyed max."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("hll:"), F.col("user_id").cast("string"))), 1, 8),
-        16, 10,
-    ).cast("long")
-    w = F.col("__h") % F.lit(2 ** _HLL_WBITS)
-    rho = F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
-        F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
-    )
-    return (
-        ev.select("event_type", "user_id")
-        .distinct()
-        .withColumn("__h", h)
-        .select(
-            "event_type",
-            (F.col("__h") / F.lit(2 ** _HLL_WBITS)).cast("long").alias("reg_idx"),
-            rho.alias("__r"),
-        )
-        .groupBy("event_type", "reg_idx")
-        .agg(F.max("__r").cast("long").alias("reg_val"))
-    )
-
-
-def _hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Elementwise register max — merge(sketch(A), sketch(B)) ==
-    sketch(A∪B) by max associativity; the mergeable-state IVM fold."""
-    return (
-        a.unionByName(b)
-        .groupBy("event_type", "reg_idx")
-        .agg(F.max("reg_val").cast("long").alias("reg_val"))
-    )
-
-
 @q("h7b_incremental_hll_registers", _H7B_ORACLE)
 def h7b_incremental_hll_registers(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """h7's value-checkable twin: per-event-type distinct-user HLL
-    REGISTERS (m=32, md5 hashes, exact bit-length rho — deterministic
-    on both engines) maintained incrementally — the event log split at
-    an integer-micros watermark, each batch reduced to its own register
-    table, folded by elementwise max — and the merged state
-    hash-checked register-for-register against a DuckDB recompute from
-    the full log, plus the raw HLL estimate in pure BIGINT arithmetic.
-    This is the h30/h33 maintenance-proof pattern applied to the last
-    pytest-only sketch family: history is never re-scanned, each batch
-    shuffles only pre-combined (type, user)-distinct rows, state is 32
-    rows per key forever.  h7 keeps the production datasketches path
-    (rows-only, pytest error gates)."""
+    registers maintained incrementally — the event log split at an
+    integer-micros watermark, each batch reduced to ``hll_registers``,
+    folded by ``hll_merge`` — and the merged state hash-checked
+    register-for-register against a DuckDB recompute from the full
+    log, plus the raw HLL estimate in pure BIGINT arithmetic.  h7 keeps
+    the production datasketches path (rows-only, pytest error gates)."""
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id", "ts")
     cut_us = 1705276800000000  # 2024-01-15T00:00:00Z (integer micros, tz-proof)
-    state = _hll_merge(
-        _hll_registers(ev.where(F.unix_micros("ts") < F.lit(cut_us))),
-        _hll_registers(ev.where(F.unix_micros("ts") >= F.lit(cut_us))),
+    state = hll_merge(
+        hll_registers(ev.where(F.unix_micros("ts") < F.lit(cut_us))),
+        hll_registers(ev.where(F.unix_micros("ts") >= F.lit(cut_us))),
     )
     frame = (
         ev.select("event_type")

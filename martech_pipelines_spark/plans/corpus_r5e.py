@@ -28,6 +28,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from martech_pipelines_spark.operators.text import md5_bucket32
+from martech_pipelines_spark.operators.transforms import (
+    basket_readout,
+    basket_state,
+)
 from martech_pipelines_spark.plans.corpus import ORACLE, QUERIES, q  # noqa: F401
 from martech_pipelines_spark.sources import load_table
 
@@ -342,69 +346,14 @@ _MART10_ORACLE = f"""
 def mart10_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association rules over same-order part pairs: the 50 most frequent
     unordered pairs with support (share of orders), confidence (P(y|x))
-    and lift (observed/independent).  The basket is collected ONCE per
-    order (groupBy(order).collect_set — dedups in the same exchange, no
-    separate distinct) and unordered pairs are generated MAP-SIDE from
-    the sorted set (nested transform/slice — bounded per-order fan-out,
-    never a cartesian, no self-join re-shuffle); per-item counts and the
-    order total derive from the same basket table.  8 exchanges / 5
-    parquet scans in the self-join form became 6 / 4 — measured 13%
-    faster at sf0.1, and the removed exchanges are fact-table-sized (the
-    100-TB win).  A persist() of the basket table was measured and
-    REJECTED (2.33s vs 1.52s best-of-5: three cheap parallel recomputes
-    beat a materialization barrier — the dd12/similarity lesson again).
-    Per-item counts join back BROADCAST; the order total is a broadcast
-    1-row scalar.  All ratios divide integer counts, so cross-engine
-    equality is exact up to the shared rounding.  Top-N is
-    integer-ordered with a full tiebreak — deterministic under any
-    partitioning."""
+    and lift (observed/independent) — ``basket_readout(basket_state(
+    all))``.  The map-side pair generation replaced a self-join form: 8
+    exchanges / 5 parquet scans became 6 / 4 — measured 13% faster at
+    sf0.1, and the removed exchanges are fact-table-sized (the 100-TB
+    win).  A persist() of the basket table was measured and REJECTED
+    (2.33s vs 1.52s best-of-5: three cheap parallel recomputes beat a
+    materialization barrier — the dd12/similarity lesson again)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p")
     )
-    sets = li.groupBy("k").agg(F.sort_array(F.collect_set("p")).alias("ps"))
-    pair_expr = F.expr(
-        """
-        flatten(transform(ps, (xv, i) ->
-            transform(slice(ps, i + 2, size(ps)),
-                      yv -> struct(xv AS x, yv AS y))))
-        """
-    )
-    pairs = (
-        sets.select(F.explode(pair_expr).alias("pr"))
-        .select("pr.x", "pr.y")
-        .groupBy("x", "y")
-        .agg(F.count("*").alias("pair_cnt"))
-    )
-    top = pairs.orderBy(
-        F.desc("pair_cnt"), F.asc("x"), F.asc("y")
-    ).limit(_MART10_TOPN)
-    item_cnt = (
-        sets.select(F.explode("ps").alias("p"))
-        .groupBy("p")
-        .agg(F.count("*").alias("cnt"))
-    )
-    n_orders = sets.select(F.count("*").alias("n"))
-    cx = item_cnt.select(F.col("p").alias("x"), F.col("cnt").alias("cnt_x"))
-    cy = item_cnt.select(F.col("p").alias("y"), F.col("cnt").alias("cnt_y"))
-    return (
-        top.join(F.broadcast(cx), "x")
-        .join(F.broadcast(cy), "y")
-        .crossJoin(F.broadcast(n_orders))
-        .select(
-            "x",
-            "y",
-            "pair_cnt",
-            F.round(F.col("pair_cnt").cast("double") / F.col("n"), 6).alias(
-                "support"
-            ),
-            F.round(
-                F.col("pair_cnt").cast("double") / F.col("cnt_x"), 6
-            ).alias("conf_x_y"),
-            F.round(
-                F.col("pair_cnt").cast("double")
-                * F.col("n")
-                / (F.col("cnt_x") * F.col("cnt_y")),
-                6,
-            ).alias("lift"),
-        )
-    )
+    return basket_readout(basket_state(li), _MART10_TOPN)

@@ -17,8 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from martech_pipelines_spark.operators.transforms import (
+    basket_merge,
+    basket_readout,
+    basket_state,
+)
 from martech_pipelines_spark.plans.corpus import ORACLE, QUERIES, q  # noqa: F401
-from martech_pipelines_spark.plans.corpus_r5e import _MART10_ORACLE
+from martech_pipelines_spark.plans.corpus_r5e import _MART10_ORACLE, _MART10_TOPN
 from martech_pipelines_spark.sources import load_table
 
 
@@ -127,34 +132,9 @@ def mart13_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =============================================================================
-# h15: incrementally-maintained basket affinity (shares mart10's oracle).
-# All three state tables are additive counters, so maintenance is plain
-# keyed sums over delta batches — the h6/h11 pattern applied to the
-# pair-count mart.
+# h15: incrementally-maintained basket affinity (shares mart10's oracle and
+# its state/merge/readout, operators/transforms.py).
 # =============================================================================
-
-
-def _basket_state(li: DataFrame):
-    """(pair counts, item counts, 1-row order count) for one batch of
-    DISTINCT (orderkey, partkey) rows."""
-    a = li.select(F.col("k"), F.col("p").alias("x"))
-    b = li.select(F.col("k").alias("k2"), F.col("p").alias("y"))
-    pairs = (
-        a.join(b, (a["k"] == b["k2"]) & (a["x"] < b["y"]))
-        .groupBy("x", "y")
-        .agg(F.count("*").alias("pair_cnt"))
-    )
-    items = li.groupBy("p").agg(F.count("*").alias("cnt"))
-    orders = li.select(F.countDistinct("k").alias("n"))
-    return pairs, items, orders
-
-
-def _merge_counts(state: DataFrame, delta: DataFrame, keys: list[str], cnt: str):
-    return (
-        state.unionByName(delta)
-        .groupBy(*keys)
-        .agg(F.sum(cnt).alias(cnt))
-    )
 
 
 @q("h15_incremental_baskets", _MART10_ORACLE)
@@ -167,45 +147,10 @@ def h15_incremental_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     state must equal mart10's full recompute (shared oracle): support,
     confidence and lift all derive from the three additive tables, so
     incremental maintenance is exact, not approximate."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p"))
-        .distinct()
+    li = load_table(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p")
     )
-    pairs, items, orders = None, None, 0
-    for i in range(3):
-        batch = li.where(F.col("k") % 3 == i)
-        bp, bi, bo = _basket_state(batch)
-        if pairs is None:
-            pairs, items = bp, bi
-        else:
-            pairs = _merge_counts(pairs, bp, ["x", "y"], "pair_cnt")
-            items = _merge_counts(items, bi, ["p"], "cnt")
-        orders = bo if i == 0 else orders.unionByName(bo).agg(
-            F.sum("n").alias("n")
-        )
-    top = pairs.orderBy(F.desc("pair_cnt"), F.asc("x"), F.asc("y")).limit(50)
-    cx = items.select(F.col("p").alias("x"), F.col("cnt").alias("cnt_x"))
-    cy = items.select(F.col("p").alias("y"), F.col("cnt").alias("cnt_y"))
-    return (
-        top.join(F.broadcast(cx), "x")
-        .join(F.broadcast(cy), "y")
-        .crossJoin(F.broadcast(orders))
-        .select(
-            "x",
-            "y",
-            "pair_cnt",
-            F.round(F.col("pair_cnt").cast("double") / F.col("n"), 6).alias(
-                "support"
-            ),
-            F.round(
-                F.col("pair_cnt").cast("double") / F.col("cnt_x"), 6
-            ).alias("conf_x_y"),
-            F.round(
-                F.col("pair_cnt").cast("double")
-                * F.col("n")
-                / (F.col("cnt_x") * F.col("cnt_y")),
-                6,
-            ).alias("lift"),
-        )
-    )
+    state = basket_state(li.where(F.col("k") % 3 == 0))
+    for i in (1, 2):
+        state = basket_merge(state, basket_state(li.where(F.col("k") % 3 == i)))
+    return basket_readout(state, _MART10_TOPN)

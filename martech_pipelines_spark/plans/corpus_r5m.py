@@ -19,13 +19,14 @@ Registers into the shared QUERIES/ORACLE dicts at import time.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
+from martech_pipelines_spark.operators.sketches import (
+    percentiles_from_histogram,
+    value_histogram,
+)
 from martech_pipelines_spark.plans.corpus import ORACLE, QUERIES, q  # noqa: F401
 from martech_pipelines_spark.sources import load_table
-
-_QS = [(50, "p50"), (90, "p90"), (99, "p99")]
 
 _R29_ORACLE = """
     WITH hist AS (
@@ -62,29 +63,5 @@ def r29_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     value covering the quantile rank" definition, identical integer
     arithmetic in both engines.  percentile()/quantile_disc conventions
     never enter the comparison."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    hist = ev.select(
-        "event_type", F.floor(F.col("value") * 100).cast("long").alias("y")
-    ).groupBy("event_type", "y").agg(F.count("*").alias("cnt"))
-    wc = (
-        Window.partitionBy("event_type")
-        .orderBy("y")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wn = Window.partitionBy("event_type")
-    cum = hist.select(
-        "event_type",
-        "y",
-        F.sum("cnt").over(wc).alias("c"),
-        F.sum("cnt").over(wn).alias("n"),
-    )
-    aggs = [F.max("n").alias("n")] + [
-        F.min(
-            F.when(
-                F.col("c") >= F.ceil(F.col("n") * F.lit(pq / 100.0)),
-                F.col("y"),
-            )
-        ).alias(name)
-        for pq, name in _QS
-    ]
-    return cum.groupBy("event_type").agg(*aggs)
+    ev = load_table(spark, sf_dir, "events")
+    return percentiles_from_histogram(value_histogram(ev))

@@ -31,6 +31,11 @@ from pyspark.sql import functions as F
 
 from martech_pipelines_spark.operators import graph as G
 from martech_pipelines_spark.operators import linalg as LA
+from martech_pipelines_spark.operators.sketches import (
+    histogram_merge,
+    percentiles_from_histogram,
+    value_histogram,
+)
 from martech_pipelines_spark.plans.corpus import ORACLE, QUERIES, q  # noqa: F401
 from martech_pipelines_spark.plans.corpus_r5d import _S12_ORACLE
 from martech_pipelines_spark.sources import load_table
@@ -581,60 +586,9 @@ def a11_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =============================================================================
-# h20: incremental EXACT percentiles — the value-histogram twin of h19.
-# r29's histogram rows (event_type, y, cnt) are additive integer state:
-# per-batch histograms merge with one keyed sum, and the percentile
-# selection runs over the merged state.  Shares r29's oracle, so
-# incremental == full recompute is engine-checked exactly (counts are
-# integers — no tolerance anywhere).
+# h20: incremental EXACT percentiles — the value-histogram twin of h19,
+# sharing r29's oracle and its state/merge/readout (operators/sketches.py).
 # =============================================================================
-
-
-def _value_histogram(ev: DataFrame) -> DataFrame:
-    return (
-        ev.where(F.col("value").isNotNull())
-        .select(
-            "event_type",
-            F.floor(F.col("value") * 100).cast("long").alias("y"),
-        )
-        .groupBy("event_type", "y")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def _merge_histograms(state: DataFrame, delta: DataFrame) -> DataFrame:
-    return (
-        state.unionByName(delta)
-        .groupBy("event_type", "y")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def _percentiles_from_histogram(hist: DataFrame) -> DataFrame:
-    from pyspark.sql import Window
-
-    wc = (
-        Window.partitionBy("event_type")
-        .orderBy("y")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wn = Window.partitionBy("event_type")
-    cum = hist.select(
-        "event_type",
-        "y",
-        F.sum("cnt").over(wc).alias("c"),
-        F.sum("cnt").over(wn).alias("n"),
-    )
-    aggs = [F.max("n").alias("n")] + [
-        F.min(
-            F.when(
-                F.col("c") >= F.ceil(F.col("n") * F.lit(pq / 100.0)),
-                F.col("y"),
-            )
-        ).alias(name)
-        for pq, name in ((50, "p50"), (90, "p90"), (99, "p99"))
-    ]
-    return cum.groupBy("event_type").agg(*aggs)
 
 
 def _r29_oracle() -> str:
@@ -647,21 +601,17 @@ def _r29_oracle() -> str:
 def h20_incremental_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT p50/p90/p99 maintained incrementally: three delta batches
     (event_id % 3 split — not time-ordered, late data must merge
-    cleanly) each reduce to their (event_type, paise-value) count
-    histogram; one keyed sum merges the states; the percentile
-    selection (min{y : cum >= ceil(q*n)}) runs over the merged
-    histogram.  Integer counts merge associatively, so incremental ==
-    full is exact — checked against r29's full-recompute oracle.  At
-    100 TB the state is bounded by |types| * |distinct paise values|
-    (domain-bound), the per-batch shuffle by the batch's distinct
-    values, and raw history is never re-read."""
+    cleanly) each reduce to a ``value_histogram``, folded by
+    ``histogram_merge`` and read by ``percentiles_from_histogram`` —
+    checked against r29's full-recompute oracle.  Raw history is never
+    re-read."""
     ev = load_table(spark, sf_dir, "events")
-    state = _value_histogram(ev.where(F.col("event_id") % 3 == 0))
+    state = value_histogram(ev.where(F.col("event_id") % 3 == 0))
     for r in (1, 2):
-        state = _merge_histograms(
-            state, _value_histogram(ev.where(F.col("event_id") % 3 == r))
+        state = histogram_merge(
+            state, value_histogram(ev.where(F.col("event_id") % 3 == r))
         )
-    return _percentiles_from_histogram(state)
+    return percentiles_from_histogram(state)
 
 
 # =============================================================================

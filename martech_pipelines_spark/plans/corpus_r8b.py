@@ -75,9 +75,14 @@ t17-precedent single-rounded log trees only).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from martech_pipelines_spark.operators.transforms import (
+    customer_revenue_state,
+    gini_readout,
+    sum_merge,
+)
 from martech_pipelines_spark.plans.corpus import ORACLE, QUERIES, q  # noqa: F401
 from martech_pipelines_spark.plans.corpus_r7 import _CENT_CTES, _NLIST
 from martech_pipelines_spark.plans.corpus_extended import _DUCK_NORM
@@ -1135,141 +1140,43 @@ _MART21_ORACLE = """
 @q("mart21_revenue_gini", _MART21_ORACLE)
 def mart21_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue concentration per market segment as an EXACT integer
-    Gini coefficient (gini = (2*sum(i*x_i) - (n+1)*sum x) / (n*sum x)
-    over ascending-ranked integer-cent revenues, total (cents, custkey)
-    tie-break; emitted as half-up BIGINT e6) — the standard scalar
-    behind mart19's ABC buckets ("how unequal is the revenue base"),
-    the whale-dependency metric every retention review asks for.  One
-    keyed agg + one per-segment rank window over |customers| skinny
-    rows.  The rank-weighted sum accumulates in DECIMAL(38,0) (i*cents
-    alone passes 2^63 around 10^7 customers x 10^5-cent averages), so
-    headroom is the DECIMAL(38) range — effectively unbounded for real
-    revenue scales."""
-    rev = (
-        load_table(spark, sf_dir, "orders")
-        .join(
-            load_table(spark, sf_dir, "customer").select(
-                F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-            ),
-            "o_custkey",
+    Gini coefficient, emitted as half-up BIGINT e6 — the standard
+    scalar behind mart19's ABC buckets ("how unequal is the revenue
+    base"), the whale-dependency metric every retention review asks
+    for.  ``gini_readout(customer_revenue_state(all))``: one keyed agg
+    + one per-segment rank window over |customers| skinny rows."""
+    return gini_readout(
+        customer_revenue_state(
+            load_table(spark, sf_dir, "orders"),
+            load_table(spark, sf_dir, "customer"),
         )
-        .groupBy(F.col("c_mktsegment").alias("segment"), "o_custkey")
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-            ).cast("long").alias("cents")
-        )
-    )
-    w = Window.partitionBy("segment").orderBy("cents", "o_custkey")
-    ranked = rev.withColumn("i", F.row_number().over(w).cast("long"))
-    return ranked.groupBy("segment").agg(
-        F.count("*").cast("long").alias("n_customers"),
-        F.sum("cents").cast("long").alias("total_cents"),
-        # numerator ~ gini * n * cents * 2e6 exceeds int64 at realistic
-        # revenue scales -> exact DECIMAL(38,0) on the Spark side,
-        # HUGEINT internally in the oracle (the f12/dq2 recipe), only
-        # the final e6 ratio lands back in BIGINT.  The cast happens
-        # PER TERM (inside the sum / before any multiplication): a cast
-        # around an already-overflowed BIGINT expression guards nothing.
-        F.expr(
-            "CAST((2 * (2 * sum(CAST(i * cents AS DECIMAL(38,0)))"
-            "           - CAST(count(*) + 1 AS DECIMAL(38,0))"
-            "             * CAST(sum(CAST(cents AS DECIMAL(38,0)))"
-            "                    AS DECIMAL(38,0))) * 1000000"
-            "      + CAST(count(*) AS DECIMAL(38,0))"
-            "        * CAST(sum(CAST(cents AS DECIMAL(38,0))) AS DECIMAL(38,0)))"
-            " div (2 * CAST(count(*) AS DECIMAL(38,0))"
-            "        * CAST(sum(CAST(cents AS DECIMAL(38,0))) AS DECIMAL(38,0)))"
-            " AS BIGINT)"
-        ).cast("long").alias("gini_e6"),
     )
 
 
 # ---------------------------------------------------------------------------
-# h23: incremental Gini (mergeable customer-total state, rank-free read)
+# h23: incremental Gini (mergeable customer-total state)
 # ---------------------------------------------------------------------------
 
 
 @q("h23_incremental_gini", _MART21_ORACLE)  # SHARES mart21's oracle
 def h23_incremental_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mart21 maintained INCREMENTALLY: customer revenue totals are the
-    mergeable state (orders split by o_orderkey % 3 fold in by summing
-    cents — arbitrary batch order), and the Gini is read RANK-FREE off
-    the value histogram of the merged state: for distinct cents v_k
-    with counts c_k and running count cum, the consecutive ranks of a
-    tie group contribute v_k*c_k*(2*cum_prev + c_k + 1) to 2*sum(i*x_i)
-    exactly — so the read needs a |distinct values| histogram window,
-    not a per-customer row_number, and equals mart21's ranked form by
-    construction (shared oracle proves it).  Same DECIMAL(38)/HUGEINT
-    guard as mart21."""
+    """mart21 maintained INCREMENTALLY: orders split by o_orderkey % 3
+    into three batches, each reduced to per-customer revenue totals,
+    summed by ``sum_merge`` (arbitrary batch order) and
+    read by mart21's ``gini_readout`` — equality with the shared oracle
+    is the IVM proof."""
     orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-
-    def totals(batch):
-        return (
-            batch.join(cust, "o_custkey")
-            .groupBy(F.col("c_mktsegment").alias("segment"), "o_custkey")
-            .agg(
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                        "long"
-                    )
-                ).cast("long").alias("cents")
-            )
-        )
-
-    state = totals(orders.where(F.col("o_orderkey") % 3 == 0))
+    cust = load_table(spark, sf_dir, "customer")
+    state = customer_revenue_state(orders.where(F.col("o_orderkey") % 3 == 0), cust)
     for i in (1, 2):
-        delta = totals(orders.where(F.col("o_orderkey") % 3 == i))
-        state = (
-            state.unionByName(delta)
-            .groupBy("segment", "o_custkey")
-            .agg(F.sum("cents").cast("long").alias("cents"))
+        state = sum_merge(
+            ["segment", "o_custkey"],
+            state,
+            customer_revenue_state(
+                orders.where(F.col("o_orderkey") % 3 == i), cust
+            ),
         )
-
-    hist = state.groupBy("segment", "cents").agg(F.count("*").alias("c"))
-    wprev = (
-        Window.partitionBy("segment")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    withcum = hist.withColumn(
-        "cum_prev", F.coalesce(F.sum("c").over(wprev), F.lit(0))
-    )
-    # tie-group rank-sum identity: group at value v with count c after
-    # cum_prev earlier rows contributes v*c*(2*cum_prev + c + 1) to
-    # 2*sum(i*x_i)
-    two_sum_ix = F.sum(
-        (
-            F.col("cents").cast("decimal(38,0)")
-            * F.col("c")
-            * (2 * F.col("cum_prev") + F.col("c") + 1)
-        )
-    )
-    aggs = withcum.groupBy("segment").agg(
-        F.sum("c").cast("long").alias("n_customers"),
-        F.sum(F.col("cents") * F.col("c")).cast("long").alias("total_cents"),
-        two_sum_ix.cast("decimal(38,0)").alias("__two_sum_ix"),
-    )
-    # same half-up `div` tree as mart21 (decimal / + cast would round
-    # half-up a second time — measured off-by-one vs the ranked form)
-    return aggs.select(
-        "segment",
-        "n_customers",
-        "total_cents",
-        F.expr(
-            "CAST((2 * (__two_sum_ix"
-            "           - CAST((n_customers + 1) AS DECIMAL(38,0))"
-            "             * CAST(total_cents AS DECIMAL(38,0))) * 1000000"
-            "      + CAST(n_customers AS DECIMAL(38,0))"
-            "        * CAST(total_cents AS DECIMAL(38,0)))"
-            " div (2 * CAST(n_customers AS DECIMAL(38,0))"
-            "        * CAST(total_cents AS DECIMAL(38,0)))"
-            " AS BIGINT)"
-        ).cast("long").alias("gini_e6"),
-    )
+    return gini_readout(state)
 
 
 # ---------------------------------------------------------------------------

@@ -28,6 +28,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from martech_pipelines_spark.operators.text import md5_bucket32
+from martech_pipelines_spark.operators.windows import (
+    _MART24_PATTERN,
+    journey_readout,
+    journey_state,
+)
 from martech_pipelines_spark.plans.corpus import ORACLE, QUERIES, q  # noqa: F401
 from martech_pipelines_spark.sources import load_table
 
@@ -299,12 +304,7 @@ def dq14_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mart24: journey pattern matching (MATCH_RECOGNIZE-lite over event strings)
 # ---------------------------------------------------------------------------
 
-# Single-char event codes keep the journey string 1 byte/event; the
-# funnel pattern "a view, then a click, then a purchase, with no
-# intervening purchase" compiles to a regex whose [^p]* gaps make every
-# match unique (the trailing literal anchors at the FIRST purchase), so
-# greedy-vs-lazy engine differences cannot change the count.
-_MART24_PATTERN = "v[^p]*c[^p]*p"
+# Journey state/readout and the funnel pattern: operators/windows.py.
 
 _MART24_ORACLE = f"""
     WITH j AS (
@@ -325,49 +325,6 @@ _MART24_ORACLE = f"""
            CAST(contains(journey, 'p') AS BIGINT) AS did_convert
     FROM j
 """
-
-
-def journey_state(ev: DataFrame) -> DataFrame:
-    """Per-user journey STATE from an event batch: (user_id, n_events,
-    journey) where journey is the 1-byte-per-event code string in total
-    (ts, event_id) order — ``collect_list`` of structs + ``array_sort``
-    (collect_list alone has NO cross-partition order guarantee).  The
-    state is MERGEABLE across time-split batches: ts-ordered
-    concatenation of the per-batch strings equals the full-log string
-    (same-ts events can never straddle a ts cut), which is what the
-    h27 IVM twin folds."""
-    code = (
-        F.when(F.col("event_type") == "view", "v")
-        .when(F.col("event_type") == "click", "c")
-        .when(F.col("event_type") == "purchase", "p")
-        .when(F.col("event_type") == "signup", "s")
-        .otherwise("e")
-    )
-    return ev.groupBy("user_id").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("ts", "event_id", code.alias("code")))
-                ),
-                lambda s: s["code"],
-            ),
-            "",
-        ).alias("journey"),
-    )
-
-
-def journey_readout(state: DataFrame) -> DataFrame:
-    """Pattern-match readout over journey state (shared by mart24 and
-    its IVM twin h27): one regexp_count per user over the code string."""
-    return state.select(
-        "user_id",
-        "n_events",
-        F.regexp_count("journey", F.lit(_MART24_PATTERN))
-        .cast("long")
-        .alias("n_funnels"),
-        F.col("journey").contains("p").cast("long").alias("did_convert"),
-    )
 
 
 @q("mart24_journey_regex", _MART24_ORACLE)

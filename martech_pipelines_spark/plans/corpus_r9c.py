@@ -36,11 +36,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from martech_pipelines_spark.plans.corpus import ORACLE, QUERIES, q  # noqa: F401
-from martech_pipelines_spark.plans.corpus_r9b import (
-    _MART24_ORACLE,
+from martech_pipelines_spark.operators.windows import (
+    journey_merge,
     journey_readout,
     journey_state,
 )
+from martech_pipelines_spark.plans.corpus_r9b import _MART24_ORACLE
 from martech_pipelines_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -253,43 +254,20 @@ _H27_CUT_US = 1705276800000000  # 2024-01-15T00:00:00Z (integer micros)
 
 @q("h27_incremental_journey", _MART24_ORACLE)
 def h27_incremental_journey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mart24's IVM proof (SHARES its oracle): per-user journey strings
-    are MERGEABLE state across a time split — each batch reduces to
-    (user_id, n_events, code string in (ts, event_id) order), and
-    ts-ordered concatenation reproduces the full-log string exactly
-    (same-ts events can never straddle a ts cut, so batch order IS
-    event order).  The load-bearing detail: pattern matches are
-    computed at READ over the merged string, so funnels that SPAN the
-    batch boundary (view in January, purchase in February) are counted
-    — maintaining per-batch match counts instead would silently
-    undercount exactly those conversions.  Scale shape: each delta
-    batch shuffles only its own users' rows (one user-keyed agg), the
-    fold is a keyed full-outer concat, history is never re-scanned."""
+    """mart24's IVM proof (SHARES its oracle): the event log ts-splits
+    into two batches, each reduced to ``journey_state``, folded by
+    ``journey_merge`` and matched by ``journey_readout`` at READ — so
+    funnels that SPAN the batch boundary (view in January, purchase in
+    February) are counted, which per-batch match counts would silently
+    drop.  Each delta batch shuffles only its own users' rows; history
+    is never re-scanned."""
     ev = load_table(spark, sf_dir, "events")
-    early = journey_state(
-        ev.where(F.unix_micros("ts") < F.lit(_H27_CUT_US))
-    ).select(
-        "user_id",
-        F.col("n_events").alias("n_a"),
-        F.col("journey").alias("j_a"),
+    early = journey_state(ev.where(F.unix_micros("ts") < F.lit(_H27_CUT_US)))
+    late = journey_state(ev.where(F.unix_micros("ts") >= F.lit(_H27_CUT_US)))
+    parts = early.withColumn("batch_id", F.lit(0)).unionByName(
+        late.withColumn("batch_id", F.lit(1))
     )
-    late = journey_state(
-        ev.where(F.unix_micros("ts") >= F.lit(_H27_CUT_US))
-    ).select(
-        "user_id",
-        F.col("n_events").alias("n_b"),
-        F.col("journey").alias("j_b"),
-    )
-    state = early.join(late, "user_id", "full_outer").select(
-        "user_id",
-        (F.coalesce("n_a", F.lit(0)) + F.coalesce("n_b", F.lit(0)))
-        .cast("long")
-        .alias("n_events"),
-        F.concat(
-            F.coalesce("j_a", F.lit("")), F.coalesce("j_b", F.lit(""))
-        ).alias("journey"),
-    )
-    return journey_readout(state)
+    return journey_readout(journey_merge(parts))
 
 
 # ---------------------------------------------------------------------------

@@ -33,6 +33,11 @@ from martech_pipelines_spark.plans.corpus_extended import (
     _MINHASH_CORPUS_SQL,
 )
 from martech_pipelines_spark.operators.parallelism import spread
+from martech_pipelines_spark.operators.windows import (
+    DQ15_BUDGET_E6 as _DQ15_BUDGET_E6,
+    slo_readout,
+    slo_state,
+)
 from martech_pipelines_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -483,11 +488,6 @@ def h29_incremental_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dq15: error-budget / SLO burn monitor (daily error share vs budget)
 # ---------------------------------------------------------------------------
 
-# Single definition lives next to the streaming readout it is pinned equal
-# to (streaming/stream.py::read_slo_state) so batch and stream cannot
-# drift (ADVICE r9).
-from martech_pipelines_spark.streaming.stream import DQ15_BUDGET_E6 as _DQ15_BUDGET_E6
-
 _DQ15_ORACLE = f"""
     WITH daily AS (
         SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day_s,
@@ -524,36 +524,7 @@ def dq15_error_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine (r29 discipline — the single-partition pass never touches
     events)."""
     ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.date_format(F.col("ts").cast("date"), "yyyy-MM-dd").alias("day_s")
-    ).agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-        .cast("long")
-        .alias("n_errors"),
-    )
-    shared = daily.select(
-        "day_s",
-        "n_events",
-        "n_errors",
-        F.expr("(n_errors * CAST(2000000 AS BIGINT) + n_events) div (2 * n_events)")
-        .cast("long")
-        .alias("err_share_e6"),
-    )
-    breach = F.when(
-        F.col("err_share_e6") > _DQ15_BUDGET_E6, F.lit(1)
-    ).otherwise(F.lit(0))
-    w = Window.orderBy("day_s").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return shared.select(
-        "day_s",
-        "n_events",
-        "n_errors",
-        "err_share_e6",
-        breach.cast("long").alias("breach"),
-        F.sum(breach).over(w).cast("long").alias("breaches_cum"),
-    )
+    return slo_readout(slo_state(ev))
 
 
 # ---------------------------------------------------------------------------

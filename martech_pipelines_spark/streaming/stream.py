@@ -28,6 +28,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from martech_pipelines_spark.operators.transforms import sum_merge
+from martech_pipelines_spark.operators.windows import (
+    DQ15_BUDGET_E6,
+    slo_readout,
+    slo_state,
+)
 from martech_pipelines_spark.sources.schemas import SCHEMAS
 
 
@@ -316,6 +322,19 @@ def streaming_decontaminate_join(
     )
 
 
+def _start_fold(stream: DataFrame, fold, checkpoint_dir: str) -> "object":
+    """Start ``fold(batch_df, batch_id)`` on every micro-batch of
+    ``stream`` — the foreachBatch sink all state-maintenance streams
+    share (update mode, checkpointed so a restart resumes, at-least-once
+    per batch: each fold must be idempotent under replay)."""
+    return (
+        stream.writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+        .start()
+    )
+
+
 def streaming_minhash_ingest(
     doc_stream: DataFrame,
     index_path: str,
@@ -368,12 +387,7 @@ def streaming_minhash_ingest(
                     f"{index_path}/signatures/batch_id={batch_id}"
                 )
 
-    return (
-        doc_stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(doc_stream, probe, checkpoint_dir)
 
 
 _SCD2_STATE_SCHEMA = "ts timestamp, event_id long, event_type string"
@@ -467,12 +481,7 @@ def streaming_postings_ingest(
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         _ingest_postings_batch(batch_df, batch_id, index_path)
 
-    return (
-        doc_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(doc_stream, ingest, checkpoint_dir)
 
 
 def _ingest_postings_batch(
@@ -541,12 +550,7 @@ def streaming_upsert_sink(
             batch_df, snapshot_path, keys, ts_col, tiebreak_cols
         )
 
-    return (
-        change_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(change_stream, apply, checkpoint_dir)
 
 
 def apply_upsert_batch(
@@ -716,12 +720,7 @@ def streaming_reach_maintenance(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_reach_batch(batch_df, state_path)
 
-    return (
-        events_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(events_stream, apply, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -763,12 +762,7 @@ def streaming_covariance_maintenance(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_covariance_batch(batch_df, batch_id, state_path)
 
-    return (
-        vectors_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(vectors_stream, apply, checkpoint_dir)
 
 
 def read_covariance_state(
@@ -1057,12 +1051,7 @@ def streaming_ivf_index_maintenance(
             corpus_vec=corpus_vec,
         )
 
-    return (
-        vector_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(vector_stream, apply, checkpoint_dir)
 
 
 def streaming_prep_index_maintenance(
@@ -1086,12 +1075,7 @@ def streaming_prep_index_maintenance(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_prep_index_batch(batch_df, batch_id, index_path, w=w)
 
-    return (
-        docs_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(docs_stream, apply, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1269,12 +1253,7 @@ def streaming_session_maintenance(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_session_batch(batch_df, batch_id, state_path, gap_s)
 
-    return (
-        events_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(events_stream, apply, checkpoint_dir)
 
 
 def read_session_state(
@@ -1328,12 +1307,7 @@ def streaming_card_maintenance(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_card_batch(batch_df, batch_id, state_path)
 
-    return (
-        docs_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(docs_stream, apply, checkpoint_dir)
 
 
 def read_card_state(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1404,33 +1378,50 @@ def _assert_marker_coverage(
         )
 
 
+def _write_range_marker(batch_df: DataFrame, batch_id: int, state_path: str) -> None:
+    """Land the batch's (min_ts, max_ts) under ``{state_path}/_range``
+    (the leading underscore hides it from a plain read of the state
+    root).  Callers write it BEFORE the state partition: a crash between
+    the two writes then leaves a marker with no state partition
+    (harmless — replay overwrites both), never a state partition the
+    read-side guard cannot check (ADVICE r10)."""
+    batch_df.agg(
+        F.min("ts").alias("min_ts"), F.max("ts").alias("max_ts")
+    ).write.mode("overwrite").parquet(f"{state_path}/_range/batch_id={batch_id}")
+
+
+def _check_ordered_ingestion(
+    spark: SparkSession, state_path: str, label: str, consequence: str
+) -> tuple[set, bool]:
+    """Assert the ordered-ingestion contract over a state root's
+    ``_range`` markers and return ``(marker_ids, has_markers)``.  The
+    check is STRICT (prev.max_ts < next.min_ts): equality means a
+    same-ts pair straddled a trigger, which the contract also forbids.
+    A marker-less (pre-r10) root is accepted as-is for back-compat."""
+    ranges, marker_ids, has_markers = _read_range_markers(spark, state_path)
+    for (prev_id, _, prev_max), (next_id, next_min, _) in zip(
+        ranges, ranges[1:]
+    ):
+        if not (prev_max < next_min):
+            raise ValueError(
+                f"{label} state violates the ordered-ingestion contract: "
+                f"batch_id={prev_id} time range ends at {prev_max} but "
+                f"batch_id={next_id} starts at {next_min} — {consequence}"
+            )
+    return marker_ids, has_markers
+
+
 def apply_journey_batch(
     batch_df: DataFrame, batch_id: int, state_path: str
 ) -> None:
-    """One fold of ``streaming_journey_maintenance``: reduce the
-    micro-batch to per-user (n_events, journey code string) state and
-    land it as the state root's ``batch_id={N}`` partition with
-    OVERWRITE (replay = idempotent, the card/KMV convention).  Raw
-    events never persist — only the 1-byte-per-event code strings.
+    """One fold of ``streaming_journey_maintenance``: the batch's
+    ``_range`` marker, then its ``journey_state`` as the state root's
+    ``batch_id={N}`` partition with OVERWRITE (replay = idempotent, the
+    card/KMV convention).  Raw events never persist — only the
+    1-byte-per-event code strings."""
+    from martech_pipelines_spark.operators.windows import journey_state
 
-    Alongside the state, the batch's global (min_ts, max_ts) lands
-    under ``{state_path}/_range/batch_id={N}`` (the leading underscore
-    hides it from the plain ``spark.read.parquet(state_path)`` data
-    listing) so ``read_journey_state`` can ASSERT the ordered-ingestion
-    contract instead of silently scrambling journeys (ADVICE r9)."""
-    from martech_pipelines_spark.plans.corpus_r9b import journey_state
-
-    # Marker FIRST (ADVICE r10): a crash between the two writes then
-    # leaves a marker with no state partition (harmless — replay
-    # overwrites both), never a state partition the read-side guard
-    # cannot check.
-    (
-        batch_df.agg(
-            F.min("ts").alias("min_ts"), F.max("ts").alias("max_ts")
-        ).write.mode("overwrite").parquet(
-            f"{state_path}/_range/batch_id={batch_id}"
-        )
-    )
+    _write_range_marker(batch_df, batch_id, state_path)
     journey_state(batch_df).write.mode("overwrite").parquet(
         f"{state_path}/batch_id={batch_id}"
     )
@@ -1455,73 +1446,40 @@ def streaming_journey_maintenance(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_journey_batch(batch_df, batch_id, state_path)
 
-    return (
-        events_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(events_stream, apply, checkpoint_dir)
 
 
 def read_journey_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Pattern-match readout over the per-batch journey state: fold
-    each user's batch strings in batch_id order (collect_list carries
-    no order guarantee — sort explicitly, the mart24 discipline), sum
-    the event counts, then run the shared regex readout.
+    """Pattern-match readout over the per-batch journey state: assert
+    the ordered-ingestion contract on the ``_range`` markers (ADVICE r9
+    — an overlap raises instead of silently scrambling journey
+    strings), then ``journey_merge`` in batch_id order and
+    ``journey_readout``."""
+    from martech_pipelines_spark.operators.windows import (
+        journey_merge,
+        journey_readout,
+    )
 
-    Ordered-ingestion guard (ADVICE r9): the read-side fold is only
-    correct when micro-batches arrived in event-time order, so the
-    per-batch (min_ts, max_ts) markers written by ``apply_journey_batch``
-    are checked first — any overlap between consecutive batch_id ranges
-    raises instead of silently scrambling journey strings.  The check is
-    STRICT (prev.max_ts < next.min_ts): equality means a same-ts pair
-    straddled a trigger, which the contract also forbids (cross-batch
-    same-ts order would fall back to batch order, not event_id order).
-    State written before the markers existed (no ``_range`` dir) is
-    accepted as-is for back-compat."""
-    from martech_pipelines_spark.plans.corpus_r9b import journey_readout
-
-    ranges, marker_ids, has_markers = _read_range_markers(spark, state_path)
-    for (prev_id, _, prev_max), (next_id, next_min, _) in zip(
-        ranges, ranges[1:]
-    ):
-        if not (prev_max < next_min):
-            raise ValueError(
-                "journey state violates the ordered-ingestion contract: "
-                f"batch_id={prev_id} time range ends at {prev_max} but "
-                f"batch_id={next_id} starts at {next_min} — micro-batches "
-                "must arrive in strict event-time order (same-ts events "
-                "must never straddle a trigger); the batch-order fold "
-                "would silently scramble journey strings"
-            )
-
+    marker_ids, has_markers = _check_ordered_ingestion(
+        spark,
+        state_path,
+        "journey",
+        "micro-batches must arrive in strict event-time order (same-ts "
+        "events must never straddle a trigger); the batch-order fold "
+        "would silently scramble journey strings",
+    )
     parts = spark.read.parquet(state_path)
     _assert_marker_coverage(parts, marker_ids, has_markers, "journey")
-    state = parts.groupBy("user_id").agg(
-        F.sum("n_events").cast("long").alias("n_events"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("batch_id", "journey"))
-                ),
-                lambda s: s["journey"],
-            ),
-            "",
-        ).alias("journey"),
-    )
-    return journey_readout(state)
+    return journey_readout(journey_merge(parts))
 
 
 def apply_feature_hash_batch(
     batch_df: DataFrame, batch_id: int, state_path: str
 ) -> None:
-    """One fold of ``streaming_feature_hash_maintenance``: reduce the
-    micro-batch to signed (doc, slot) cells (fe6's fold unit, no
-    zero-filter) and land them as ``batch_id={N}`` with OVERWRITE
-    (replay = idempotent, the card/KMV/journey convention).  Cells are
-    fully additive — no ordering or doc-partitioning contract at all,
-    the easiest IVM family."""
-    from martech_pipelines_spark.plans.corpus_r11b import feature_hash_state
+    """One fold of ``streaming_feature_hash_maintenance``: land the
+    batch's ``feature_hash_state`` cells as ``batch_id={N}`` with
+    OVERWRITE (replay = idempotent, the card/KMV/journey convention)."""
+    from martech_pipelines_spark.operators.text import feature_hash_state
 
     feature_hash_state(batch_df).write.mode("overwrite").parquet(
         f"{state_path}/batch_id={batch_id}"
@@ -1540,41 +1498,25 @@ def streaming_feature_hash_maintenance(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_feature_hash_batch(batch_df, batch_id, state_path)
 
-    return (
-        docs_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(docs_stream, apply, checkpoint_dir)
 
 
 def read_feature_hash_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """fe6 readout over the per-batch cell state: sum per (doc, slot),
-    drop zero-sum cells."""
-    from martech_pipelines_spark.plans.corpus_r11b import feature_hash_readout
+    """``sum_merge`` then ``feature_hash_readout`` over the per-batch
+    cell state."""
+    from martech_pipelines_spark.operators.text import feature_hash_readout
 
-    return feature_hash_readout(
-        spark.read.parquet(state_path).select("doc_id", "slot", "weight")
-    )
+    cells = spark.read.parquet(state_path).select("doc_id", "slot", "weight")
+    return feature_hash_readout(sum_merge(["doc_id", "slot"], cells))
 
 
 def apply_slo_batch(batch_df: DataFrame, batch_id: int, state_path: str) -> None:
-    """One fold of ``streaming_slo_maintenance``: reduce the micro-batch
-    to per-day (n_events, n_errors) counter cells and land them as the
-    state root's ``batch_id={N}`` partition with OVERWRITE (replay =
-    idempotent, the card/KMV/journey convention)."""
-    (
-        batch_df.groupBy(
-            F.date_format(F.col("ts").cast("date"), "yyyy-MM-dd").alias("day_s")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-            .cast("long")
-            .alias("n_errors"),
-        )
-        .write.mode("overwrite")
-        .parquet(f"{state_path}/batch_id={batch_id}")
+    """One fold of ``streaming_slo_maintenance``: land the batch's
+    ``slo_state`` cells as the state root's ``batch_id={N}`` partition
+    with OVERWRITE (replay = idempotent, the card/KMV/journey
+    convention)."""
+    slo_state(batch_df).write.mode("overwrite").parquet(
+        f"{state_path}/batch_id={batch_id}"
     )
 
 
@@ -1591,68 +1533,26 @@ def streaming_slo_maintenance(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_slo_batch(batch_df, batch_id, state_path)
 
-    return (
-        events_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
-
-
-# Single definition of the dq15 daily error-share budget (parts-per-1e6).
-# The batch report (plans/corpus_r9d.py dq15_error_budget) imports THIS
-# constant, so the streaming readout and the batch query it is pinned
-# equal to cannot drift (ADVICE r9).
-DQ15_BUDGET_E6 = 210_000  # 21% daily error-share budget (data mean ~20%)
+    return _start_fold(events_stream, apply, checkpoint_dir)
 
 
 def read_slo_state(
     spark: SparkSession, state_path: str, budget_e6: int = DQ15_BUDGET_E6
 ) -> DataFrame:
-    """Render the error-budget report from per-batch counter state: sum
-    the cells per day, then the dq15 share/breach/burn arithmetic."""
-    from pyspark.sql import Window
-
-    daily = (
-        spark.read.parquet(state_path)
-        .groupBy("day_s")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("n_errors").cast("long").alias("n_errors"),
-        )
+    """Render the dq15 error-budget report from the per-batch counter
+    state."""
+    cells = spark.read.parquet(state_path).select(
+        "day_s", "n_events", "n_errors"
     )
-    shared = daily.select(
-        "day_s",
-        "n_events",
-        "n_errors",
-        F.expr(
-            "(n_errors * CAST(2000000 AS BIGINT) + n_events) div (2 * n_events)"
-        )
-        .cast("long")
-        .alias("err_share_e6"),
-    )
-    breach = F.when(F.col("err_share_e6") > budget_e6, F.lit(1)).otherwise(
-        F.lit(0)
-    )
-    w = Window.orderBy("day_s").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return shared.select(
-        "day_s",
-        "n_events",
-        "n_errors",
-        "err_share_e6",
-        breach.cast("long").alias("breach"),
-        F.sum(breach).over(w).cast("long").alias("breaches_cum"),
-    )
+    return slo_readout(sum_merge(["day_s"], cells), budget_e6)
 
 
 def apply_hist_batch(batch_df: DataFrame, batch_id: int, state_path: str) -> None:
-    """One fold of ``streaming_hist_maintenance``: reduce the lineitem
-    micro-batch to (flag, bin, cnt) histogram cells on the fixed r40
-    grid and land them as the state root's ``batch_id={N}`` partition
-    with OVERWRITE (replay = idempotent, the card/KMV/SLO convention)."""
-    from martech_pipelines_spark.plans.corpus_r10 import price_histogram
+    """One fold of ``streaming_hist_maintenance``: land the batch's
+    ``price_histogram`` cells as the state root's ``batch_id={N}``
+    partition with OVERWRITE (replay = idempotent, the card/KMV/SLO
+    convention)."""
+    from martech_pipelines_spark.operators.sketches import price_histogram
 
     price_histogram(batch_df).write.mode("overwrite").parquet(
         f"{state_path}/batch_id={batch_id}"
@@ -1672,53 +1572,36 @@ def streaming_hist_maintenance(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_hist_batch(batch_df, batch_id, state_path)
 
-    return (
-        lineitem_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(lineitem_stream, apply, checkpoint_dir)
 
 
 def read_hist_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Render the quantile report from per-batch histogram cells: one
-    cell-wise sum, then the shared integer-interpolation readout."""
-    from martech_pipelines_spark.plans.corpus_r10 import (
+    """Render the quantile report from per-batch histogram cells:
+    ``histogram_merge`` then ``histogram_quantile_readout``."""
+    from martech_pipelines_spark.operators.sketches import (
+        histogram_merge,
         histogram_quantile_readout,
     )
 
-    folded = (
-        spark.read.parquet(state_path)
-        .groupBy("flag", "bin")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-    return histogram_quantile_readout(folded)
+    cells = spark.read.parquet(state_path).select("flag", "bin", "cnt")
+    return histogram_quantile_readout(histogram_merge(cells))
 
 
 def apply_transitions_batch(
     batch_df: DataFrame, batch_id: int, state_path: str
 ) -> None:
-    """One fold of ``streaming_transitions_maintenance``: reduce the
-    micro-batch to (a) within-batch transition cells and (b) per-user
-    (first_type, last_type) boundary state, landed as
+    """One fold of ``streaming_transitions_maintenance``: the batch's
+    ``_range`` marker (the journey ordered-ingestion guard applies
+    identically — stitching assumes batch order = event time order),
+    then its ``transition_cells`` and ``transition_bounds`` as
     ``{state}/cells/batch_id={N}`` and ``{state}/bounds/batch_id={N}``
-    with OVERWRITE (replay = idempotent), plus the (min_ts, max_ts)
-    marker under ``{state}/_range`` — the journey ordered-ingestion
-    guard applies identically (stitching assumes batch order = event
-    time order)."""
-    from martech_pipelines_spark.plans.corpus_r10 import (
+    with OVERWRITE (replay = idempotent)."""
+    from martech_pipelines_spark.operators.windows import (
         transition_bounds,
         transition_cells,
     )
 
-    # Marker FIRST — see apply_journey_batch (ADVICE r10).
-    (
-        batch_df.agg(
-            F.min("ts").alias("min_ts"), F.max("ts").alias("max_ts")
-        ).write.mode("overwrite").parquet(
-            f"{state_path}/_range/batch_id={batch_id}"
-        )
-    )
+    _write_range_marker(batch_df, batch_id, state_path)
     transition_cells(batch_df).write.mode("overwrite").parquet(
         f"{state_path}/cells/batch_id={batch_id}"
     )
@@ -1742,69 +1625,32 @@ def streaming_transitions_maintenance(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_transitions_batch(batch_df, batch_id, state_path)
 
-    return (
-        events_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(events_stream, apply, checkpoint_dir)
 
 
 def read_transitions_state(spark: SparkSession, state_path: str) -> DataFrame:
     """Transition-matrix readout over per-batch state: assert the
-    ordered-ingestion contract (the journey ``_range`` guard), sum the
-    cells, stitch consecutive per-user appearances, and render the
-    probability report."""
-    from martech_pipelines_spark.plans.corpus_r10 import transition_readout
+    ordered-ingestion contract (the journey ``_range`` guard), then
+    ``transition_merge`` and ``transition_readout``."""
+    from martech_pipelines_spark.operators.windows import (
+        transition_merge,
+        transition_readout,
+    )
 
-    ranges, marker_ids, has_markers = _read_range_markers(spark, state_path)
-    for (prev_id, _, prev_max), (next_id, next_min, _) in zip(
-        ranges, ranges[1:]
-    ):
-        if not (prev_max < next_min):
-            raise ValueError(
-                "transition state violates the ordered-ingestion contract: "
-                f"batch_id={prev_id} ends at {prev_max} but "
-                f"batch_id={next_id} starts at {next_min} — boundary "
-                "stitching would fabricate transitions"
-            )
+    marker_ids, has_markers = _check_ordered_ingestion(
+        spark,
+        state_path,
+        "transition",
+        "boundary stitching would fabricate transitions",
+    )
 
     bounds = spark.read.parquet(f"{state_path}/bounds")
-    _assert_marker_coverage(
-        spark.read.parquet(f"{state_path}/cells"),
-        marker_ids,
-        has_markers,
-        "transition cells",
-    )
+    cells = spark.read.parquet(f"{state_path}/cells")
+    _assert_marker_coverage(cells, marker_ids, has_markers, "transition cells")
     _assert_marker_coverage(
         bounds, marker_ids, has_markers, "transition bounds"
     )
-    apps = bounds.groupBy("user_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct("batch_id", "first_type", "last_type")
-            )
-        ).alias("a")
-    )
-    k = F.greatest(F.size("a") - 1, F.lit(0))
-    zipped = F.arrays_zip(F.slice("a", 1, k), F.slice("a", 2, k))
-    stitch = (
-        apps.select(F.explode(zipped).alias("p"))
-        .select(
-            F.col("p.0.last_type").alias("from_type"),
-            F.col("p.1.first_type").alias("to_type"),
-        )
-        .groupBy("from_type", "to_type")
-        .agg(F.count("*").cast("long").alias("n_trans"))
-    )
-    cells = (
-        spark.read.parquet(f"{state_path}/cells")
-        .select("from_type", "to_type", "n_trans")
-        .unionByName(stitch)
-        .groupBy("from_type", "to_type")
-        .agg(F.sum("n_trans").cast("long").alias("n_trans"))
-    )
-    return transition_readout(cells)
+    return transition_readout(transition_merge(cells, bounds))
 
 
 # ---------------------------------------------------------------------------
@@ -1853,33 +1699,27 @@ def streaming_kmv_maintenance(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_kmv_batch(batch_df, state_path, key_col, col, k=k)
 
-    return (
-        events_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(events_stream, apply, checkpoint_dir)
 
 
 def apply_hll_batch(
     batch_df: DataFrame, state_path: str
 ) -> None:
-    """One fold of ``streaming_hll_maintenance``: build the batch's
-    deterministic HLL register table (h7b's md5/bit-length contract)
-    and elementwise-max it into the state.  max is idempotent, so
-    replays are free."""
+    """One fold of ``streaming_hll_maintenance``: ``hll_merge`` the
+    batch's ``hll_registers`` into the state with the crash-safe swap
+    protocol (max is idempotent, so replays are free)."""
     import os
 
-    from martech_pipelines_spark.plans.corpus_r12 import (
-        _hll_merge,
-        _hll_registers,
+    from martech_pipelines_spark.operators.sketches import (
+        hll_merge,
+        hll_registers,
     )
 
     _recover_swap(state_path)
     spark = batch_df.sparkSession
-    delta = _hll_registers(batch_df)
+    delta = hll_registers(batch_df)
     if os.path.isdir(state_path):
-        folded = _hll_merge(spark.read.parquet(state_path), delta)
+        folded = hll_merge(spark.read.parquet(state_path), delta)
     else:
         folded = delta
     _swap_write(folded, state_path)
@@ -1894,9 +1734,4 @@ def streaming_hll_maintenance(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_hll_batch(batch_df, state_path)
 
-    return (
-        events_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _start_fold(events_stream, apply, checkpoint_dir)

@@ -10,13 +10,13 @@ import hashlib
 from pyspark.sql import functions as F
 
 from martech_pipelines_spark.operators.graph import bfs_hops_rounds
-from martech_pipelines_spark.plans import QUERIES
-from martech_pipelines_spark.plans.corpus_r10 import (
-    histogram_quantile_readout,
+from martech_pipelines_spark.operators.sketches import histogram_quantile_readout
+from martech_pipelines_spark.operators.windows import (
     transition_bounds,
     transition_cells,
     transition_readout,
 )
+from martech_pipelines_spark.plans import QUERIES
 
 SF = "/root/testdata/sf0.001"
 
@@ -314,6 +314,10 @@ def test_completeness_matrix_crafted_defects(spark):
             "doc_id long, text string, lang string, source string, n_chars long",
         ).write.mode("overwrite").parquet(f"{td}/documents.parquet")
         r = QUERIES["dq18_completeness_matrix"](spark, td).collect()[0]
+        # the incremental twin reads the same merged lang cells: a NULL
+        # tag is no language there either
+        inc = QUERIES["h35_incremental_completeness"](spark, td).collect()
+        assert [tuple(x) for x in inc] == [tuple(r)]
     assert (
         r["n_docs"],
         r["n_null_text"],

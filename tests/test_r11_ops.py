@@ -511,7 +511,7 @@ def test_journey_state_missing_marker_raises(spark, tmp_path):
     silently exempt from the ordered-ingestion check.  A root that HAS
     markers must now cover every state batch_id — a bare state
     partition (written outside the apply path) raises."""
-    from martech_pipelines_spark.plans.corpus_r9b import journey_state
+    from martech_pipelines_spark.operators.windows import journey_state
     from martech_pipelines_spark.streaming.stream import (
         apply_journey_batch,
         read_journey_state,
@@ -533,7 +533,7 @@ def test_journey_state_marker_read_errors_propagate(spark, tmp_path):
     state unguarded."""
     from pyspark.errors import AnalysisException
 
-    from martech_pipelines_spark.plans.corpus_r9b import journey_state
+    from martech_pipelines_spark.operators.windows import journey_state
     from martech_pipelines_spark.streaming.stream import read_journey_state
 
     early, _ = _split_events(spark)
@@ -548,7 +548,7 @@ def test_journey_state_marker_only_batch_is_harmless(spark, tmp_path):
     """The marker is written BEFORE the state partition, so a crash
     between the two leaves a marker with no state — the reader must
     accept that (replay overwrites both)."""
-    from martech_pipelines_spark.plans.corpus_r9b import (
+    from martech_pipelines_spark.operators.windows import (
         journey_readout,
         journey_state,
     )
@@ -572,7 +572,7 @@ def test_journey_state_marker_only_batch_is_harmless(spark, tmp_path):
 def test_transitions_state_missing_marker_raises(spark, tmp_path):
     """Same coverage contract for the transition-matrix state (cells +
     bounds both checked against the marker set)."""
-    from martech_pipelines_spark.plans.corpus_r10 import (
+    from martech_pipelines_spark.operators.windows import (
         transition_bounds,
         transition_cells,
     )

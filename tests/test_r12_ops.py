@@ -12,11 +12,13 @@ from martech_pipelines_spark.plans.corpus_r10 import (
     sparse_topk_readout,
     trigram_tf_state,
 )
-from martech_pipelines_spark.plans.corpus_r12 import (
+from martech_pipelines_spark.operators.sketches import (
     _HLL_M,
     _HLL_WBITS,
-    _hll_merge,
-    _hll_registers,
+)
+from martech_pipelines_spark.operators.sketches import (
+    hll_merge as _hll_merge,
+    hll_registers as _hll_registers,
 )
 from martech_pipelines_spark.sources import load_table
 

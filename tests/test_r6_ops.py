@@ -273,9 +273,9 @@ def test_incremental_percentiles_equal_full(spark):
 
 
 def test_histogram_merge_handles_disjoint_and_overlapping_values(spark):
-    from martech_pipelines_spark.plans.corpus_r6 import (
-        _merge_histograms,
-        _value_histogram,
+    from martech_pipelines_spark.operators.sketches import (
+        histogram_merge as _merge_histograms,
+        value_histogram as _value_histogram,
     )
     import datetime as dt
 

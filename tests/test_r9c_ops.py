@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from martech_pipelines_spark.operators.graph import kcore_rounds
 from martech_pipelines_spark.plans import QUERIES
-from martech_pipelines_spark.plans.corpus_r9b import journey_readout, journey_state
+from martech_pipelines_spark.operators.windows import journey_readout, journey_state
 
 SF = "/root/testdata/sf0.001"
 

@@ -126,3 +126,41 @@ def test_ntile_from_rn_fewer_rows_than_buckets(spark):
         .collect()
     }
     assert got == ref
+
+
+def test_ranged_scans_equal_global_on_aggregate_input(spark):
+    """A groupBy output whose scan reads fewer columns than the caller
+    keeps: the offsets and the local ranks must come from one range
+    split.  Each exchange samples its own range bounds, so two
+    unmaterialised consumers of the split disagreed by a constant per
+    partition (mart13_rfm's wrong r_score)."""
+    from martech_pipelines_spark import caching
+
+    agg = (
+        spark.range(6000)
+        .groupBy((F.col("id") % 3000).alias("k"))
+        .agg(
+            (F.sum("id") % 97).alias("v"),
+            F.count("*").alias("extra"),
+            F.max("id").alias("extra2"),
+        )
+    )
+    order = [F.desc("v"), F.asc("k")]
+    w = Window.orderBy(*order)
+    ref = {
+        (r["k"], r["rn"], r["c"], r["p"])
+        for r in agg.select(
+            "k",
+            F.row_number().over(w).alias("rn"),
+            F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("c"),
+            F.max("v").over(w.rowsBetween(Window.unboundedPreceding, -1)).alias("p"),
+        ).collect()
+    }
+    with caching.scope():
+        rn = SC.ranged_row_number(agg, order, "rn", num_ranges=4)
+        c = SC.ranged_cumsum(agg, order, F.col("v"), "c", num_ranges=4)
+        p = SC.ranged_cummax_prev(agg, order, F.col("v"), "p", num_ranges=4)
+        got = rn.join(c.select("k", "c"), "k").join(p.select("k", "p"), "k")
+        for _ in range(3):
+            rows = got.collect()
+            assert {(r["k"], r["rn"], r["c"], r["p"]) for r in rows} == ref

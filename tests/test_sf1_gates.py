@@ -88,7 +88,7 @@ def test_histquant_ivm_merge_equals_recompute_at_sf1(spark):
     oracle sf)."""
     from pyspark.sql import functions as F
 
-    from martech_pipelines_spark.plans.corpus_r10 import (
+    from martech_pipelines_spark.operators.sketches import (
         histogram_merge,
         histogram_quantile_readout,
         price_histogram,

@@ -1399,7 +1399,7 @@ def test_streaming_journey_maintenance_matches_batch(spark, tmp_path):
     import glob as _g
     import shutil as _sh
 
-    from martech_pipelines_spark.plans.corpus_r9b import (
+    from martech_pipelines_spark.operators.windows import (
         journey_readout,
         journey_state,
     )
@@ -1686,7 +1686,7 @@ def test_streaming_hll_maintenance_matches_batch(spark, tmp_path):
     import glob as _g
     import shutil as _sh
 
-    from martech_pipelines_spark.plans.corpus_r12 import _hll_registers
+    from martech_pipelines_spark.operators.sketches import hll_registers as _hll_registers
     from martech_pipelines_spark.streaming.stream import (
         apply_hll_batch,
         stream_events_source,
