@@ -28,8 +28,15 @@ differ.
 
 Scale shape per call: ONE range shuffle of the input (the same data
 volume a global sort-window would shuffle, but into P parallel tasks
-instead of 1), one P-row aggregate + P-row broadcast.  P defaults to
-the session's shuffle partitions.
+instead of 1), read by both the local windows and the offsets, one
+P-row aggregate + P-row broadcast.  P defaults to the session's shuffle
+partitions.  Both readers must see the same split, so they share one
+exchange through Spark's exchange reuse: every input column rides as a
+trailing range key, which keeps the two readers' plans identical, so
+the input must hold no MAP column.  When ``spark.sql.exchange.reuse``
+is off the split is persisted instead and registered with ``caching``
+— the caller then releases it with ``caching.scope()``/``release()``
+after its action.
 """
 
 from __future__ import annotations
@@ -48,15 +55,18 @@ def _ranged(df: DataFrame, order_cols: list[Column], num_ranges: int | None):
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
         )
     # The offsets and the local ranks must come from ONE range split:
-    # Spark samples the range bounds per exchange, seeded by the RDD id,
-    # so two consumers of an unmaterialised ``d`` whose pruned plans
-    # differ get two different splits (rows off by a constant per
-    # partition).  One lazy persist makes both read the same split.
-    d = caching.register(
-        df.repartitionByRange(num_ranges, *order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .persist()
+    # every execution of a range exchange samples its own bounds, so the
+    # two consumers of ``d`` must read the same exchange.  Trailing range
+    # keys on every column leave the strict order unchanged but keep all
+    # columns under the exchange in both consumers, so their plans are
+    # identical and Spark runs the split once and reuses it.  With
+    # exchange reuse switched off, one lazy persist shares the split.
+    keys = [*order_cols, *(F.asc(c) for c in df.columns)]
+    d = df.repartitionByRange(num_ranges, *keys).withColumn(
+        _PID, F.spark_partition_id()
     )
+    if df.sparkSession.conf.get("spark.sql.exchange.reuse", "true").lower() != "true":
+        d = caching.register(d.persist())
     local = Window.partitionBy(_PID).orderBy(*order_cols)
     spine = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
     return d, local, spine
@@ -69,7 +79,9 @@ def ranged_row_number(
     num_ranges: int | None = None,
 ) -> DataFrame:
     """Exact global ``row_number() OVER (ORDER BY order_cols)`` as a
-    two-phase scan.  ``order_cols`` MUST be a strict total order."""
+    two-phase scan.  ``order_cols`` MUST be a strict total order.
+    One range split per call (module docstring); with exchange reuse
+    off it is persisted and registered with ``caching``."""
     d, local, spine = _ranged(df, order_cols, num_ranges)
     counts = d.groupBy(_PID).agg(F.count("*").alias("__n"))
     prefix = counts.select(
@@ -93,7 +105,9 @@ def ranged_cumsum(
     """Exact global running sum of ``value`` over the strict total order
     ``order_cols`` (inclusive frame: unboundedPreceding..currentRow).
     The value's sum type (e.g. DECIMAL) is preserved end to end — the
-    prefix offsets are summed by the engine, never through Python."""
+    prefix offsets are summed by the engine, never through Python.
+    One range split per call (module docstring); with exchange reuse
+    off it is persisted and registered with ``caching``."""
     d, local, spine = _ranged(df, order_cols, num_ranges)
     d = d.withColumn("__v", value)
     totals = d.groupBy(_PID).agg(F.sum("__v").alias("__t"))
@@ -123,7 +137,9 @@ def ranged_cummax_prev(
 ) -> DataFrame:
     """Exact global running max of ``value`` over all STRICTLY PRECEDING
     rows in the total order (exclusive frame: unboundedPreceding..-1;
-    null for the first row) — the skyline/frontier scan shape."""
+    null for the first row) — the skyline/frontier scan shape.
+    One range split per call (module docstring); with exchange reuse
+    off it is persisted and registered with ``caching``."""
     d, local, spine = _ranged(df, order_cols, num_ranges)
     d = d.withColumn("__v", value)
     totals = d.groupBy(_PID).agg(F.max("__v").alias("__t"))

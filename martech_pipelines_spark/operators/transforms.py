@@ -935,10 +935,12 @@ def gini_readout(state: DataFrame) -> DataFrame:
 # per-order fan-out, no self-join re-shuffle).  Batches must split BY
 # ORDER (an order's lines arrive together), so every pair lives in one
 # batch.  Merge: ``basket_merge`` (keyed sums).  Readout: the top-N
-# pairs by (pair_cnt desc, x, y) with support, confidence and lift from
-# integer counts; the item counts join back broadcast, the order count
-# as a 1-row scalar.
+# ``_MART10_TOPN`` pairs by (pair_cnt desc, x, y) with support,
+# confidence and lift from integer counts; the item counts join back
+# broadcast, the order count as a 1-row scalar.
 # ---------------------------------------------------------------------------
+
+_MART10_TOPN = 50
 
 
 def basket_state(li: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -975,12 +977,12 @@ def basket_merge(
     )
 
 
-def basket_readout(
-    state: tuple[DataFrame, DataFrame, DataFrame], top_n: int = 50
-) -> DataFrame:
-    """(x, y, pair_cnt, support, conf_x_y, lift) of the top-N pairs."""
+def basket_readout(state: tuple[DataFrame, DataFrame, DataFrame]) -> DataFrame:
+    """(x, y, pair_cnt, support, conf_x_y, lift) of the top pairs."""
     pairs, items, orders = state
-    top = pairs.orderBy(F.desc("pair_cnt"), F.asc("x"), F.asc("y")).limit(top_n)
+    top = pairs.orderBy(F.desc("pair_cnt"), F.asc("x"), F.asc("y")).limit(
+        _MART10_TOPN
+    )
     cx = items.select(F.col("p").alias("x"), F.col("cnt").alias("cnt_x"))
     cy = items.select(F.col("p").alias("y"), F.col("cnt").alias("cnt_y"))
     return (

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from martech_pipelines_spark.operators.text import md5_bucket32
 from martech_pipelines_spark.operators.transforms import (
+    _MART10_TOPN,
     basket_readout,
     basket_state,
 )
@@ -314,8 +315,6 @@ def r27_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # co-purchase pairs g1 ranks by centrality.
 # =============================================================================
 
-_MART10_TOPN = 50
-
 _MART10_ORACLE = f"""
     WITH li AS (
         SELECT DISTINCT l_orderkey AS k, l_partkey AS p FROM lineitem
@@ -356,4 +355,4 @@ def mart10_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p")
     )
-    return basket_readout(basket_state(li), _MART10_TOPN)
+    return basket_readout(basket_state(li))

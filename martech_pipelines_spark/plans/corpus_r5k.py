@@ -23,7 +23,7 @@ from martech_pipelines_spark.operators.transforms import (
     basket_state,
 )
 from martech_pipelines_spark.plans.corpus import ORACLE, QUERIES, q  # noqa: F401
-from martech_pipelines_spark.plans.corpus_r5e import _MART10_ORACLE, _MART10_TOPN
+from martech_pipelines_spark.plans.corpus_r5e import _MART10_ORACLE
 from martech_pipelines_spark.sources import load_table
 
 
@@ -153,4 +153,4 @@ def h15_incremental_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = basket_state(li.where(F.col("k") % 3 == 0))
     for i in (1, 2):
         state = basket_merge(state, basket_state(li.where(F.col("k") % 3 == i)))
-    return basket_readout(state, _MART10_TOPN)
+    return basket_readout(state)

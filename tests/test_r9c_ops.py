@@ -9,7 +9,11 @@ from pyspark.sql import functions as F
 
 from martech_pipelines_spark.operators.graph import kcore_rounds
 from martech_pipelines_spark.plans import QUERIES
-from martech_pipelines_spark.operators.windows import journey_readout, journey_state
+from martech_pipelines_spark.operators.windows import (
+    journey_merge,
+    journey_readout,
+    journey_state,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -63,22 +67,11 @@ def test_journey_merge_counts_boundary_spanning_funnel(spark):
     for half in (early, late):
         got = journey_readout(journey_state(half)).collect()
         assert all(r["n_funnels"] == 0 for r in got)
-    # merged state finds it (same fold as h27)
-    a = journey_state(early).select(
-        "user_id", F.col("n_events").alias("n_a"), F.col("journey").alias("j_a")
+    # merged state finds it (the fold h27 and the journey stream run)
+    parts = journey_state(early).withColumn("batch_id", F.lit(0)).unionByName(
+        journey_state(late).withColumn("batch_id", F.lit(1))
     )
-    b = journey_state(late).select(
-        "user_id", F.col("n_events").alias("n_b"), F.col("journey").alias("j_b")
-    )
-    state = a.join(b, "user_id", "full_outer").select(
-        "user_id",
-        (F.coalesce("n_a", F.lit(0)) + F.coalesce("n_b", F.lit(0)))
-        .cast("long")
-        .alias("n_events"),
-        F.concat(F.coalesce("j_a", F.lit("")), F.coalesce("j_b", F.lit(""))).alias(
-            "journey"
-        ),
-    )
+    state = journey_merge(parts)
     [r] = journey_readout(state).collect()
     assert (r["n_events"], r["n_funnels"], r["did_convert"]) == (3, 1, 1)
 

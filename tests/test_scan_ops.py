@@ -132,8 +132,9 @@ def test_ranged_scans_equal_global_on_aggregate_input(spark):
     """A groupBy output whose scan reads fewer columns than the caller
     keeps: the offsets and the local ranks must come from one range
     split.  Each exchange samples its own range bounds, so two
-    unmaterialised consumers of the split disagreed by a constant per
-    partition (mart13_rfm's wrong r_score)."""
+    consumers of the split that plan different exchanges disagreed by
+    a constant per partition (mart13_rfm's wrong r_score).  Checked with
+    exchange reuse on (one shared exchange) and off (one persist)."""
     from martech_pipelines_spark import caching
 
     agg = (
@@ -156,11 +157,17 @@ def test_ranged_scans_equal_global_on_aggregate_input(spark):
             F.max("v").over(w.rowsBetween(Window.unboundedPreceding, -1)).alias("p"),
         ).collect()
     }
-    with caching.scope():
-        rn = SC.ranged_row_number(agg, order, "rn", num_ranges=4)
-        c = SC.ranged_cumsum(agg, order, F.col("v"), "c", num_ranges=4)
-        p = SC.ranged_cummax_prev(agg, order, F.col("v"), "p", num_ranges=4)
-        got = rn.join(c.select("k", "c"), "k").join(p.select("k", "p"), "k")
-        for _ in range(3):
-            rows = got.collect()
-            assert {(r["k"], r["rn"], r["c"], r["p"]) for r in rows} == ref
+    reuse = spark.conf.get("spark.sql.exchange.reuse")
+    try:
+        for flag, collects in (("true", 3), ("false", 1)):
+            spark.conf.set("spark.sql.exchange.reuse", flag)
+            with caching.scope():
+                rn = SC.ranged_row_number(agg, order, "rn", num_ranges=4)
+                c = SC.ranged_cumsum(agg, order, F.col("v"), "c", num_ranges=4)
+                p = SC.ranged_cummax_prev(agg, order, F.col("v"), "p", num_ranges=4)
+                got = rn.join(c.select("k", "c"), "k").join(p.select("k", "p"), "k")
+                for _ in range(collects):
+                    rows = got.collect()
+                    assert {(r["k"], r["rn"], r["c"], r["p"]) for r in rows} == ref
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", reuse)
