@@ -55,9 +55,6 @@ class UserProfileExportJob:
             change_type_col=self.conf.get("change_type_col", "event_type"),
             pass_types=tuple(self.conf.get("pass_types", ["purchase", "signup"])),
             tiebreak_cols=[self.conf.get("tiebreak_col", "event_id")],
-            use_agg=bool(self.conf.get("use_agg", False)),
-            skew_mode=bool(self.conf.get("skew_mode", False)),
-            salt_buckets=int(self.conf.get("salt_buckets", 16)),
         )
         from martech_pipelines_spark.functions import profile as P
 

@@ -242,16 +242,22 @@ def latest_per_key(
 
         row_number() OVER (PARTITION BY key ORDER BY ts DESC, tiebreak...)
 
-    Exactly one shuffle (hash by key). Pinned semantics: strictly one row
-    per key; same-timestamp ties broken by ``tiebreak_cols`` descending
-    (callers pass a unique id to make output deterministic).
+    Exactly one shuffle (hash by key), which a keyed consumer such as
+    ``merge_upsert(null_safe_keys=False)`` reuses. Pinned semantics:
+    strictly one row per key; same-timestamp ties broken by
+    ``tiebreak_cols`` descending (callers pass a unique id to make output
+    deterministic).
 
-    Scale note: a hot key (one user with millions of changes) skews this
-    window. AQE skew handling does not split window partitions, so for a
-    known-skewed log pre-aggregate with ``max_by``-style reduction instead
-    (see ``latest_per_key_agg``) — same semantics, partial-aggregation
-    (map-side combine) halves the shuffled bytes and tolerates skew.
-    """
+    Why this form is the one kept: in an interleaved same-session A/B at
+    sf0.1 (4 cores) it beat a ``max_by``-over-struct aggregation on e2
+    (0.34 vs 0.44 s median, 6/6 rounds) and h9 (0.40 vs 0.49 s) and tied
+    it on the flagship and pipe5; a two-phase salted ``max_by`` lost
+    everywhere (0.66-0.74 s). On a planted hot key (one user holding 20%
+    of the sf0.1 events) the order held (e2: 0.30, 0.34 and 0.58 s) and the
+    salted phase gave no extra reduction: the partial ``WindowGroupLimit``
+    keeps one row per key in each map task before the exchange, as
+    ``max_by``'s partial aggregation does, so both shipped 1,500 rows
+    (79 KB and 97 KB) where the salted form shipped 24,660 (1.36 MB)."""
     if isinstance(key_cols, str):
         key_cols = [key_cols]
     order = [F.col(ts_col).desc()] + [F.col(c).desc() for c in (tiebreak_cols or [])]
@@ -263,72 +269,6 @@ def latest_per_key(
     )
 
 
-def latest_per_key_agg(
-    df: DataFrame,
-    key_cols: str | list[str],
-    ts_col: str,
-    tiebreak_cols: list[str] | None = None,
-) -> DataFrame:
-    """E2 (aggregation form): newest row per key via max_by on a struct.
-
-    Equivalent result to ``latest_per_key`` but expressed as an
-    aggregation, which Catalyst executes with partial (map-side) combine —
-    the skew-tolerant, lower-shuffle variant for 100-TB logs. The ordering
-    struct (ts, tiebreaks...) makes ``max_by`` deterministic under ties.
-    """
-    if isinstance(key_cols, str):
-        key_cols = [key_cols]
-    ord_cols = [ts_col] + [c for c in (tiebreak_cols or [])]
-    payload_cols = [c for c in df.columns if c not in key_cols]
-    ordering = F.struct(*[F.col(c) for c in ord_cols])
-    payload = F.struct(*[F.col(c) for c in payload_cols])
-    agg = df.groupBy(*key_cols).agg(F.max_by(payload, ordering).alias("__row"))
-    return agg.select(*key_cols, *[F.col(f"__row.{c}").alias(c) for c in payload_cols])
-
-
-def latest_per_key_salted(
-    df: DataFrame,
-    key_cols: str | list[str],
-    ts_col: str,
-    tiebreak_cols: list[str] | None = None,
-    salt_buckets: int = 16,
-    salt_on: str | None = None,
-) -> DataFrame:
-    """E2 under key skew: two-phase salted reduction.
-
-    Phase 1 reduces within (key, salt) buckets — a hot key's millions of
-    rows split across ``salt_buckets`` reducers instead of one; phase 2
-    merges the ≤``salt_buckets`` survivors per key. Both phases are max_by
-    aggregations with map-side combine, so the skewed key's shuffle volume
-    drops by ~the per-bucket reduction factor. Results are identical to
-    ``latest_per_key`` (pinned by test + shared oracle).
-
-    ``salt_on`` defaults to a deterministic hash of the tiebreak column
-    (or the timestamp) so re-runs place rows in the same buckets.
-    """
-    if isinstance(key_cols, str):
-        key_cols = [key_cols]
-    ord_cols = [ts_col] + list(tiebreak_cols or [])
-    payload_cols = [c for c in df.columns if c not in key_cols]
-    ordering = F.struct(*[F.col(c) for c in ord_cols])
-    payload = F.struct(*[F.col(c) for c in payload_cols])
-
-    salt_src = salt_on or (tiebreak_cols[0] if tiebreak_cols else ts_col)
-    salted = df.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(salt_src)), F.lit(salt_buckets))
-    )
-    phase1 = salted.groupBy(*key_cols, "__salt").agg(
-        F.max_by(payload, ordering).alias("__row"),
-        F.max(ordering).alias("__ord"),
-    )
-    phase2 = phase1.groupBy(*key_cols).agg(
-        F.max_by(F.col("__row"), F.col("__ord")).alias("__row")
-    )
-    return phase2.select(
-        *key_cols, *[F.col(f"__row.{c}").alias(c) for c in payload_cols]
-    )
-
-
 def cdc_compact(
     changes: DataFrame,
     key_cols: str | list[str],
@@ -337,31 +277,14 @@ def cdc_compact(
     change_type_col: str | None = None,
     pass_types: tuple[str, ...] = DEFAULT_PASS_TYPES,
     tiebreak_cols: list[str] | None = None,
-    use_agg: bool = False,
-    skew_mode: bool = False,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """The full flagship pipeline: watermark filter -> change-type filter
-    -> latest-per-key compaction. Every stage is a narrow predicate except
-    the single keyed shuffle in the compaction.
-
-    ``skew_mode`` (VERDICT r01 #8) flips the compaction to the two-phase
-    salted reduction — the 100x answer for a skewed key distribution is
-    this config flag, not a rewrite. Flip criterion: turn it on when the
-    hottest key's row share exceeds ~1/shuffle-partitions (i.e. a single
-    reducer would own a disproportionate slice — e.g. >3% of rows on one
-    key at 32 partitions); below that the extra phase-2 shuffle costs more
-    than it saves. Results are identical either way (shared oracle +
-    planted-skew equivalence test)."""
+    -> ``latest_per_key`` compaction. Every stage is a narrow predicate
+    except the single keyed shuffle in the compaction."""
     df = incremental_scan(changes, ts_col, since)
     if change_type_col is not None:
         df = filter_change_types(df, change_type_col, pass_types)
-    if skew_mode:
-        return latest_per_key_salted(
-            df, key_cols, ts_col, tiebreak_cols, salt_buckets=salt_buckets
-        )
-    compact = latest_per_key_agg if use_agg else latest_per_key
-    return compact(df, key_cols, ts_col, tiebreak_cols)
+    return latest_per_key(df, key_cols, ts_col, tiebreak_cols)
 
 
 def observed_compact(

@@ -111,8 +111,17 @@ def dup_clusters(
     The driver loop is the legitimate pattern for iterative algorithms:
     each iteration is a distributed join+agg, `localCheckpoint` truncates
     the growing lineage, and the convergence test is one count per round.
-    At extreme scale swap the iteration body for the large-star/small-star
-    variant (alternating asymmetric joins) — same loop skeleton."""
+
+    When the labels are still changing after ``max_iter`` rounds, the
+    component diameter exceeds what propagation can finish, and the same
+    edge table goes to large-star/small-star rounds (``_star_clusters``),
+    which need O(log n) rounds (a 150-link chain finishes there). The
+    switch is decided by the graph, not by the caller. Propagation runs
+    first because the star rounds alone were slower on every caller in
+    an interleaved same-session A/B at sf0.1 on 4 cores (medians
+    propagation vs star: dd7 4.77 vs 6.22 s, dd12 5.19 vs 5.46, dd18
+    4.69 vs 5.11, pipe4 4.43 vs 4.57, pipe8 1.48 vs 1.67; star won 4 of
+    30 rounds, identical rows), more than 10% slower on dd7 and pipe8."""
     edges_fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     # Materialize the symmetric edge table ONCE: `pairs` is typically the
     # whole LSH candidates+verify pipeline, and every iteration references
@@ -127,7 +136,6 @@ def dup_clusters(
     labels = edges.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("label")
     )
-    changed = 0
     for _ in range(max_iter):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.id)
@@ -153,15 +161,8 @@ def dup_clusters(
         )
         labels = new_labels
         if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"dup_clusters did not converge within max_iter={max_iter} "
-            f"({changed} labels still changing); the component diameter "
-            "exceeds the iteration budget — raise max_iter or switch to "
-            "the large-star/small-star variant"
-        )
-    return labels.select("id", F.col("label").alias("cluster"))
+            return labels.select("id", F.col("label").alias("cluster"))
+    return _star_clusters(edges, max_iter)
 
 
 # --- MinHash signatures ------------------------------------------------------
@@ -252,8 +253,8 @@ def _band_key_exprs(num_perm: int, bands: int) -> list[Column]:
 
 def _jaccard_scored(pairs: DataFrame, sets: DataFrame) -> DataFrame:
     """Exact shingle-set Jaccard for a (id_a, id_b) pair table given an
-    (id, sh) set table — the shared verify join of the inline, rejoin,
-    and materialized pipelines."""
+    (id, sh) set table — the shared verify join of the inline and
+    materialized pipelines."""
     a = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -515,50 +516,35 @@ def minhash_near_duplicates(
     bands: int = 4,
     shingle_n: int = 3,
     cache_intermediate: bool = True,
-    verify: str = "carried",
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates -> exact-Jaccard verify.
 
-    ``verify`` picks how the exact-Jaccard step obtains shingle sets —
-    both produce identical results (shared oracle):
+    The shingle sets the verify step needs ride along the signature
+    aggregation (``collect_set`` in the same groupBy that takes the P
+    min-hashes): one corpus scan in total, and the pair join reads each
+    candidate's set from that one table.
 
-    - ``"carried"`` (default): collect_set the shingles through the same
-      groupBy that computes the signatures. One corpus scan total, but
-      collect_set partials ARE the sets, so the keyed shuffle scales with
-      total corpus shingles. Wins when many docs are candidates (dense
-      dup corpora — the planted test corpus is ~30% dups, where this form
-      benches ~25% faster).
-    - ``"rejoin"``: keep the signature aggregation SKINNY (min() gets real
-      map-side combine; the shuffle carries P longs per doc) and re-derive
-      shingle sets for CANDIDATE docs only via a semi-join-pruned second
-      scan. Wins when candidates are rare — the normal 100-TB case
-      (near-dup rate a few %), where shuffling every doc's shingle set
-      dwarfs a pruned re-scan.
+    Why this form is the one kept: the alternative kept the signature
+    aggregation skinny (P longs per doc) and re-derived shingle sets for
+    candidate docs through a semi-join-pruned second scan. In an
+    interleaved same-session A/B at sf0.1 on 4 cores it lost on dd3
+    (3.94 vs 6.99 s median, 0/6 rounds won) and on dd7 (6.39 vs
+    10.60 s, 0/6), with identical rows.
 
-    Flip criterion: expected candidate-doc share. Below ~10% of the
-    corpus, use ``rejoin``; above, ``carried``.
-
-    ``cache_intermediate`` persists the tables each plan reads twice
-    (signature table for the self-join; rejoin's candidate sets for the
-    pair join); callers release via ``caching.release()`` after their
-    action. For a truly huge corpus, materialize signatures to a table and
-    run candidates/verify as a second job (two-stage form:
-    ``minhash_signatures`` + ``lsh_candidate_pairs`` +
-    ``jaccard_on_pairs``)."""
+    ``cache_intermediate`` persists the per-doc table, which the band
+    self-join and the verify join both read; callers release via
+    ``caching.release()`` after their action. For a truly huge corpus,
+    materialize the per-doc table once and probe it as a second job
+    (``minhash_build_index`` + ``minhash_index_near_duplicates``)."""
     from pyspark.storagelevel import StorageLevel
 
     from martech_pipelines_spark import caching
 
-    if verify not in ("carried", "rejoin"):
-        raise ValueError(f"verify must be 'carried' or 'rejoin', got {verify!r}")
     sig_aggs = [
         F.min(_md5_bucket32(F.col("s"), i)).alias(f"m{i}") for i in range(num_perm)
     ]
-    if verify == "carried":
-        expl = exploded_shingles(docs, text_col, id_col, shingle_n)
-        per_doc = expl.groupBy("id").agg(*sig_aggs, F.collect_set("s").alias("sh"))
-    else:
-        per_doc = minhash_signatures(docs, text_col, id_col, num_perm, shingle_n)
+    expl = exploded_shingles(docs, text_col, id_col, shingle_n)
+    per_doc = expl.groupBy("id").agg(*sig_aggs, F.collect_set("s").alias("sh"))
     if cache_intermediate:
         # Registered so callers can caching.release() after their action —
         # repeated invocations in one session must not accumulate caches.
@@ -585,22 +571,7 @@ def minhash_near_duplicates(
         .select("id_a", "id_b")
         .distinct()
     )
-
-    if verify == "carried":
-        sets = per_doc.select("id", "sh")
-    else:
-        cand_ids = (
-            cand.select(F.col("id_a").alias("id"))
-            .union(cand.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        sets = docs.select(
-            F.col(id_col).alias("id"), shingles(F.col(text_col), shingle_n).alias("sh")
-        ).join(cand_ids, "id", "left_semi")
-        if cache_intermediate:
-            sets = caching.register(sets.persist(StorageLevel.MEMORY_AND_DISK))
-
-    scored = _jaccard_scored(cand, sets)
+    scored = _jaccard_scored(cand, per_doc.select("id", "sh"))
     return scored.where(F.col("jaccard") >= threshold)
 
 
@@ -790,59 +761,69 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.where(F.col("src") != F.col("dst")).distinct()
 
 
-def dup_clusters_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """``dup_clusters`` via alternating large-star/small-star rounds
-    (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond")
-    — the documented swap for graphs whose component DIAMETER exceeds a
-    sane iteration budget: min-label propagation needs O(diameter) rounds
-    (a 10k-link near-dup chain = 10k rounds), the star algorithm
-    converges in O(log n) because each round rewires whole neighborhoods
-    onto their minima, not just adjacent nodes. Near-dup graphs are
-    usually shallow (use ``dup_clusters``); crawl-scale boilerplate
-    chains are not (use this). SAME output contract: (id, cluster) with
-    cluster = min member id; dd7b shares dd7's recursive-CTE oracle.
+def _not_star_nodes(edges: DataFrame) -> int:
+    """Nodes that keep a small-star output from being the fixpoint: a
+    node with two out-edges, or a node that is both a source and a
+    target. Small-star edges all point from a larger id to a smaller
+    one and keep the graph's components, so with no such node every
+    component is one star whose root is its min id, and another round
+    would return the same edges."""
+    per_node = (
+        edges.select(F.col("src").alias("v"), F.lit(1).alias("o"), F.lit(0).alias("i"))
+        .unionByName(
+            edges.select(F.col("dst").alias("v"), F.lit(0).alias("o"), F.lit(1).alias("i"))
+        )
+        .groupBy("v")
+        .agg(F.sum("o").alias("o"), F.sum("i").alias("i"))
+    )
+    return per_node.where((F.col("o") > 1) | ((F.col("o") > 0) & (F.col("i") > 0))).count()
+
+
+# Round budget of the star phase: O(log n) rounds finish any graph this
+# engine meets, so running out means a bug, not a deep graph.
+_STAR_MAX_ROUNDS = 30
+
+
+def _star_clusters(edges: DataFrame, propagation_rounds: int) -> DataFrame:
+    """``dup_clusters``' second phase: alternating large-star/small-star
+    rounds (Kiveris et al. 2014, "Connected Components in MapReduce and
+    Beyond") over an (src, dst) edge table, converging in O(log n)
+    rounds because each round rewires whole neighborhoods onto their
+    minima, not just adjacent nodes. Same output contract: (id, cluster)
+    with cluster = min member id.
 
     Each round is two join+agg phases over the current edge set; edges
-    are ``localCheckpoint``ed per round to truncate lineage, convergence
-    = edge-set fixpoint (count equality + empty symmetric difference)."""
+    are ``localCheckpoint``ed per round to truncate lineage. The round
+    stops at the fixpoint, which ``_not_star_nodes`` recognises in the
+    round that reaches it with one count (an edge-set comparison needs
+    one more round to see no change, and ran up to three counts per
+    round)."""
     nodes = (
-        pairs.select(F.col(id_a).alias("id"))
-        .union(pairs.select(F.col(id_b).alias("id")))
+        edges.select(F.col("src").alias("id"))
+        .union(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
+        edges.where(F.col("src") != F.col("dst"))
         .distinct()
         # lazy: round 1's star joins materialize it inside their own job
         .localCheckpoint(eager=False)
     )
-    converged = False
-    for _ in range(max_iter):
-        # lazy: the convergence count below materializes this round's edges
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        if new_edges.count() == edges.count() and (
-            new_edges.exceptAll(edges).limit(1).count() == 0
-        ):
-            edges = new_edges
-            converged = True
-            break
-        edges = new_edges
-    if not converged:
-        raise RuntimeError(
-            f"dup_clusters_star did not reach an edge fixpoint within "
-            f"max_iter={max_iter} rounds"
-        )
-    # fixpoint edges are stars rooted at each component's min id
-    roots = edges.groupBy("src").agg(F.min("dst").alias("root"))
-    return nodes.join(roots, nodes.id == roots.src, "left").select(
-        F.col("id"),
-        F.least(F.col("id"), F.coalesce("root", F.col("id"))).alias("cluster"),
+    for _ in range(_STAR_MAX_ROUNDS):
+        # lazy: the star test below materializes this round's edges
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+        if _not_star_nodes(edges) == 0:
+            # fixpoint edges are stars rooted at each component's min id
+            roots = edges.groupBy("src").agg(F.min("dst").alias("root"))
+            return nodes.join(roots, nodes.id == roots.src, "left").select(
+                F.col("id"),
+                F.least(F.col("id"), F.coalesce("root", F.col("id"))).alias("cluster"),
+            )
+    raise RuntimeError(
+        f"dup_clusters did not converge: labels still changing after "
+        f"max_iter={propagation_rounds} rounds of label propagation, and "
+        f"the edges not yet stars after {_STAR_MAX_ROUNDS} "
+        "large-star/small-star rounds"
     )
 
 
@@ -975,7 +956,7 @@ def keep_best_per_cluster(
     quality_col: str = "quality",
 ) -> DataFrame:
     """Canonical-document selection: given per-doc quality scores and the
-    near-dup cluster labels from ``dup_clusters``/``dup_clusters_star``,
+    near-dup cluster labels from ``dup_clusters``,
     keep exactly ONE doc per cluster — the highest-quality member, doc-id
     tiebreak. Docs absent from ``clusters`` (never paired) are singleton
     clusters labeled by their own id, so the output is the full

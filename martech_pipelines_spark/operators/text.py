@@ -201,6 +201,14 @@ def repetition_table(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     standard repeated-n-gram quality filter in LLM data pipelines (docs
     with a dominant bigram are boilerplate/spam). Two keyed aggregations,
     both with map-side combine; docs with <2 tokens drop out (no bigrams).
+
+    Why this form is the one kept: a shuffle-free per-row form (sort the
+    bigram array, fold the longest equal run) ran 2.0x slower in an
+    interleaved same-session A/B at sf0.1 on 4 cores (t9 2.02 s vs
+    4.11 s median, 6/6 rounds, identical rows): it runs in the scan's
+    partitions, and the sf0.1 corpus is one parquet file, so the fold
+    ran on one core while the keyed aggregations spread over the
+    shuffle partitions.
     """
     grams = docs.select(
         F.col(id_col), F.explode(bigrams(F.col(text_col))).alias("gram")
@@ -210,44 +218,6 @@ def repetition_table(docs: DataFrame, text_col: str = "text", id_col: str = "doc
         F.sum("cnt").alias("n_bigrams"),
         F.round(F.max("cnt") / F.sum("cnt"), 4).alias("rep_ratio"),
     )
-
-
-def repetition_cols(col: Column) -> dict[str, Column]:
-    """Per-row repetition features with ZERO shuffle — the 100-TB form of
-    ``repetition_table``.
-
-    The relational form explodes every bigram and shuffles on
-    (doc, gram); at corpus scale that shuffle is proportional to total
-    token count. But the top-bigram count within one document is a purely
-    row-local quantity: sort the bigram array, then the longest run of
-    equal adjacent elements IS the max multiplicity. One array_sort + one
-    aggregate fold per row, all inside codegen — no exchange anywhere.
-
-    Note the fold keeps (prev, run, best) in a struct; the run-update
-    expression appears twice because Catalyst does no CSE inside lambda
-    bodies — it is two comparisons, not a recomputed subtree."""
-    grams = F.array_sort(bigrams(col))
-    n = F.size(grams)
-
-    def step(acc: Column, g: Column) -> Column:
-        is_new = acc["prev"].isNull() | (acc["prev"] != g)
-        run = F.when(is_new, F.lit(1).cast("long")).otherwise(acc["run"] + 1)
-        return F.struct(
-            g.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc["best"], run).alias("best"),
-        )
-
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best"),
-    )
-    folded = F.aggregate(grams, init, step)
-    return {
-        "n_bigrams": n.cast("long"),
-        "rep_ratio": F.when(n > 0, F.round(folded["best"] / n, 4)),
-    }
 
 
 # --- sequence packing --------------------------------------------------------
@@ -495,7 +465,16 @@ def substring_dup_stats(
     small — a join-back formulation re-executed the explode three times
     and shipped that set to every executor). Three shuffles total, each on
     the already-collapsed (doc, hash) table, which is the minimum for
-    hash-partitioned cross-doc counting."""
+    hash-partitioned cross-doc counting.
+
+    Why this form is the one kept: the alternative persisted the
+    (doc, hash) table and joined map-side-combined per-hash doc counts
+    back, so that AQE's skew-join split could handle a boilerplate hash.
+    In an interleaved same-session A/B on 4 cores it lost at sf0.1 (dd8
+    2.11 vs 2.33 s median, 0/6 rounds won; pipe2 5.42 vs 5.80 s, 2/6) and
+    on a planted hot window (25,000 short docs sharing one 8-token header,
+    20% of the (doc, hash) rows: 2.12 vs 2.86 s, 0/4), with identical
+    rows on every input."""
     from pyspark.sql import Window
 
     win = _window_table(docs, w, text_col, id_col)
@@ -505,51 +484,6 @@ def substring_dup_stats(
     flagged = per_doc_hash.withColumn(
         "n_docs", F.count("*").over(Window.partitionBy("h"))
     )
-    agg = flagged.groupBy(id_col).agg(
-        F.sum("cnt").cast("long").alias("n_windows"),
-        F.sum(F.when(F.col("n_docs") >= 2, F.col("cnt")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("n_dup_windows"),
-    )
-    return agg.select(
-        F.col(id_col),
-        "n_windows",
-        "n_dup_windows",
-        F.round(F.col("n_dup_windows") / F.col("n_windows"), 4).alias("dup_ratio"),
-    )
-
-
-def substring_dup_stats_skew(
-    docs: DataFrame,
-    w: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Skew-hardened twin of ``substring_dup_stats`` — SAME output rows
-    (the corpus queries share one oracle).
-
-    The window form puts every occurrence of one hash into one task; a
-    boilerplate window shared by millions of docs (site headers, license
-    blurbs — CommonCrawl reality) makes that task the straggler, and a
-    count-over-window has no partial aggregation to soften it. This form
-    persists the collapsed (doc, hash) table once, derives per-hash doc
-    counts with a map-side-combined groupBy (hot keys partial-aggregate
-    in every mapper BEFORE the shuffle), and joins the counts back — the
-    join redistributes by hash too, but AQE's skew-join splitting
-    (``spark.sql.adaptive.skewJoin``) handles an oversized partition
-    where a window operator cannot. Pick this form when window-hash
-    frequencies are heavy-tailed; the window form when they are flat."""
-    from pyspark import StorageLevel
-
-    from martech_pipelines_spark import caching
-
-    win = _window_table(docs, w, text_col, id_col)
-    per_doc_hash = win.groupBy(id_col, "h").agg(F.count("*").alias("cnt"))
-    per_doc_hash = caching.register(
-        per_doc_hash.persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    hcount = per_doc_hash.groupBy("h").agg(F.count("*").alias("n_docs"))
-    flagged = per_doc_hash.join(hcount, "h")
     agg = flagged.groupBy(id_col).agg(
         F.sum("cnt").cast("long").alias("n_windows"),
         F.sum(F.when(F.col("n_docs") >= 2, F.col("cnt")).otherwise(F.lit(0)))

@@ -161,7 +161,6 @@ _WINDOW_PRIORITY = [
     "t5_fingerprint",
     "t8_pii_redact",
     "t9_repetition",
-    "t9b_repetition_hof",
     "t10_sequence_pack",
     "t11_chunk_spans",
     "t12_deterministic_sample",
@@ -170,7 +169,6 @@ _WINDOW_PRIORITY = [
     "dd1_exact_dedup",
     "dd2_dup_groups",
     "dd3_minhash_near_dup",
-    "dd3b_minhash_rejoin",
     "dd3c_minhash_materialized",
     "dd7_dup_clusters",
     "dd4_simhash",
@@ -208,7 +206,6 @@ _WINDOW_PRIORITY = [
     "mart27_ab_by_segment",
     "t53_token_burstiness",
     "flagship_cdc_dedup",
-    "flagship_cdc_dedup_skew",
     "sql_cte_dedup",
     "a1_scan_project",
     "a6_range",
@@ -221,7 +218,6 @@ _WINDOW_PRIORITY = [
     "d2_semi_join_dim",
     "e1_rank_window",
     "e2_latest_per_key_agg",
-    "e2b_latest_salted",
     "e3_count",
     "e5_identity_coalesce",
     "f5_mobile_sanity",

@@ -90,33 +90,6 @@ def flagship_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q("flagship_cdc_dedup_skew", _FLAGSHIP_ORACLE)
-def flagship_cdc_dedup_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship with ``skew_mode=True`` (VERDICT r01 #8): identical
-    semantics through the two-phase salted compaction, SHARING the
-    flagship oracle — proof the skew flag is a pure physical-plan change.
-    Flip criterion documented at operators/cdc.py::cdc_compact."""
-    ev = load_table(spark, sf_dir, "events")
-    compact = cdc.cdc_compact(
-        ev,
-        key_cols="user_id",
-        ts_col="ts",
-        since=None,
-        change_type_col="event_type",
-        pass_types=("purchase", "signup"),
-        tiebreak_cols=["event_id"],
-        skew_mode=True,
-    )
-    return compact.select(
-        "user_id",
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_str"),
-        "event_type",
-        P.modify_reward(F.col("value")).alias("value_paise"),
-        F.get_json_object("props", "$.k").cast("int").alias("k"),
-    )
-
-
 _SQL_CTE_TEXT = """
 WITH latest_updates_time AS (
     SELECT user_id, ts FROM (
@@ -380,36 +353,11 @@ def e1_rank_window(spark, sf_dir):
     """,
 )
 def e2_latest_per_key_agg(spark, sf_dir):
-    """E2 (aggregation form): max_by over an ordering struct — the
-    skew-tolerant compaction with map-side partial aggregation."""
+    """E2 over the whole change log (no change-type filter): the newest
+    row per user through ``cdc.latest_per_key``. The name stays because
+    benchmark workloads and tools refer to the query by it."""
     ev = load_table(spark, sf_dir, "events")
-    out = cdc.latest_per_key_agg(ev, "user_id", "ts", tiebreak_cols=["event_id"])
-    return out.select(
-        "user_id",
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_str"),
-    )
-
-
-@q(
-    "e2b_latest_salted",
-    """
-    SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str
-    FROM (
-        SELECT user_id, event_id, ts,
-               row_number() OVER (
-                   PARTITION BY user_id ORDER BY ts DESC, event_id DESC
-               ) AS rnk
-        FROM events
-    ) WHERE rnk = 1
-    """,
-)
-def e2b_latest_salted(spark, sf_dir):
-    """E2 under skew: two-phase salted max_by — identical semantics to the
-    window form (same oracle), but a hot key's rows reduce across 16 salt
-    buckets before the final per-key merge."""
-    ev = load_table(spark, sf_dir, "events")
-    out = cdc.latest_per_key_salted(ev, "user_id", "ts", tiebreak_cols=["event_id"])
+    out = cdc.latest_per_key(ev, "user_id", "ts", tiebreak_cols=["event_id"])
     return out.select(
         "user_id",
         "event_id",

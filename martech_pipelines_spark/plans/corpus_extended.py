@@ -247,40 +247,6 @@ def t9_repetition(spark, sf_dir):
     return TX.repetition_table(docs)
 
 
-# Same oracle as t9 — the shuffle-free form must produce identical rows.
-_T9_ORACLE = f"""
-    WITH toks AS (
-      SELECT doc_id, {_DUCK_TOKENS.format(col='text')} AS t FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, t[CAST(i AS INTEGER)] || ' ' || t[CAST(i+1 AS INTEGER)] AS gram
-      FROM toks, unnest(range(1, len(t))) AS u(i)
-    ),
-    per AS (SELECT doc_id, gram, count(*) AS cnt FROM grams GROUP BY 1, 2)
-    SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bigrams,
-           round(CAST(max(cnt) AS DOUBLE) / sum(cnt), 4) AS rep_ratio
-    FROM per GROUP BY doc_id
-"""
-
-
-@q("t9b_repetition_hof", _T9_ORACLE)
-def t9b_repetition_hof(spark, sf_dir):
-    """t9 with ZERO shuffle (the 100-TB form): top-bigram multiplicity =
-    longest equal-adjacent run in the sorted bigram array, one codegen
-    fold per row. Shares t9's oracle — proof the shuffle elimination is a
-    pure physical change."""
-    docs = load_table(spark, sf_dir, "documents")
-    cols = TX.repetition_cols(F.col("text"))
-    return (
-        docs.select(
-            "doc_id",
-            cols["n_bigrams"].alias("n_bigrams"),
-            cols["rep_ratio"].alias("rep_ratio"),
-        )
-        .where(F.col("n_bigrams") > 0)
-    )
-
-
 @q(
     "t10_sequence_pack",
     f"""
@@ -552,34 +518,13 @@ def dd3_minhash_near_dup(spark, sf_dir):
     )
 
 
-@q("dd3b_minhash_rejoin", _minhash_oracle())
-def dd3b_minhash_rejoin(spark, sf_dir):
-    """dd3 through the ``verify='rejoin'`` path: skinny signature shuffle
-    (P longs per doc, real map-side combine) + semi-join-pruned shingle
-    re-derivation for candidate docs only — the sparse-corpus 100-TB form.
-    Shares dd3's bit-exact oracle, proving the two verify strategies are
-    interchangeable (flip criterion: candidate share ~10%, see
-    operators/dedup.py::minhash_near_duplicates)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = docs.where(F.col("doc_id") % 5 == 0)
-    near = base.select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.concat("text", F.lit(" zz yy xx")).alias("text"),
-    )
-    corpus = base.unionByName(near)
-    return DD.minhash_near_duplicates(
-        corpus, threshold=0.5, num_perm=16, bands=4, shingle_n=3, verify="rejoin"
-    )
-
-
 @q("dd3c_minhash_materialized", _minhash_oracle())
 def dd3c_minhash_materialized(spark, sf_dir):
     """dd3 through the MATERIALIZED two-stage form: stage 1 writes the
     signature+shingle-set table once (one raw-corpus scan); stage 2 runs
     candidates + exact-Jaccard verify reading ONLY that table — the
     re-run path for threshold/band sweeps over a 100-TB corpus. Shares
-    dd3's bit-exact oracle (third interchangeable formulation, after the
-    carried and rejoin verify strategies); the stage-2 no-raw-scan claim
+    dd3's bit-exact oracle; the stage-2 no-raw-scan claim
     is pinned by a plan assertion in tests/test_plans.py."""
     import tempfile
 

@@ -257,8 +257,7 @@ def dq14_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join/shuffle-key skew diagnostic on the event stream's join key
     (user_id): the top-{_DQ14_TOP} heaviest keys with their half-up e6
     row share and their multiple of the mean per-key load (half-up e4)
-    — the report that DECIDES whether a key needs salting
-    (flagship_cdc_dedup_skew), AQE skew-join (dd8b), or nothing, and
+    — the report that shows whether one key dominates a shuffle, and
     that monitors whether one whale user is about to make every
     downstream groupBy lopsided.  Scale shape: one map-side-combined
     per-key count, a 1-row totals broadcast, and a TakeOrdered top-k

@@ -529,18 +529,6 @@ def pipe2_scale_prep(spark, sf_dir):
     )
 
 
-@q("dd8b_substring_window_skew", _DD8_ORACLE)  # SHARES dd8's oracle
-def dd8b_substring_window_skew(spark, sf_dir):
-    """dd8 through the skew-hardened formulation (persisted (doc,hash)
-    table + map-side-combined per-hash counts + AQE-skew-join join-back
-    instead of a count-over-window). Same rows by construction — shares
-    dd8's full oracle; the flip criterion (heavy-tailed window-hash
-    frequencies, i.e. boilerplate-dominated corpora) is documented on the
-    operator."""
-    docs = load_table(spark, sf_dir, "documents")
-    return TX.substring_dup_stats_skew(docs, w=_DD8_W)
-
-
 # =============================================================================
 # t15: URL / domain blocklist filter
 # =============================================================================
@@ -645,40 +633,6 @@ def t16_mixture_weights(spark, sf_dir):
         share.alias("token_share"),
         F.round(F.sqrt(share), 4).alias("weight_sqrt"),
     )
-
-
-# =============================================================================
-# dd7b: connected components via large-star/small-star
-# =============================================================================
-
-from martech_pipelines_spark.plans.corpus_extended import _dup_cluster_oracle  # noqa: E402
-
-
-@q("dd7b_dup_clusters_star", _dup_cluster_oracle())  # SHARES dd7's oracle
-def dd7b_dup_clusters_star(spark, sf_dir):
-    """dd7 through the large-star/small-star algorithm (Kiveris et al.
-    2014) instead of min-label propagation — O(log n) rounds vs
-    O(diameter), the documented swap for deep components. Identical
-    cluster labels by construction (both converge to min-member-id);
-    shares dd7's recursive-CTE oracle, and pytest additionally pins the
-    two operators equal on adversarial chain graphs the propagation form
-    cannot finish within its budget."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    from martech_pipelines_spark.operators import dedup as DD
-
-    base = docs.where(F.col("doc_id") % 5 == 0)
-    exact = docs.where(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    near = base.select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.concat("text", F.lit(" zz yy xx")).alias("text"),
-    )
-    corpus = base.unionByName(exact).unionByName(near)
-    pairs = DD.minhash_near_duplicates(
-        corpus, threshold=0.5, num_perm=16, bands=4, shingle_n=3
-    )
-    return DD.dup_clusters_star(pairs).select("id", F.col("cluster").cast("long"))
 
 
 # =============================================================================

@@ -377,14 +377,14 @@ def streaming_minhash_ingest(
             # per-batch directories with overwrite => replaying a
             # micro-batch (foreachBatch is at-least-once after failures)
             # replaces its previous attempt instead of double-appending
-            pairs.write.mode("overwrite").parquet(
-                f"{pairs_path}/batch_id={batch_id}"
-            )
+            _write_batch_partition(pairs, pairs_path, batch_id)
             if grow_index:
-                DD.minhash_signature_table(
-                    batch_df, num_perm=num_perm, shingle_n=shingle_n
-                ).write.mode("overwrite").parquet(
-                    f"{index_path}/signatures/batch_id={batch_id}"
+                _write_batch_partition(
+                    DD.minhash_signature_table(
+                        batch_df, num_perm=num_perm, shingle_n=shingle_n
+                    ),
+                    f"{index_path}/signatures",
+                    batch_id,
                 )
 
     return _start_fold(doc_stream, probe, checkpoint_dir)
@@ -502,9 +502,11 @@ def _ingest_postings_batch(
     postings.write.mode("overwrite").partitionBy("term").parquet(
         f"{index_path}/postings/batch_id={batch_id}"
     )
-    toks_df.agg(
-        F.sum("dl").alias("sum_dl"), F.count("*").alias("n_docs")
-    ).write.mode("overwrite").parquet(f"{index_path}/stats/batch_id={batch_id}")
+    _write_batch_partition(
+        toks_df.agg(F.sum("dl").alias("sum_dl"), F.count("*").alias("n_docs")),
+        f"{index_path}/stats",
+        batch_id,
+    )
 
 
 def streaming_upsert_sink(
@@ -563,21 +565,39 @@ def apply_upsert_batch(
     """One fold of ``streaming_upsert_sink`` (module-level so crash
     recovery is directly testable): recover an interrupted swap, union
     the batch with the live snapshot, re-compact, swap atomically."""
-    import os
-    import shutil
-
     from martech_pipelines_spark.operators.cdc import latest_per_key
 
-    _recover_swap(snapshot_path)
-    spark = batch_df.sparkSession
-    cols = batch_df.columns
-    if os.path.isdir(snapshot_path):
-        base = spark.read.parquet(snapshot_path).select(*cols)
-        unioned = base.unionByName(batch_df)
+    def compact(df: DataFrame) -> DataFrame:
+        return latest_per_key(df, keys, ts_col, tiebreak_cols=tiebreak_cols)
+
+    _swap_fold(
+        batch_df,
+        snapshot_path,
+        compact(batch_df),
+        lambda base: compact(base.select(*batch_df.columns).unionByName(batch_df)),
+    )
+
+
+def _swap_fold(batch_df: DataFrame, state_path: str, cold: DataFrame, merge) -> None:
+    """The swap-protocol fold every replace-in-place state runs: recover
+    an interrupted swap, then swap in ``merge(live state)`` when a live
+    state exists, else ``cold`` (the batch's own state)."""
+    import os
+
+    _recover_swap(state_path)
+    if os.path.isdir(state_path):
+        folded = merge(batch_df.sparkSession.read.parquet(state_path))
     else:
-        unioned = batch_df
-    folded = latest_per_key(unioned, keys, ts_col, tiebreak_cols=tiebreak_cols)
-    _swap_write(folded, snapshot_path)
+        folded = cold
+    _swap_write(folded, state_path)
+
+
+def _write_batch_partition(df: DataFrame, root: str, batch_id: int) -> None:
+    """Overwrite ``{root}/batch_id={batch_id}`` with ``df``: the
+    per-batch partition convention of every additive state, under which
+    an at-least-once replay of a micro-batch replaces its own partition
+    instead of adding to the state a second time."""
+    df.write.mode("overwrite").parquet(f"{root}/batch_id={batch_id}")
 
 
 def _recover_swap(path: str) -> None:
@@ -689,21 +709,17 @@ def apply_reach_batch(batch_df: DataFrame, state_path: str) -> None:
     same crash-safe swap protocol as the upsert sink.  The merge is
     idempotent (union + distinct), so foreachBatch's at-least-once
     replays are free."""
-    import os
-
     from martech_pipelines_spark.operators.transforms import (
         merge_user_days,
         user_days_of,
     )
 
-    _recover_swap(state_path)
-    spark = batch_df.sparkSession
-    if os.path.isdir(state_path):
-        base = spark.read.parquet(state_path)
-        folded = merge_user_days(base, batch_df)
-    else:
-        folded = user_days_of(batch_df)
-    _swap_write(folded, state_path)
+    _swap_fold(
+        batch_df,
+        state_path,
+        user_days_of(batch_df),
+        lambda base: merge_user_days(base, batch_df),
+    )
 
 
 def streaming_reach_maintenance(
@@ -743,9 +759,7 @@ def apply_covariance_batch(
     from martech_pipelines_spark.operators.linalg import covariance_moments
 
     moments = covariance_moments(batch_df)
-    moments.write.mode("overwrite").parquet(
-        f"{state_path}/batch_id={batch_id}"
-    )
+    _write_batch_partition(moments, state_path, batch_id)
 
 
 def streaming_covariance_maintenance(
@@ -1230,9 +1244,7 @@ def apply_session_batch(
     partition with identical content."""
     from martech_pipelines_spark.operators.windows import session_intervals
 
-    session_intervals(batch_df, gap_s).write.mode("overwrite").parquet(
-        f"{state_path}/batch_id={batch_id}"
-    )
+    _write_batch_partition(session_intervals(batch_df, gap_s), state_path, batch_id)
 
 
 def streaming_session_maintenance(
@@ -1288,9 +1300,7 @@ def apply_card_batch(
     convention)."""
     from martech_pipelines_spark.operators.prep import dataset_card_state
 
-    dataset_card_state(batch_df).write.mode("overwrite").parquet(
-        f"{state_path}/batch_id={batch_id}"
-    )
+    _write_batch_partition(dataset_card_state(batch_df), state_path, batch_id)
 
 
 def streaming_card_maintenance(
@@ -1385,9 +1395,11 @@ def _write_range_marker(batch_df: DataFrame, batch_id: int, state_path: str) -> 
     the two writes then leaves a marker with no state partition
     (harmless — replay overwrites both), never a state partition the
     read-side guard cannot check (ADVICE r10)."""
-    batch_df.agg(
-        F.min("ts").alias("min_ts"), F.max("ts").alias("max_ts")
-    ).write.mode("overwrite").parquet(f"{state_path}/_range/batch_id={batch_id}")
+    _write_batch_partition(
+        batch_df.agg(F.min("ts").alias("min_ts"), F.max("ts").alias("max_ts")),
+        f"{state_path}/_range",
+        batch_id,
+    )
 
 
 def _check_ordered_ingestion(
@@ -1422,9 +1434,7 @@ def apply_journey_batch(
     from martech_pipelines_spark.operators.windows import journey_state
 
     _write_range_marker(batch_df, batch_id, state_path)
-    journey_state(batch_df).write.mode("overwrite").parquet(
-        f"{state_path}/batch_id={batch_id}"
-    )
+    _write_batch_partition(journey_state(batch_df), state_path, batch_id)
 
 
 def streaming_journey_maintenance(
@@ -1481,9 +1491,7 @@ def apply_feature_hash_batch(
     OVERWRITE (replay = idempotent, the card/KMV/journey convention)."""
     from martech_pipelines_spark.operators.text import feature_hash_state
 
-    feature_hash_state(batch_df).write.mode("overwrite").parquet(
-        f"{state_path}/batch_id={batch_id}"
-    )
+    _write_batch_partition(feature_hash_state(batch_df), state_path, batch_id)
 
 
 def streaming_feature_hash_maintenance(
@@ -1515,9 +1523,7 @@ def apply_slo_batch(batch_df: DataFrame, batch_id: int, state_path: str) -> None
     ``slo_state`` cells as the state root's ``batch_id={N}`` partition
     with OVERWRITE (replay = idempotent, the card/KMV/journey
     convention)."""
-    slo_state(batch_df).write.mode("overwrite").parquet(
-        f"{state_path}/batch_id={batch_id}"
-    )
+    _write_batch_partition(slo_state(batch_df), state_path, batch_id)
 
 
 def streaming_slo_maintenance(
@@ -1554,9 +1560,7 @@ def apply_hist_batch(batch_df: DataFrame, batch_id: int, state_path: str) -> Non
     convention)."""
     from martech_pipelines_spark.operators.sketches import price_histogram
 
-    price_histogram(batch_df).write.mode("overwrite").parquet(
-        f"{state_path}/batch_id={batch_id}"
-    )
+    _write_batch_partition(price_histogram(batch_df), state_path, batch_id)
 
 
 def streaming_hist_maintenance(
@@ -1602,12 +1606,8 @@ def apply_transitions_batch(
     )
 
     _write_range_marker(batch_df, batch_id, state_path)
-    transition_cells(batch_df).write.mode("overwrite").parquet(
-        f"{state_path}/cells/batch_id={batch_id}"
-    )
-    transition_bounds(batch_df).write.mode("overwrite").parquet(
-        f"{state_path}/bounds/batch_id={batch_id}"
-    )
+    _write_batch_partition(transition_cells(batch_df), f"{state_path}/cells", batch_id)
+    _write_batch_partition(transition_bounds(batch_df), f"{state_path}/bounds", batch_id)
 
 
 def streaming_transitions_maintenance(
@@ -1666,20 +1666,12 @@ def apply_kmv_batch(
     protocol.  The fold is IDEMPOTENT (distinct hashes + k-smallest),
     so foreachBatch's at-least-once replays are free — the reach sink's
     contract, at fixed k-row-per-key state size."""
-    import os
-
     from martech_pipelines_spark.operators import sketches as SK
 
-    _recover_swap(state_path)
-    spark = batch_df.sparkSession
     delta = SK.kmv_sketch_table(batch_df, key_col, col, k=k)
-    if os.path.isdir(state_path):
-        folded = SK.kmv_merge(
-            spark.read.parquet(state_path), delta, key_col, k=k
-        )
-    else:
-        folded = delta
-    _swap_write(folded, state_path)
+    _swap_fold(
+        batch_df, state_path, delta, lambda base: SK.kmv_merge(base, delta, key_col, k=k)
+    )
 
 
 def streaming_kmv_maintenance(
@@ -1708,21 +1700,13 @@ def apply_hll_batch(
     """One fold of ``streaming_hll_maintenance``: ``hll_merge`` the
     batch's ``hll_registers`` into the state with the crash-safe swap
     protocol (max is idempotent, so replays are free)."""
-    import os
-
     from martech_pipelines_spark.operators.sketches import (
         hll_merge,
         hll_registers,
     )
 
-    _recover_swap(state_path)
-    spark = batch_df.sparkSession
     delta = hll_registers(batch_df)
-    if os.path.isdir(state_path):
-        folded = hll_merge(spark.read.parquet(state_path), delta)
-    else:
-        folded = delta
-    _swap_write(folded, state_path)
+    _swap_fold(batch_df, state_path, delta, lambda base: hll_merge(base, delta))
 
 
 def streaming_hll_maintenance(

@@ -177,13 +177,15 @@ def test_latest_per_key_one_row_per_key_with_tiebreak(spark):
     assert out.count() == 3  # strictly one row per key
 
 
-def test_latest_per_key_agg_matches_window_form(spark):
+def test_latest_per_key_matches_python_reference(spark):
     df = cdc.filter_change_types(_changes(spark))
-    a = cdc.latest_per_key(df, "customer_id", "_commit_timestamp", ["mobile"])
-    b = cdc.latest_per_key_agg(df, "customer_id", "_commit_timestamp", ["mobile"])
-    sa = sorted(map(tuple, a.select(*sorted(a.columns)).collect()))
-    sb = sorted(map(tuple, b.select(*sorted(b.columns)).collect()))
-    assert sa == sb
+    got = cdc.latest_per_key(df, "customer_id", "_commit_timestamp", ["mobile"])
+    best = {}
+    for r in df.collect():
+        order = (r["_commit_timestamp"], r["mobile"])
+        if r["customer_id"] not in best or order > best[r["customer_id"]][0]:
+            best[r["customer_id"]] = (order, tuple(r))
+    assert sorted(map(tuple, got.collect())) == sorted(v[1] for v in best.values())
 
 
 def test_cdc_compact_end_to_end(spark):

@@ -1,5 +1,5 @@
 """Control-plane parity: connections/secrets, object-store hook surface,
-CSV sink, salted compaction, conf-driven job (SURVEY.md EP1/EP2, §2.A7/B5/B7)."""
+CSV sink, hot-key compaction, conf-driven job (SURVEY.md EP1/EP2, §2.A7/B5/B7)."""
 
 from __future__ import annotations
 
@@ -79,10 +79,20 @@ def test_objectstore_surface(tmp_path):
 # --- salted compaction -------------------------------------------------------
 
 
-def test_salted_latest_under_planted_skew(spark):
-    """One key owning 99% of rows: the salted form must still agree with
-    the window form row-for-row (the scale difference is shuffle shape,
-    never semantics)."""
+def _latest_reference(rows, key, order):
+    """Newest row per key computed in plain Python: the row with the
+    largest ``order`` tuple among each key's rows."""
+    best = {}
+    for r in rows:
+        k = r[key]
+        if k not in best or tuple(r[c] for c in order) > tuple(best[k][c] for c in order):
+            best[k] = r
+    return sorted(tuple(r[c] for c in sorted(r.asDict())) for r in best.values())
+
+
+def test_latest_per_key_under_planted_hot_key(spark):
+    """One key owning 99% of rows compacts to exactly one row, the one a
+    closed-form reference names (the hot key's newest row is seq 99,999)."""
     from pyspark.sql import functions as F
 
     hot = spark.range(100_000).select(
@@ -98,21 +108,22 @@ def test_salted_latest_under_planted_skew(spark):
     df = hot.unionByName(cold).withColumn(
         "ts", F.timestamp_micros(F.col("seq") * 1_000_000)
     )
-    a = cdc.latest_per_key(df, "k", "ts", ["seq"])
-    b = cdc.latest_per_key_salted(df, "k", "ts", ["seq"], salt_buckets=32)
-    sa = sorted(map(tuple, a.select(*sorted(a.columns)).collect()))
-    sb = sorted(map(tuple, b.select(*sorted(b.columns)).collect()))
-    assert sa == sb
-    assert len(sa) == 1001  # hot key compacted to exactly one row
+    out = cdc.latest_per_key(df, "k", "ts", ["seq"])
+    got = sorted(
+        map(tuple, out.select("k", "seq", "v", F.unix_timestamp("ts")).collect())
+    )
+    want = [(100 + i, i, 0, i) for i in range(1_000)]
+    want = sorted(want + [(7, 99_999, 99_999 % 977, 99_999)])
+    assert len(got) == 1001  # hot key compacted to exactly one row
+    assert got == want
 
 
-def test_salted_latest_matches_window_form(spark):
+def test_latest_per_key_matches_reference_on_events(spark):
     ev = load_table(spark, SF, "events")
-    a = cdc.latest_per_key(ev, "user_id", "ts", ["event_id"])
-    b = cdc.latest_per_key_salted(ev, "user_id", "ts", ["event_id"], salt_buckets=8)
-    sa = sorted(map(tuple, a.select(*sorted(a.columns)).collect()))
-    sb = sorted(map(tuple, b.select(*sorted(b.columns)).collect()))
-    assert sa == sb
+    got = cdc.latest_per_key(ev, "user_id", "ts", ["event_id"])
+    assert sorted(
+        map(tuple, got.select(*sorted(got.columns)).collect())
+    ) == _latest_reference(ev.collect(), "user_id", ("ts", "event_id"))
 
 
 # --- CSV byte-capped sink ----------------------------------------------------

@@ -238,11 +238,13 @@ def test_dup_clusters_transitive_merge(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_dup_clusters_raises_when_unconverged(spark):
+def test_dup_clusters_raises_when_unconverged(spark, monkeypatch):
     """Silent wrong labels are worse than an error: a diameter-5 chain
-    cannot converge in one round, and the loop must say so."""
+    cannot converge in one propagation round nor in one star round, and
+    the loop must say so."""
     import pytest as _pytest
 
+    monkeypatch.setattr(DD, "_STAR_MAX_ROUNDS", 1)
     chain = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], "id_a long, id_b long"
     )

@@ -107,13 +107,23 @@ def test_metadata_stats_never_reads_payload(spark):
     assert "lang" not in read_schema and "source" not in read_schema
 
 
-def test_t8_and_t9b_are_shuffle_free(spark):
-    """PII redaction and the HOF repetition scorer are per-row codegen —
-    zero exchanges, zero Python on the data path."""
-    for name in ("t8_pii_redact", "t9b_repetition_hof"):
-        plan = plan_of(QUERIES[name](spark, SF))
-        assert "Exchange" not in plan, name
-        assert "Python" not in plan, name
+def test_t8_is_shuffle_free(spark):
+    """PII redaction is per-row codegen — zero exchanges, zero Python on
+    the data path."""
+    plan = plan_of(QUERIES["t8_pii_redact"](spark, SF))
+    assert "Exchange" not in plan
+    assert "Python" not in plan
+
+
+def test_t9_two_map_side_combined_aggregations(spark):
+    """t9's repetition scorer: exactly two hash exchanges, one per keyed
+    aggregation, each fed by a partial (map-side) aggregate; no join and
+    no Python on the data path."""
+    plan = plan_of(QUERIES["t9_repetition"](spark, SF), "simple")
+    assert plan.count("Exchange hashpartitioning") == 2
+    assert plan.count("Exchange") == 2
+    assert "partial_count(1)" in plan and "partial_max(cnt" in plan
+    assert "Join" not in plan and "Python" not in plan
 
 
 def test_q4_uses_left_semi(spark):

@@ -337,6 +337,7 @@ def test_scd2_snapshot_and_pit_join_exactly_one_version(spark):
     pit = QUERIES["mart6_pit_join"](spark, "/root/testdata/sf0.001")
     per_purchase = pit.groupBy("purchase_id").count()
     assert per_purchase.where(F.col("count") != 1).count() == 0
+    assert pit.where(F.col("version_id").isNull()).count() == 0
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
     n_purchases = ev.where(F.col("event_type") == "purchase").count()
     assert pit.count() == n_purchases

@@ -200,17 +200,40 @@ def test_pq_topk_recall_vs_exact(spark):
     assert recall >= 0.5, f"PQ recall {recall} too low"
 
 
-def test_substring_skew_twin_equals_window_form(spark):
-    docs = load_table(spark, SF0001, "documents")
-    a = {
-        r["doc_id"]: (r["n_windows"], r["n_dup_windows"], r["dup_ratio"])
-        for r in TX.substring_dup_stats(docs, w=8).collect()
+def test_substring_dup_stats_matches_reference_under_hot_window(spark):
+    """A boilerplate header opens 300 of 400 short docs, so its window is
+    the hottest hash (15% of all (doc, window) rows); per-doc stats
+    must equal a plain-Python window count on the same texts."""
+    import random
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(40)]
+    header = "alpha beta gamma delta epsilon zeta eta theta"
+    rows = []
+    for i in range(400):
+        tail = " ".join(rng.choice(vocab) for _ in range(4))
+        rows.append((i, f"{header} {tail}" if i < 300 else " ".join(
+            rng.choice(vocab) for _ in range(12))))
+    windows = {
+        i: [tuple(t.split()[j:j + 8]) for j in range(len(t.split()) - 7)]
+        for i, t in rows
     }
-    b = {
-        r["doc_id"]: (r["n_windows"], r["n_dup_windows"], r["dup_ratio"])
-        for r in TX.substring_dup_stats_skew(docs, w=8).collect()
+    docs_of = {}
+    for i, ws in windows.items():
+        for w in ws:
+            docs_of.setdefault(w, set()).add(i)
+    want = {}
+    for i, ws in windows.items():
+        n_dup = sum(1 for w in ws if len(docs_of[w]) >= 2)
+        want[i] = (len(ws), n_dup)
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["doc_id"]: r
+        for r in TX.substring_dup_stats(df, w=8).collect()
     }
-    assert a == b
+    assert {i: (r["n_windows"], r["n_dup_windows"]) for i, r in got.items()} == want
+    for i, (n, d) in want.items():
+        assert abs(got[i]["dup_ratio"] - d / n) <= 5e-5
 
 
 def test_training_shard_writer_deterministic_and_complete(spark, tmp_path):
@@ -289,7 +312,25 @@ def _cc_bruteforce(edges):
     return {x: find(x) for x in parent}
 
 
-def test_star_cc_matches_union_find_on_random_graph(spark):
+def _spy_star_phase(monkeypatch):
+    """Count how often ``dup_clusters`` hands its edges to the star phase."""
+    from martech_pipelines_spark.operators import dedup as DD
+
+    calls = []
+    star = DD._star_clusters
+
+    def spy(*args):
+        calls.append(args)
+        return star(*args)
+
+    monkeypatch.setattr(DD, "_star_clusters", spy)
+    return calls
+
+
+def test_star_cc_matches_union_find_on_random_graph(spark, monkeypatch):
+    """Both phases of ``dup_clusters`` against a driver-side union-find:
+    propagation at the default budget, and the star phase after a
+    one-round budget."""
     import random
 
     from martech_pipelines_spark.operators import dedup as DD
@@ -299,33 +340,38 @@ def test_star_cc_matches_union_find_on_random_graph(spark):
     edges = [(a, b) for a, b in edges if a != b]
     want = _cc_bruteforce(edges)
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["id"]: r["cluster"] for r in DD.dup_clusters_star(pairs).collect()}
-    assert got == want
+    calls = _spy_star_phase(monkeypatch)
+    got = {r["id"]: r["cluster"] for r in DD.dup_clusters(pairs).collect()}
+    assert got == want and not calls
+    got = {r["id"]: r["cluster"] for r in DD.dup_clusters(pairs, max_iter=1).collect()}
+    assert got == want and len(calls) == 1
 
 
-def test_star_cc_converges_on_chain_beyond_propagation_budget(spark):
+def test_star_cc_converges_on_chain_beyond_propagation_budget(spark, monkeypatch):
     """A 150-link path has diameter 150: min-label propagation's default
-    20-round budget cannot finish it, the star algorithm must in O(log n)."""
-    import pytest as _pytest
-
+    20-round budget cannot finish it, so ``dup_clusters`` switches to the
+    star phase, which must finish in O(log n) rounds."""
     from martech_pipelines_spark.operators import dedup as DD
 
     chain = [(i, i + 1) for i in range(150)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    got = {r["id"]: r["cluster"] for r in DD.dup_clusters_star(pairs).collect()}
+    calls = _spy_star_phase(monkeypatch)
+    got = {r["id"]: r["cluster"] for r in DD.dup_clusters(pairs).collect()}
     assert set(got.values()) == {0} and len(got) == 151
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        DD.dup_clusters(pairs).collect()
+    assert len(calls) == 1
 
 
-def test_star_cc_equals_propagation_on_shallow_graph(spark):
+def test_star_cc_equals_propagation_on_shallow_graph(spark, monkeypatch):
     from martech_pipelines_spark.operators import dedup as DD
 
     edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    calls = _spy_star_phase(monkeypatch)
     a = {r["id"]: r["cluster"] for r in DD.dup_clusters(pairs).collect()}
-    b = {r["id"]: r["cluster"] for r in DD.dup_clusters_star(pairs).collect()}
-    assert a == b
+    assert not calls
+    b = {r["id"]: r["cluster"] for r in DD.dup_clusters(pairs, max_iter=1).collect()}
+    assert len(calls) == 1
+    assert a == b == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
 def test_ivfpq_recall_and_pruned_probe(spark, tmp_path):

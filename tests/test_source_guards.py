@@ -74,3 +74,45 @@ def test_library_never_imports_the_query_corpus():
                 if hits:
                     bad[os.path.relpath(path, REPO)] = hits
     assert not bad, bad
+
+
+# Every list of query names the tools and the bench keep: (file, variable).
+# A dict contributes its keys; a tuple element or key contributes its
+# first item (the query name).
+_NAME_LISTS = (
+    ("bench.py", "HEADLINE"),
+    ("tools/bench_sf1.py", "HEAVY"),
+    ("tools/bench_sf1.py", "RECALL_QUERIES"),
+    ("tools/dump_plans.py", "SHOWCASE"),
+    ("tools/audit_rounding.py", "EXACT_INPUT"),
+    ("martech_pipelines_spark/plans/__init__.py", "_WINDOW_PRIORITY"),
+)
+
+
+def _listed_names(path, var):
+    with open(os.path.join(REPO, path), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    for node in tree.body:
+        target = node.targets[0] if isinstance(node, ast.Assign) else getattr(
+            node, "target", None
+        )
+        if isinstance(target, ast.Name) and target.id == var:
+            if isinstance(node.value, ast.Dict):
+                items = [ast.literal_eval(k) for k in node.value.keys]
+            else:
+                items = ast.literal_eval(node.value)
+            return [i[0] if isinstance(i, tuple) else i for i in items]
+    raise AssertionError(f"{path} has no module-level {var}")
+
+
+def test_every_listed_query_name_is_registered():
+    # A name left behind in a tool list after its query is deleted makes
+    # that tool fail (or silently skip) only when someone runs it.
+    from martech_pipelines_spark.plans import QUERIES
+
+    dangling = {
+        f"{path}:{var}": missing
+        for path, var in _NAME_LISTS
+        if (missing := sorted(set(_listed_names(path, var)) - set(QUERIES)))
+    }
+    assert not dangling, dangling

@@ -63,15 +63,12 @@ EXACT_INPUT: dict[tuple[str, str], str] = {
     ("q10_returned_items", "revenue"): _DECIMAL_SUM,
     ("q9_product_profit", "sum_profit"): _DECIMAL_SUM,
     ("dd8_substring_window", "dup_ratio"): _INT_RATIO,
-    ("dd8b_substring_window_skew", "dup_ratio"): _INT_RATIO,
     ("dd10_incremental_dedup", "jaccard"): _INT_RATIO,
     ("t37_sentiment", "sent_score"): _INT_RATIO,
     ("t4_quality", "stopword_ratio"): _INT_RATIO,
     ("t4_quality", "mean_token_len"): _INT_RATIO,
     ("t9_repetition", "rep_ratio"): _INT_RATIO,
-    ("t9b_repetition_hof", "rep_ratio"): _INT_RATIO,
     ("dd3_minhash_near_dup", "jaccard"): _INT_RATIO,
-    ("dd3b_minhash_rejoin", "jaccard"): _INT_RATIO,
     ("dd3c_minhash_materialized", "jaccard"): _INT_RATIO,
     ("dd5_ngram_jaccard", "jaccard"): _INT_RATIO,
     ("mm2_media_features", "byte_mean"): _INT_RATIO,

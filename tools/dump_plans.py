@@ -30,21 +30,6 @@ SHOWCASE = [
         "only probed cells' partitions are read",
     ),
     (
-        "flagship_cdc_dedup_skew",
-        "salted two-phase compaction: both phases partial-agg (map-side "
-        "combine); hot key split across salt buckets",
-    ),
-    (
-        "t9b_repetition_hof",
-        "zero exchanges: top-bigram multiplicity as a per-row codegen fold "
-        "over the sorted bigram array",
-    ),
-    (
-        "dd3b_minhash_rejoin",
-        "skinny signature shuffle (P longs/doc, map-side combine) + "
-        "semi-join-pruned candidate re-derivation",
-    ),
-    (
         "s1b_bruteforce_arrow",
         "exact top-k with map-side candidate pruning: the window ranks "
         "batches*|Q|*k rows, not |Q|*N scored pairs",
@@ -143,10 +128,9 @@ SHOWCASE = [
         "broadcast dims, exact integer/DECIMAL comparison",
     ),
     (
-        "mart6b_pit_window",
+        "mart6_pit_join",
         "join-free point-in-time join: union versions+facts, ONE window "
-        "carry-forward per user — 0 join nodes, 1 exchange (the "
-        "skew-proof temporal-join form; shares mart6's oracle)",
+        "carry-forward per user — 0 join nodes, 1 exchange",
     ),
     (
         "h8_snapshot_diff",
